@@ -133,8 +133,6 @@ def evaluate_formulas(
     # (not a SQL string literal — backslashes in the DSL stay intact);
     # explode preserves array order, so rows come out in formula order
     # exactly like the union did.
-    if not formulas:
-        return None
     pairs = F.array(*[
         F.struct(
             F.lit(formula).alias("formula"), F.col(f"f{i}").alias("result")

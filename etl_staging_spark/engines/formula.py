@@ -10,7 +10,7 @@ here; report assembly decides when to materialize.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..domain import compile_domain
@@ -165,9 +165,3 @@ def external_values_from_events(events: DataFrame) -> DataFrame:
         F.to_date("ts").alias("date"),
         F.col("value").cast("decimal(18,2)").alias("value_dec"),
     )
-
-
-def count_col(next_groupby: str | None) -> Column:
-    """count_rows counts distinct keys of the FIRST next_groupby level,
-    or line ids when there is none (`account_report.py:2650-2652`)."""
-    return F.countDistinct(next_groupby.split(",")[0] if next_groupby else "id")

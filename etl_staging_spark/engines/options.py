@@ -174,14 +174,6 @@ def build_column_groups(options: dict) -> dict[str, dict]:
     return groups
 
 
-def forced_domain_filter(options: dict) -> Column:
-    """The Column predicate of a group's forced domain (TRUE when the
-    group carries none)."""
-    from ..domain import compile_domain
-
-    return compile_domain(options.get("forced_domain"))
-
-
 # ---------------------------------------------------------------------------
 # Multi-company scope + variant selection (`account_report.py:1408-1456`
 # _init_options: allowed_company_ids -> company scope; the root report's

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..tables import pin
+
 RETURN_FLAGS = ("A", "N", "R")
 
 
@@ -321,7 +323,7 @@ def stock_ageing(lineitem: DataFrame, as_of: str) -> DataFrame:
         null_d.alias("unit_cost"),
         *[null_d.alias(n) for n in out_names],
     )
-    return detail.unionByName(totals)
+    return pin(detail.unionByName(totals), ser_pre, enriched)
 
 
 def hsn_summary(

@@ -9,7 +9,6 @@ the pipeline shape is identical either way.
 from __future__ import annotations
 
 import json
-import os
 import threading
 
 from pyspark.sql import DataFrame
@@ -67,20 +66,6 @@ def dashboard_json(df: DataFrame, key_col: str, path: str | None = None) -> dict
         with open(path, "w") as fh:
             json.dump(out, fh, indent=2, default=str, sort_keys=True)
     return out
-
-
-def read_back_csv(spark, path: str, schema) -> DataFrame:
-    from .csv_io import read_csv
-
-    return read_csv(spark, path, schema)
-
-
-def single_file(path: str) -> str:
-    """Path of the single part file inside a Spark CSV output dir."""
-    parts = [p for p in os.listdir(path) if p.startswith("part-")]
-    if len(parts) != 1:
-        raise ValueError(f"expected one part file in {path}, found {parts}")
-    return os.path.join(path, parts[0])
 
 
 # one lock per JVM session: the overwrite-mode conf is session-global

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..tables import pin, pins_of
 from .shingles import shingle_index
 
 
@@ -115,7 +116,7 @@ def fuzzy_contamination(
             (F.coalesce("n_matches", F.lit(0)) >= 1).alias("contaminated"),
         )
     )
-    return dedup._pin(out, sh_c, sh_b)
+    return pin(out, sh_c, sh_b)
 
 
 # Intra-corpus boilerplate: a shingle that recurs across a large
@@ -219,9 +220,9 @@ def semantic_contamination(
     norm are computed in ONE fused persisted projection (r17) feeding
     all three consumers — LSH keying, the verify-side normed vectors,
     and the output id left join — so each side is read once, not once
-    per branch; both pins ride the output's ``_pinned_persisted``
-    contract. Precondition: corpus and eval id spaces must be disjoint
-    (the `fuzzy_contamination` contract)."""
+    per branch; both are pinned to the output. Precondition: corpus
+    and eval id spaces must be disjoint (the `fuzzy_contamination`
+    contract)."""
     from . import simsearch as ss
 
     # ONE fused projection per side (r17, guide §2.4): the LSH keys and
@@ -276,8 +277,7 @@ def semantic_contamination(
             (F.coalesce("n_matches", F.lit(0)) >= 1).alias("contaminated"),
         )
     )
-    out._pinned_persisted = (base, ebase)
-    return out
+    return pin(out, base, ebase)
 
 
 def decontamination_report(
@@ -304,8 +304,8 @@ def decontamination_report(
     Scale shape: pure composition of the three certified operators
     (each already eval-broadcast, candidate-verified, never all-pairs)
     plus two or three doc_id-keyed left joins of one-row-per-doc
-    frames — no new shuffle structure. The fuzzy rung's pinned shingle
-    caches ride the output's ``_pinned_persisted`` contract."""
+    frames — no new shuffle structure. The rungs' pins pass on to the
+    output."""
     ex = ngram_overlap(corpus, benchmark, n=n_exact, min_hits=1).select(
         "doc_id", "n_overlap",
         F.col("contaminated").alias("__c_exact"),
@@ -350,7 +350,7 @@ def decontamination_report(
             "left",
         )
         flags.append(F.coalesce("__c_sem", F.lit(False)))
-        sem_pins = tuple(getattr(sem, "_pinned_persisted", ()))
+        sem_pins = pins_of(sem)
     else:
         out = out.withColumn(
             "n_semantic", F.lit(None).cast("bigint")
@@ -363,10 +363,7 @@ def decontamination_report(
         "n_semantic", "max_cosine",
         any_flag.alias("contaminated"),
     )
-    result._pinned_persisted = (
-        tuple(getattr(fz, "_pinned_persisted", ())) + sem_pins
-    )
-    return result
+    return pin(result, *pins_of(fz), *sem_pins)
 
 
 def decontam_rate_by_source(
@@ -390,10 +387,9 @@ def decontam_rate_by_source(
     Scale shape: pure composition of the two certified per-doc
     operators (each eval-broadcast, candidate-verified, never
     all-pairs) + two doc_id-keyed joins of one-row-per-doc frames +
-    ONE bounded (source) aggregate. The fuzzy rung's pinned shingle
-    caches ride the output's ``_pinned_persisted`` contract."""
+    ONE bounded (source) aggregate. The fuzzy rung's pins pass on to
+    the output."""
     from ..numeric import pround
-    from . import dedup
 
     ex = ngram_overlap(corpus, benchmark, n=n_exact, min_hits=min_hits).select(
         "doc_id", F.col("contaminated").alias("__ex")
@@ -426,7 +422,7 @@ def decontam_rate_by_source(
             ).alias("contamination_rate"),
         )
     )
-    return dedup._pin(out, *getattr(fz, "_pinned_persisted", ()))
+    return pin(out, *pins_of(fz))
 
 
 def decontam_matrix(

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..numeric import pround
+from ..tables import pin
 
 from .hashing import BAND_ROWS, MINHASH_SEEDS, N_BANDS, minhash_col, portable_hash56
 from .shingles import shingle_index
@@ -101,19 +102,6 @@ def hashed_shingles(df: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def shingle_set_sizes(df: DataFrame, n: int = 3) -> DataFrame:
-    """|distinct shingles| per doc WITHOUT exploding: the size of the
-    distinct n-gram array, computed in the same projection that builds
-    it. NOTE: pre-hash sizes — do not feed these into Jaccard
-    denominators (``_pair_jaccard`` computes post-hash sizes so every
-    path shares one denominator definition with the oracle)."""
-    from .shingles import ngram_array, with_tokens
-
-    return with_tokens(df).select(
-        "doc_id", F.size(ngram_array(n)).alias("n")
-    )
-
-
 # Stop-shingle document-frequency cutoff: shingles seen in more docs
 # than this are dropped from the jaccard index globally. Bounds the
 # per-bucket pair fan-out at max_df^2 regardless of corpus size (a
@@ -121,16 +109,6 @@ def shingle_set_sizes(df: DataFrame, n: int = 3) -> DataFrame:
 # 100 TB). Mirrored verbatim in the DuckDB oracle so the hash check
 # covers the cutoff itself.
 MAX_SHINGLE_DF = 64
-
-
-def _pin(out: DataFrame, *persisted: DataFrame) -> DataFrame:
-    """Keep strong Python references to persisted upstream frames on the
-    returned DataFrame: the ContextCleaner unpersists a cached RDD once
-    its Python wrapper is garbage-collected, and losing the cache while
-    the consumer still holds (and re-executes) the downstream plan
-    silently recomputes the shared lineage per branch."""
-    out._pinned_persisted = tuple(getattr(out, "_pinned_persisted", ())) + persisted
-    return out
 
 
 def _finish_jaccard(inter: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
@@ -169,7 +147,7 @@ def _pair_jaccard(sh: DataFrame, pairs: DataFrame, threshold: float) -> DataFram
         F.sort_array(F.collect_list("h")).alias("hs")
     ).persist()
     out = _pair_jaccard_arrays(arr, arr, pairs, threshold)
-    return _pin(out, arr)
+    return pin(out, arr)
 
 
 def _pair_jaccard_arrays(
@@ -230,13 +208,7 @@ def jaccard_pairs(
         .agg(F.count("*").alias("n_common"))
     )
     sizes = sizes.persist()
-    return _pin(_finish_jaccard(inter, sizes, threshold), buckets, sizes)
-
-
-def minhash_signatures(df: DataFrame, n: int = 3) -> DataFrame:
-    """One row per doc with mh0..mh15 — 16 MinHash permutations computed
-    as 16 MIN aggregates over the hashed shingle index (single shuffle)."""
-    return _signatures_from(hashed_shingles(df, n=n))
+    return pin(_finish_jaccard(inter, sizes, threshold), buckets, sizes)
 
 
 def _signatures_from(sh: DataFrame) -> DataFrame:
@@ -315,7 +287,7 @@ def incremental_lsh_matches(
         .distinct()
     )
     out = _pair_jaccard(sh_b.unionByName(sh_c), cands, threshold)
-    return _pin(out, sh_c, sh_b)
+    return pin(out, sh_c, sh_b)
 
 
 def write_signature_index(
@@ -382,7 +354,7 @@ def indexed_candidates(spark, batch: DataFrame, table: str, n: int = 3) -> DataF
     index: the corpus side is bucketed by the join key, so only the
     (small) batch side shuffles — plan-audited in tests."""
     sh_b = hashed_shingles(batch, n=n).persist()
-    return _pin(_indexed_candidates_from(spark, sh_b, table), sh_b)
+    return pin(_indexed_candidates_from(spark, sh_b, table), sh_b)
 
 
 def incremental_lsh_matches_indexed(
@@ -401,7 +373,7 @@ def incremental_lsh_matches_indexed(
     )
     arr_c = spark.table(f"{table}_arrays")
     out = _pair_jaccard_arrays(arr_b, arr_c, cands, threshold)
-    return _pin(out, sh_b)
+    return pin(out, sh_b)
 
 
 def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.8, n: int = 3) -> DataFrame:
@@ -412,7 +384,7 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.8, n: int = 3) -> Data
     shingle)."""
     sh = hashed_shingles(df, n=n).persist()
     cands = lsh_candidate_pairs(_signatures_from(sh))
-    return _pin(_pair_jaccard(sh, cands, threshold), sh)
+    return pin(_pair_jaccard(sh, cands, threshold), sh)
 
 
 def simhash_table(df: DataFrame, n: int = 3, bits: int = 56) -> DataFrame:
@@ -485,4 +457,4 @@ def simhash_pairs(
         .where(hamming <= max_hamming)
         .select("d1", "d2", hamming.cast("int").alias("hamming"))
     )
-    return _pin(out, tbl)
+    return pin(out, tbl)

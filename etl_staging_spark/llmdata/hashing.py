@@ -68,10 +68,6 @@ def minhash_col(h_col: Column, a: int, b: int) -> Column:
     return (F.lit(a) * (h_col % MERSENNE31) + F.lit(b)) % MERSENNE31
 
 
-def o_minhash(h_expr: str, a: int, b: int) -> str:
-    return f"(({a} * ({h_expr} % {MERSENNE31}) + {b}) % {MERSENNE31})"
-
-
 def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes for sign-LSH, derived from
     md5 so any engine can regenerate them. Components in [-1, 1] with

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..tables import pin
 from .hashing import o_hash56, portable_hash56
 from .shingles import TOKS, with_tokens
 
@@ -94,10 +95,7 @@ def segment_dedup(
         .where(F.col("df") > max_df)
         .select("h", F.lit(True).alias("__hot"))
     )
-    out = _reassemble(segs.join(hot, "h", "left"))
-    from .dedup import _pin
-
-    return _pin(out, segs)
+    return pin(_reassemble(segs.join(hot, "h", "left")), segs)
 
 
 def write_hot_segment_index(

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..numeric import o_pround, pround
+from ..tables import pin
 from .shingles import TOKS, with_tokens
 
 MIN_BIGRAM_COUNT = 2  # frequency-floor pruning of the bigram table
@@ -106,9 +107,7 @@ def lm_bigram_score(df: DataFrame, min_count: int = MIN_BIGRAM_COUNT) -> DataFra
         F.count("*").alias("n_bigrams"),
         pround(F.sum("p").cast("double") / F.count("*"), 6).alias("avg_prob"),
     )
-    from .dedup import _pin
-
-    return _pin(out, base)
+    return pin(out, base)
 
 
 def o_lm_bigram_score(min_count: int = MIN_BIGRAM_COUNT) -> str:

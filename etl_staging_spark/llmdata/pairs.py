@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..tables import pin, pins_of
 from .hashing import o_hash56, portable_hash56
 
 NEG_BUCKETS = 64  # fixture-scale width; library callers get a derived width
@@ -127,11 +128,7 @@ def contrastive_pairs(
             F.lit(None).cast("double").alias("jaccard"),
         )
     )
-    out = pos.unionByName(neg)
-    # re-pin the LSH pipeline's persisted shingle index (select() strips
-    # the attribute) — `pos` appears in BOTH union branches, so losing
-    # the cache would re-run the dominant tokenize/shingle/md5 pass
-    return dedup._pin(out, *getattr(mined, "_pinned_persisted", ()))
+    return pin(pos.unionByName(neg), *pins_of(mined))
 
 
 def o_negative_pairs(

@@ -52,6 +52,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..tables import PinScope, pin, pins_of, release_pinned
 from . import cluster, decontam, dedup, linedup, lm, sampling, textclean, textstats, trainset
 
 
@@ -62,7 +63,7 @@ class CorpusPipeline:
 
     def __init__(self, docs: DataFrame):
         self._df = docs
-        self._pins: list = []
+        self._pins = PinScope()
         # shared-cell branch refcount: fork() increments, release()
         # decrements; pins actually unpersist only when the LAST live
         # branch releases (an early unpersist would silently force the
@@ -102,24 +103,14 @@ class CorpusPipeline:
         branch that pins again RE-ARMS itself (see :meth:`_pin`), so
         post-release pins are protected by the refcount like any
         others and free on that branch's own next release() — never
-        leaked for the session, never yanked by a sibling. One
-        implementation of the pin contract: delegates to
-        `tables.release_pinned`."""
-        from types import SimpleNamespace
-
-        from ..tables import release_pinned
-
+        leaked for the session, never yanked by a sibling."""
         if not self._released:
             self._released = True
             self._live_branches[0] -= 1
-        if self._live_branches[0] > 0:
-            return
-        # a throwaway carrier — NEVER the kept frame itself, whose own
-        # _pinned_persisted may belong to a caller-owned operator result
-        release_pinned(SimpleNamespace(_pinned_persisted=tuple(self._pins)))
-        self._pins.clear()
+        if self._live_branches[0] == 0:
+            release_pinned(self._pins)
 
-    def _pin(self, frames) -> None:
+    def _pin(self, *frames: DataFrame) -> None:
         """Register cached frames in the shared pool. A RELEASED branch
         that pins again re-arms itself as live (the refcount invariant:
         the count equals the branches with un-released work), so a
@@ -128,13 +119,12 @@ class CorpusPipeline:
         own next release(). A stage that pinned NOTHING must not
         re-arm: it would block the pool drain while protecting
         nothing."""
-        frames = tuple(frames)
         if not frames:
             return
         if self._released:
             self._released = False
             self._live_branches[0] += 1
-        self._pins.extend(frames)
+        pin(self._pins, *frames)
 
     def _keep(self, ids: DataFrame, label: str) -> "CorpusPipeline":
         self._df = self._df.join(ids.select("doc_id"), "doc_id", "left_semi")
@@ -224,7 +214,7 @@ class CorpusPipeline:
         so the discovery + clustering job runs when this stage is
         chained."""
         pairs = dedup.minhash_lsh_pairs(self._df, threshold=threshold, n=n)
-        self._pin(getattr(pairs, "_pinned_persisted", ()))
+        self._pin(*pins_of(pairs))
         losers = self._cluster_losers(pairs.select("d1", "d2"), keep)
         self._df = self._df.join(losers, "doc_id", "left_anti")
         self._stages.append(("dedup_near", self._df))
@@ -264,7 +254,7 @@ class CorpusPipeline:
         pairs = simsearch.mt_dup_pairs(
             scoped, threshold=threshold, dim=dim, id_col="doc_id",
         )
-        self._pin(getattr(pairs, "_pinned_persisted", ()))
+        self._pin(*pins_of(pairs))
         losers = self._cluster_losers(pairs.select("d1", "d2"), keep)
         self._df = self._df.join(losers, "doc_id", "left_anti")
         self._stages.append(("dedup_semantic", self._df))
@@ -342,7 +332,7 @@ class CorpusPipeline:
         flagged = decontam.fuzzy_contamination(
             self._df, bench, threshold=threshold, n=n
         )
-        self._pin(getattr(flagged, "_pinned_persisted", ()))
+        self._pin(*pins_of(flagged))
         clean = flagged.where(~F.col("contaminated"))
         return self._keep(clean, "decontaminate_fuzzy")
 
@@ -371,7 +361,7 @@ class CorpusPipeline:
             dim=dim,
             id_col="doc_id",
         )
-        self._pin(getattr(flagged, "_pinned_persisted", ()))
+        self._pin(*pins_of(flagged))
         bad = flagged.where(F.col("contaminated")).select("doc_id")
         self._df = self._df.join(bad, "doc_id", "left_anti")
         self._stages.append(("decontaminate_semantic", self._df))
@@ -430,7 +420,7 @@ class CorpusPipeline:
             .select("doc_id", "quality")
             .persist()
         )
-        self._pin([scored])
+        self._pin(scored)
         t = stats.threshold_from_scores(scored, keep_rate, decimals)
         return self._keep(
             scored.where(F.col("quality") >= t),
@@ -462,7 +452,7 @@ class CorpusPipeline:
             .select("doc_id", domain_col, "quality")
             .persist()
         )
-        self._pin([scored])
+        self._pin(scored)
         cuts = {
             r["domain"]: r["threshold"]
             for r in stats.calibration_by_domain_from_scores(
@@ -485,7 +475,7 @@ class CorpusPipeline:
         the n-gram fold interpreted, ~100x), so this stage pins cache
         like `domain_cap` does."""
         flags = textstats.repetition_stats(self._df).persist()
-        self._pin([flags])
+        self._pin(flags)
         return self._keep(flags.where(~F.col("repetitive")), "repetition_gate")
 
     def lm_quality_gate(self, model_table: str, min_avg_prob: float) -> "CorpusPipeline":
@@ -564,7 +554,7 @@ class CorpusPipeline:
         (`sampling.domain_quality_cap` — the `domain_quality_cap`
         entry)."""
         kept = sampling.domain_quality_cap(self._df, cap=cap)
-        self._pin(getattr(kept, "_pinned_persisted", ()))
+        self._pin(*pins_of(kept))
         return self._keep(kept, "domain_cap")
 
     def split(self, fractions: dict[str, float]) -> "CorpusPipeline":

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..tables import pin
 from .hashing import o_hash56, portable_hash56
 
 # hash buckets per unit interval: rates quantize to 1/10000
@@ -253,8 +254,7 @@ def domain_quality_cap(
         .where(F.col("rk") <= cap)
         .select("doc_id", "domain", "quality", F.col("rk").cast("int").alias("rk"))
     )
-    out._pinned_persisted = (q,)  # hold the hot-path cache for reuse
-    return out
+    return pin(out, q)
 
 
 def domain_token_budget(

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 from ..numeric import pround
+from ..tables import pin, pins_of
 
 from .hashing import hyperplanes
 
@@ -425,7 +426,7 @@ def lsh_multitable_candidates(
     on the key runs with the bounded query side broadcast — shuffles
     touch only skinny id/key rows, never vectors, and there is no
     all-pairs stage. Returns the pair frame with the keyed scan pinned
-    in ``_pinned_persisted`` (release after the downstream action).
+    to it (release after the downstream action).
 
     ``keyed``: a caller-supplied (id, __is_q, bkt) frame — usually an
     explode over a persisted fused projection that also carries norms
@@ -444,8 +445,7 @@ def lsh_multitable_candidates(
         .select("qid", "cid")
         .distinct()
     )
-    out._pinned_persisted = (keyed,) if own else ()
-    return out
+    return pin(out, keyed) if own else out
 
 
 def lsh_multitable_topk(
@@ -503,9 +503,7 @@ def lsh_multitable_topk(
             "cos_raw", _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
         )
     )
-    out = _two_phase_topk(scored, k)
-    out._pinned_persisted = (normed, *getattr(cand, "_pinned_persisted", ()))
-    return out
+    return pin(_two_phase_topk(scored, k), normed, *pins_of(cand))
 
 
 def _ivf_cells_udf(
@@ -626,8 +624,7 @@ def ivf_candidates(
         .where(F.col("cid") != F.col("qid"))
         .select("qid", "cid")
     )
-    out._pinned_persisted = (base,) if own else ()
-    return out
+    return pin(out, base) if own else out
 
 
 def _verify_pairs(
@@ -738,13 +735,11 @@ def cosine_dup_pairs(
         cands = cands.where(cand_filter)
     cands = cands.distinct()
     if candidates_only:
-        cands._pinned_persisted = (normed,)
-        return cands
+        return pin(cands, normed)
     out = _verify_pairs(cands, normed, threshold, id_col, vec_col).select(
         "d1", "d2", pround(F.col("cos_raw"), 6).alias("cosine")
     )
-    out._pinned_persisted = (normed,)  # hold the cache for branch reuse
-    return out
+    return pin(out, normed)
 
 
 def mt_dup_pairs(
@@ -798,13 +793,11 @@ def mt_dup_pairs(
         cand = cand.where(cand_filter)
     cand = cand.distinct()
     if candidates_only:
-        cand._pinned_persisted = (keyed,)
-        return cand
+        return pin(cand, keyed)
     out = _verify_pairs(cand, base, threshold, id_col, vec_col).select(
         "d1", "d2", pround(F.col("cos_raw"), 6).alias("cosine")
     )
-    out._pinned_persisted = (base,)
-    return out
+    return pin(out, base)
 
 
 def train_ivf_centroids(
@@ -1179,9 +1172,7 @@ def ivf_topk(
         .withColumn("cos_raw", _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
         .withColumnRenamed("cid_", "cid")
     )
-    out = _two_phase_topk(scored, k)
-    out._pinned_persisted = (normed,)
-    return out
+    return pin(_two_phase_topk(scored, k), normed)
 
 
 def semantic_dup_pairs(
@@ -1335,8 +1326,7 @@ def semantic_dup_pairs(
         # a pair sharing several probed cells would verify repeatedly
         cand = cand.distinct()
     if candidates_only:
-        cand._pinned_persisted = (normed,) if own_frame else ()
-        return cand
+        return pin(cand, normed) if own_frame else cand
     verified = _verify_pairs(
         cand, normed, threshold, id_col, vec_col, carry_left=("cell",)
     )
@@ -1354,9 +1344,7 @@ def semantic_dup_pairs(
         )
         verified = verified.join(c2, "d2")
         cols.append((F.col("cell") == F.col("__cell2")).alias("same_cell"))
-    out = verified.select(*cols)
-    out._pinned_persisted = (normed,)
-    return out
+    return pin(verified.select(*cols), normed)
 
 
 def exact_dup_pairs(
@@ -1392,8 +1380,7 @@ def exact_dup_pairs(
     out = _verify_pairs(cand, normed, threshold, id_col, vec_col).select(
         "d1", "d2", pround(F.col("cos_raw"), 6).alias("cosine")
     )
-    out._pinned_persisted = (normed,) if own else ()
-    return out
+    return pin(out, normed) if own else out
 
 
 def write_embedding_index(
@@ -1546,8 +1533,7 @@ def incremental_embedding_matches(
     ).select(
         "d1", "d2", pround(F.col("cos_raw"), 6).alias("cosine")
     )
-    out._pinned_persisted = (b_normed,)
-    return out
+    return pin(out, b_normed)
 
 
 def cluster_profile(

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from ..numeric import pround, py_pround
+from ..tables import pin, pins_of
 from .textstats import TOKEN_RE, lang_id
 
 
@@ -273,11 +274,7 @@ def source_overlap_matrix(
         pround(docs_a / F.col("tot_a"), 6).alias("frac_a"),
         pround(docs_b / F.col("tot_b"), 6).alias("frac_b"),
     )
-    result._pinned_persisted = (
-        norm,
-        *getattr(raw_pairs, "_pinned_persisted", ()),
-    )
-    return result
+    return pin(result, norm, *pins_of(raw_pairs))
 
 
 def quality_threshold_for_keep_rate(
@@ -673,8 +670,7 @@ def token_drift_card(
         .orderBy(F.abs(F.col("delta")).desc_nulls_last(), F.asc("token"))
         .limit(top_n)
     )
-    out._pinned_persisted = (counts,)
-    return out
+    return pin(out, counts)
 
 
 def embedding_stats_card(
@@ -1311,8 +1307,7 @@ def dup_similarity_histogram(
             "n_pairs",
         )
     )
-    out._pinned_persisted = getattr(pairs, "_pinned_persisted", ())
-    return out
+    return pin(out, *pins_of(pairs))
 
 
 def sentence_stats_card(

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..numeric import o_pround, pround
+from ..tables import pin
 from .shingles import TOKS, with_tokens
 
 TOP_K = 100
@@ -132,8 +133,7 @@ def vocab_coverage(df: DataFrame, k: int = TOP_K) -> DataFrame:
             pround(F.col("covered") / F.col("total"), 6).alias("coverage"),
         )
     )
-    out._pinned_persisted = (toks,)
-    return out
+    return pin(out, toks)
 
 
 def o_vocab_coverage(k: int = TOP_K, source_sql: str = "documents") -> str:
@@ -383,9 +383,9 @@ def vocab_coverage_from_counts(per_tok: DataFrame, k: int = TOP_K) -> DataFrame:
     maintains, so one maintained token table serves both cards (the
     streaming test pins it). The input is read twice (vocab induction
     + the join back): an unpersisted input is persisted here and
-    attached via the `_pinned_persisted` contract for the caller to
-    release — passing a delta-log fold straight in does NOT re-run the
-    fold twice per card."""
+    pinned to the output for the caller to release — passing a
+    delta-log fold straight in does NOT re-run the fold twice per
+    card."""
     sl = per_tok.storageLevel
     pinned = ()
     if not (sl.useMemory or sl.useDisk):
@@ -421,9 +421,7 @@ def vocab_coverage_from_counts(per_tok: DataFrame, k: int = TOP_K) -> DataFrame:
             ).alias("oov_rate"),
         )
     )
-    if pinned:
-        out._pinned_persisted = pinned
-    return out
+    return pin(out, *pinned)
 
 
 def o_vocab_coverage_by_source(

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..tables import pin, pins_of
+
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 O_TS = "strftime({col}, '%Y-%m-%d %H:%M:%S.%f')"
 
@@ -138,8 +140,7 @@ def funnel(events: DataFrame, steps: tuple[str, ...] = FUNNEL_STEPS) -> DataFram
         ],
         stage.alias("stage"),
     )
-    out._pinned_persisted = (ev,)  # keep the shared projection cached
-    return out
+    return pin(out, ev)
 
 
 def o_funnel(steps: tuple[str, ...] = FUNNEL_STEPS, source_sql: str = "events") -> str:
@@ -268,8 +269,7 @@ def resample_counts(
         F.coalesce("n_events", F.lit(0)).alias("n_events"),
         F.coalesce("total_value", F.lit(0.0)).alias("total_value"),
     )
-    out._pinned_persisted = (agg,)  # keep the shared agg cached
-    return out
+    return pin(out, agg)
 
 
 def o_resample_counts(
@@ -326,7 +326,6 @@ def anomaly_zscore(
     from ..numeric import pround
 
     dense = resample_counts(events, bucket_s=bucket_s)
-    pinned = getattr(dense, "_pinned_persisted", ())
     w = (
         Window.partitionBy("event_type")
         .orderBy("bucket")
@@ -351,8 +350,7 @@ def anomaly_zscore(
         z.alias("zscore"),
         F.coalesce(F.abs(z) > sigma, F.lit(False)).alias("anomaly"),
     )
-    out._pinned_persisted = pinned  # select() strips resample's pin
-    return out
+    return pin(out, *pins_of(dense))
 
 
 def o_anomaly_zscore(

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..engines.ledger import O_LEDGER, move_lines
-from ..tables import load
+from ..tables import load, pin
 from .registry import dsum, o_dsum, query
 
 
@@ -329,6 +329,4 @@ def tax_closing(spark, sf_dir):
         F.when(F.col("total") >= 0, F.col("total")).otherwise(zero).cast("double").alias("debit"),
         F.when(F.col("total") < 0, -F.col("total")).otherwise(zero).cast("double").alias("credit"),
     )
-    out = balance_lines.unionByName(settle)
-    out._pinned_persisted = (per_acct,)
-    return out
+    return pin(balance_lines.unionByName(settle), per_acct)

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from ..etl.csv_io import validate_against_master
 from ..etl.registers import sales_register
 from ..etl.upsert import dedup_purge, scd0_upsert
-from ..tables import load, register_views
+from ..tables import load, pin, register_views
 from .registry import dsum, o_dsum, query
 
 
@@ -726,7 +726,6 @@ def jsonl_corrupt_split(spark, sf_dir):
     )
 
     from ..etl.jsonl_io import read_jsonl, validate_documents
-    from ..llmdata.dedup import _pin
 
     docs = load(spark, sf_dir, "documents")
     payload = F.to_json(F.struct("doc_id", "text", "source"))
@@ -780,4 +779,4 @@ def jsonl_corrupt_split(spark, sf_dir):
     out = summarize(valid, F.lit("valid")).unionByName(
         summarize(rejected, F.col("reject_reason"))
     )
-    return _pin(out, raw)
+    return pin(out, raw)

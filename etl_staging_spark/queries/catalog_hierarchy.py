@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from ..engines.ledger import O_LEDGER, move_lines
 from ..engines.options import make_options, o_date_scope_sql
 from ..reports.hierarchy import hierarchy_rollup
-from ..tables import load
+from ..tables import load, pin
 from .registry import query
 
 
@@ -138,4 +138,4 @@ def hier_rollup(spark, sf_dir):
         .persist()
     )
     rolled = hierarchy_rollup(per_acct, levels=(1, 2))
-    return rolled.withColumn("total", F.col("total").cast("double"))
+    return pin(rolled.withColumn("total", F.col("total").cast("double")), per_acct)

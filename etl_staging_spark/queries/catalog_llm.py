@@ -21,7 +21,7 @@ from ..llmdata.hashing import (
 )
 from ..llmdata.shingles import O_TOKS, O_TRI
 from ..numeric import o_pround, pround
-from ..tables import load, respread_narrow
+from ..tables import load, pin, pins_of, respread_narrow
 from .registry import query
 
 # Shared oracle CTE: hashed distinct word-trigram shingles per doc.
@@ -347,10 +347,8 @@ def dedup_cluster_cc(spark, sf_dir):
     alternating large-star/small-star (O(log n) bounded-shuffle rounds,
     no neighborhood arrays — `llmdata/cluster.py`); the oracle folds
     the same components with a recursive label-propagation CTE."""
-    pairs = dedup.jaccard_pairs(
-        load(spark, sf_dir, "documents"), threshold=0.8
-    ).select("d1", "d2")
-    return cluster.near_dup_clusters(pairs)
+    pairs = dedup.jaccard_pairs(load(spark, sf_dir, "documents"), threshold=0.8)
+    return pin(cluster.near_dup_clusters(pairs.select("d1", "d2")), *pins_of(pairs))
 
 
 # 5-gram variant of the shingle CTEs for decontamination (short fixture
@@ -727,9 +725,8 @@ def sim_ann_lsh(spark, sf_dir):
     on skinny (id, bucket) rows; exact-decimal cosine only on the
     union of candidates."""
     emb = load(spark, sf_dir, "embeddings")
-    return simsearch.lsh_multitable_topk(
-        emb, F.col("vec_id") < 10, dim=64, k=5
-    ).withColumn("rank", F.col("rank").cast("int"))
+    top = simsearch.lsh_multitable_topk(emb, F.col("vec_id") < 10, dim=64, k=5)
+    return pin(top.withColumn("rank", F.col("rank").cast("int")), *pins_of(top))
 
 
 @query(
@@ -784,9 +781,8 @@ def sim_ann_ivf(spark, sf_dir):
     its 2 closest lists (~1/4 of the data). Assignment is one scan with
     broadcast centroid literals — no join, no all-pairs."""
     emb = load(spark, sf_dir, "embeddings")
-    return simsearch.ivf_topk(emb, F.col("vec_id") < 10, dim=64, k=5).withColumn(
-        "rank", F.col("rank").cast("int")
-    )
+    top = simsearch.ivf_topk(emb, F.col("vec_id") < 10, dim=64, k=5)
+    return pin(top.withColumn("rank", F.col("rank").cast("int")), *pins_of(top))
 
 
 @query(
@@ -963,14 +959,7 @@ def sim_ann_recall(spark, sf_dir):
         F.coalesce("n_hit", F.lit(0)).cast("bigint").alias("n_hit"),
         pround(F.coalesce("n_hit", F.lit(0)) / F.lit(k), 6).alias("recall_at_k"),
     )
-    out._pinned_persisted = (
-        scored,
-        exact,
-        base,
-        *getattr(lsh_cand, "_pinned_persisted", ()),
-        *getattr(ivf_cand, "_pinned_persisted", ()),
-    )
-    return out
+    return pin(out, scored, exact, base, *pins_of(lsh_cand), *pins_of(ivf_cand))
 
 
 @query(
@@ -1306,7 +1295,7 @@ def dedup_minhash_estimate(spark, sf_dir):
             pround(F.abs(est - F.col("jaccard")), 6).alias("abs_err"),
         )
     )
-    return dedup._pin(out, sh, *getattr(verified, "_pinned_persisted", ()))
+    return pin(out, sh, *pins_of(verified))
 
 
 def _o_lang_scores() -> tuple[str, str, str]:
@@ -1783,11 +1772,12 @@ def corpus_assembly(spark, sf_dir):
         .join(qual, "doc_id", "left_semi")
         .join(rep, "doc_id", "left_semi")
     )
-    return (
+    out = (
         sampling.hash_split(kept, _SPLITS)
         .groupBy("split", "source")
         .agg(F.count("*").alias("n_docs"))
     )
+    return pin(out, corpus, rep_flags)
 
 
 # ---------------------------------------------------------------------------
@@ -2186,13 +2176,7 @@ def dedup_semantic_recall(spark, sf_dir):
             F.coalesce("n_hit", F.lit(0)) / F.col("n_exact"), 6
         ).alias("recall"),
     )
-    out._pinned_persisted = (
-        exact,
-        base,
-        *getattr(exact_raw, "_pinned_persisted", ()),
-        *getattr(pairs, "_pinned_persisted", ()),
-    )
-    return out
+    return pin(out, exact, base, *pins_of(exact_raw), *pins_of(pairs))
 
 
 _EPOCHS = {"src0": 3, "src7": 2}
@@ -2378,7 +2362,7 @@ def corpus_assembly_full(spark, sf_dir):
     # the split is a pure hash projection — stamp it straight onto the
     # sharded frame (a join back to `capped` would fork the lineage and
     # recompute the whole gate pipeline a second time)
-    return (
+    out = (
         sampling.hash_split(sharded, _SPLITS)
         .groupBy("split", "shard")
         .agg(
@@ -2386,6 +2370,7 @@ def corpus_assembly_full(spark, sf_dir):
             F.sum("position").cast("bigint").alias("pos_sum"),
         )
     )
+    return pin(out, corpus, rep_flags)
 
 
 @query(
@@ -2411,16 +2396,16 @@ def split_leakage_audit(spark, sf_dir):
     one-shuffle banded shape; the split stamp is a pure hash projection
     on the pair ids (no join back to the corpus at all)."""
     docs = load(spark, sf_dir, "documents")
-    pairs = dedup.jaccard_pairs(docs, threshold=0.8).select("d1", "d2")
+    pairs = dedup.jaccard_pairs(docs, threshold=0.8)
     s1 = sampling.hash_split(
-        pairs.withColumn("doc_id", F.col("d1")), _SPLITS
+        pairs.select("d1", "d2").withColumn("doc_id", F.col("d1")), _SPLITS
     ).withColumnRenamed("split", "split_1").drop("doc_id")
     out = sampling.hash_split(
         s1.withColumn("doc_id", F.col("d2")), _SPLITS
     ).withColumnRenamed("split", "split_2").drop("doc_id")
-    return out.select(
-        "d1", "d2", "split_1", "split_2",
-        (F.col("split_1") != F.col("split_2")).alias("leaky"),
+    leaky = (F.col("split_1") != F.col("split_2")).alias("leaky")
+    return pin(
+        out.select("d1", "d2", "split_1", "split_2", leaky), *pins_of(pairs)
     )
 
 
@@ -2436,8 +2421,11 @@ def split_by_cluster_q(spark, sf_dir):
     doc-keyed left join; the split stamp a pure hash projection
     (`llmdata/cluster.py:split_by_cluster`)."""
     docs = load(spark, sf_dir, "documents")
-    pairs = dedup.jaccard_pairs(docs, threshold=0.8).select("d1", "d2")
-    return cluster.split_by_cluster(docs.select("doc_id"), pairs, _SPLITS)
+    pairs = dedup.jaccard_pairs(docs, threshold=0.8)
+    out = cluster.split_by_cluster(
+        docs.select("doc_id"), pairs.select("d1", "d2"), _SPLITS
+    )
+    return pin(out, *pins_of(pairs))
 
 
 @query(
@@ -2477,12 +2465,12 @@ def dedup_canonicals_by_score(spark, sf_dir):
     window, no per-cluster sort), and a skinny join back
     (`llmdata/cluster.py:canonicals_by_score`)."""
     docs = load(spark, sf_dir, "documents")
-    pairs = dedup.jaccard_pairs(docs, threshold=0.8).select("d1", "d2")
-    clusters = cluster.near_dup_clusters(pairs)
+    pairs = dedup.jaccard_pairs(docs, threshold=0.8)
+    clusters = cluster.near_dup_clusters(pairs.select("d1", "d2"))
     scores = textstats.quality_scores(respread_narrow(docs)).select(
         "doc_id", "quality"
     )
-    return cluster.canonicals_by_score(clusters, scores)
+    return pin(cluster.canonicals_by_score(clusters, scores), *pins_of(pairs))
 
 
 @query(
@@ -2929,9 +2917,7 @@ def corpus_source_profile(spark, sf_dir):
         .where(F.col("rk") == 1)
         .select("source", F.col("pred_lang").alias("top_lang"))
     )
-    out = agg.join(top, "source")
-    out._pinned_persisted = (j,)
-    return out
+    return pin(agg.join(top, "source"), j)
 
 
 @query(
@@ -2953,11 +2939,9 @@ def dedup_cluster_sizes(spark, sf_dir):
     many are redundant (droppable beyond each cluster's canonical).
     One bounded aggregate over the CC assignment; the assignment itself
     is the audited large-star/small-star pipeline."""
-    pairs = dedup.jaccard_pairs(
-        load(spark, sf_dir, "documents"), threshold=0.8
-    ).select("d1", "d2")
-    cc = cluster.near_dup_clusters(pairs)
-    return (
+    pairs = dedup.jaccard_pairs(load(spark, sf_dir, "documents"), threshold=0.8)
+    cc = cluster.near_dup_clusters(pairs.select("d1", "d2"))
+    out = (
         cc.groupBy(F.col("cluster_size").cast("int").alias("cluster_size"))
         .agg(F.countDistinct("cluster_id").alias("n_clusters"))
         .select(
@@ -2971,6 +2955,7 @@ def dedup_cluster_sizes(spark, sf_dir):
             .alias("n_redundant"),
         )
     )
+    return pin(out, *pins_of(pairs))
 
 
 _V2_SEG_FRAC = 0.25
@@ -3153,8 +3138,7 @@ def corpus_assembly_v2(spark, sf_dir):
             F.expr("bit_xor(CASE WHEN __final THEN th END)"), F.lit(0)
         ).alias("content_xor"),
     )
-    out._pinned_persisted = (corpus, flags)
-    return out
+    return pin(out, corpus, flags, *pins_of(seg))
 
 
 def o_ngram_freq_spectrum(n: int = 2) -> str:

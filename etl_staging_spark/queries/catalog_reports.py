@@ -9,7 +9,7 @@ from ..engines.ledger import O_LEDGER, move_lines
 from ..engines.options import build_comparison, make_options
 from ..reports.aged_partner import aged_receivable
 from ..reports.general_ledger import gl_detail, gl_sums
-from ..tables import load
+from ..tables import load, pin
 from .registry import query
 
 # current year + 1 generated previous_period comparison (1996) — the
@@ -699,7 +699,8 @@ def br_report(spark, sf_dir):
         F.sum("oth_dec").alias("oth_dec"),
         F.sum("n").alias("n"),
     )
-    return details.select(*out_cols).unionByName(totals.select(*out_cols))
+    out = details.select(*out_cols).unionByName(totals.select(*out_cols))
+    return pin(out, details)
 
 
 # ---------------------------------------------------------------------------

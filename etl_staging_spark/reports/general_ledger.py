@@ -34,18 +34,6 @@ from ..engines.options import (
     o_date_scope_sql,
 )
 
-def _debit():
-    return F.when(F.col("conv") >= 0, F.col("conv")).otherwise(
-        F.lit(0).cast("decimal(18,2)")
-    )
-
-
-def _credit():
-    return F.when(F.col("conv") < 0, -F.col("conv")).otherwise(
-        F.lit(0).cast("decimal(18,2)")
-    )
-
-
 def _fy_start(date_from: str, fy_end: tuple[int, int] = (12, 31)) -> str:
     """Start of the fiscal year containing ``date_from``, per the
     company's year-end setting (`account_general_ledger.py:292-316`

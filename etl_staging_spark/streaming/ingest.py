@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..llmdata import dedup
-from ..tables import release_pinned
+from ..tables import PinScope
 
 DOC_SCHEMA = StructType(
     [
@@ -54,24 +54,6 @@ def _start(stream_writer, query_name: str, checkpoint_dir: str | None):
     return w.start()
 
 
-def _handoff(on_batch, batch_id: int, result: DataFrame, *also_release) -> None:
-    """Shared handler handoff honoring THE PIN CONTRACT per micro-batch:
-    call the handler, then release the result's pinned frames plus any
-    extra frames whose pins the result's plan consumed (operators like
-    `incremental_lsh_matches_indexed` / `incremental_embedding_matches`
-    / `mt_dup_pairs` persist internal frames and attach them via
-    ``_pinned_persisted``). A long-lived stream that skips this grows
-    one cache entry per micro-batch for the session's life — unbounded
-    executor storage and CacheManager bloat. Safe on frames without
-    pins (`tables.release_pinned`)."""
-    try:
-        on_batch(batch_id, result)
-    finally:
-        release_pinned(result)
-        for df in also_release:
-            release_pinned(df)
-
-
 def dedup_ingest_stream(
     docs_stream: DataFrame,
     index_table: str,
@@ -93,10 +75,11 @@ def dedup_ingest_stream(
     precondition as the batch operator)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        matches = dedup.incremental_lsh_matches_indexed(
-            batch_df.sparkSession, batch_df, index_table, threshold=threshold, n=n
-        )
-        _handoff(on_batch, batch_id, matches)
+        with PinScope() as scope:
+            matches = dedup.incremental_lsh_matches_indexed(
+                batch_df.sparkSession, batch_df, index_table, threshold=threshold, n=n
+            )
+            on_batch(batch_id, scope.adopt(matches))
 
     return _start(docs_stream.writeStream.foreachBatch(_process), query_name, checkpoint_dir)
 
@@ -139,33 +122,28 @@ def gated_ingest_stream(
     splits = splits or {"train": 0.9, "val": 0.05, "test": 0.05}
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        cleaned = None
-        if clean:
-            batch_df = cleaned = textclean.with_clean_text(batch_df).persist()
-        if langs:
-            ok = textstats.lang_id(batch_df).where(
-                F.col("pred_lang").isin(*langs)
-            ).select("doc_id")
-            batch_df = batch_df.join(ok, "doc_id", "left_semi")
-        qual = (
-            textstats.quality_scores(batch_df)
-            .where(F.col("quality") >= quality_min)
-            .select("doc_id")
-        )
-        # materialize before filtering the HOF-derived flags (caller
-        # note on repetition_stats)
-        rep_flags = textstats.repetition_stats(batch_df).persist()
-        try:
+        with PinScope() as scope:
+            if clean:
+                batch_df = scope.persist(textclean.with_clean_text(batch_df))
+            if langs:
+                ok = textstats.lang_id(batch_df).where(
+                    F.col("pred_lang").isin(*langs)
+                ).select("doc_id")
+                batch_df = batch_df.join(ok, "doc_id", "left_semi")
+            qual = (
+                textstats.quality_scores(batch_df)
+                .where(F.col("quality") >= quality_min)
+                .select("doc_id")
+            )
+            # materialize before filtering the HOF-derived flags (caller
+            # note on repetition_stats)
+            rep_flags = scope.persist(textstats.repetition_stats(batch_df))
             rep = rep_flags.where(~F.col("repetitive")).select("doc_id")
             kept = (
                 batch_df.join(qual, "doc_id", "left_semi")
                 .join(rep, "doc_id", "left_semi")
             )
             on_batch(batch_id, sampling.hash_split(kept, splits))
-        finally:
-            rep_flags.unpersist()
-            if cleaned is not None:
-                cleaned.unpersist()
 
     return _start(docs_stream.writeStream.foreachBatch(_process), query_name, checkpoint_dir)
 
@@ -191,10 +169,11 @@ def embedding_dedup_stream(
     from ..llmdata import simsearch
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        matches = simsearch.incremental_embedding_matches(
-            batch_df.sparkSession, batch_df, index_table, threshold, dim
-        )
-        _handoff(on_batch, batch_id, matches)
+        with PinScope() as scope:
+            matches = simsearch.incremental_embedding_matches(
+                batch_df.sparkSession, batch_df, index_table, threshold, dim
+            )
+            on_batch(batch_id, scope.adopt(matches))
 
     return _start(vec_stream.writeStream.foreachBatch(_process), query_name, checkpoint_dir)
 
@@ -237,35 +216,24 @@ def multimodal_dedup_stream(
     from ..llmdata import multimodal, simsearch
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # persisted: the feature frame feeds up to four uncached
-        # subtrees (index-match keys + normed verify side, intra keys +
-        # normed side) and the Arrow byte-histogram kernel is the
-        # dominant per-batch Python cost — without the cache it would
-        # re-run per consumer; released with the batch below
-        feats = multimodal.usable_features(
-            multimodal.feature_table(batch_df, dim=dim)
-        ).select(F.col("doc_id").alias("vec_id"), "embedding").persist()
-        # pins released in the OUTER finally (not via _handoff) so an
-        # exception between building an operator frame and the handler
-        # call — e.g. a plan-time unionByName failure — cannot strand
-        # already-persisted internals for the session's life
-        to_release: list[DataFrame] = []
-        try:
-            matches = simsearch.incremental_embedding_matches(
+        with PinScope() as scope:
+            # persisted: the feature frame feeds up to four uncached
+            # subtrees (index-match keys + normed verify side, intra keys
+            # + normed side) and the Arrow byte-histogram kernel is the
+            # dominant per-batch Python cost — without the cache it would
+            # re-run per consumer
+            feats = scope.persist(multimodal.usable_features(
+                multimodal.feature_table(batch_df, dim=dim)
+            ).select(F.col("doc_id").alias("vec_id"), "embedding"))
+            matches = scope.adopt(simsearch.incremental_embedding_matches(
                 batch_df.sparkSession, feats, index_table, threshold, dim,
-            )
-            to_release.append(matches)
+            ))
             if within_batch:
-                intra = simsearch.mt_dup_pairs(feats, threshold=threshold, dim=dim)
-                to_release.append(intra)
-                # unionByName returns a new frame WITHOUT the inputs'
-                # _pinned_persisted attrs — to_release holds the originals
+                intra = scope.adopt(
+                    simsearch.mt_dup_pairs(feats, threshold=threshold, dim=dim)
+                )
                 matches = matches.unionByName(intra.select("d1", "d2", "cosine"))
             on_batch(batch_id, matches)
-        finally:
-            feats.unpersist()
-            for df in to_release:
-                release_pinned(df)
 
     return _start(
         docs_stream.writeStream.foreachBatch(_process), query_name, checkpoint_dir
@@ -350,51 +318,45 @@ def assembly_ingest_stream(
             "silently ingest embedding-unscreened documents"
         )
 
+    stats = on_stats is not None
+
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        pinned = []
-
-        def pin(df: DataFrame, force: bool = False) -> DataFrame:
-            if on_stats is None and not force:
-                return df
-            pinned.append(df.persist())
-            return pinned[-1]
-
-        batch_df = pin(batch_df)
-        qual = (
-            textstats.quality_scores(batch_df)
-            .where(F.col("quality") >= quality_min)
-            .select("doc_id")
-        )
-        # materialize before filtering the HOF-derived flags (caller
-        # note on repetition_stats)
-        rep_flags = textstats.repetition_stats(batch_df).persist()
-        try:
+        with PinScope() as scope:
+            if stats:
+                batch_df = scope.persist(batch_df)
+            qual = (
+                textstats.quality_scores(batch_df)
+                .where(F.col("quality") >= quality_min)
+                .select("doc_id")
+            )
+            # materialize before filtering the HOF-derived flags (caller
+            # note on repetition_stats)
+            rep_flags = scope.persist(textstats.repetition_stats(batch_df))
             rep = rep_flags.where(~F.col("repetitive")).select("doc_id")
-            gated = pin(
+            gated = (
                 batch_df.join(qual, "doc_id", "left_semi")
                 .join(rep, "doc_id", "left_semi")
             )
+            if stats:
+                gated = scope.persist(gated)
             bench = spark.table(bench_table)
             clean = (
                 decontam.ngram_overlap(gated, bench, n=n_contam, min_hits=1)
                 .where(~F.col("contaminated"))
                 .select("doc_id")
             )
+            survivors = gated.join(clean, "doc_id", "left_semi")
             # the semantic rung makes survivors a genuine multi-consumer
             # node (emb semi-join + anti-join left side + the scrub),
             # so it persists even on the zero-stats path — otherwise
             # the gate chain would re-execute per branch
-            survivors = pin(
-                gated.join(clean, "doc_id", "left_semi"),
-                force=emb_table is not None,
-            )
+            if stats or emb_table is not None:
+                survivors = scope.persist(survivors)
             n_decontam = survivors
             if emb_table is not None:
                 # batch survivors' vectors looked up by semi-join —
-                # O(batch) against the embeddings table's pruned scan;
-                # the operator pins its narrow corpus projection, which
-                # the finally block below releases with the batch.
+                # O(batch) against the embeddings table's pruned scan.
                 # NULL-vector rows are dropped from BOTH lookup sides —
                 # they are exactly the "doc without a (usable) vector"
                 # passthrough case, and the LSH kernels raise on NULL
@@ -404,34 +366,31 @@ def assembly_ingest_stream(
                     .where(F.col("embedding").isNotNull())
                     .join(survivors.select("doc_id"), "doc_id", "left_semi")
                 )
-                flagged = decontam.semantic_contamination(
+                flagged = scope.adopt(decontam.semantic_contamination(
                     emb,
                     spark.table(bench_emb_table).where(
                         F.col("embedding").isNotNull()
                     ),
                     threshold=semantic_threshold, dim=dim,
                     id_col="doc_id",
-                )
-                pinned.extend(getattr(flagged, "_pinned_persisted", ()))
+                ))
                 sem_bad = flagged.where(F.col("contaminated")).select("doc_id")
                 # the post-semantic frame is itself multi-consumer (LSH
                 # discovery + the kept anti-join), so persist it even on
-                # the zero-stats path — same hazard as the pre-semantic pin
-                survivors = pin(
-                    survivors.join(sem_bad, "doc_id", "left_anti"), force=True
+                # the zero-stats path — same hazard as the pre-semantic one
+                survivors = scope.persist(
+                    survivors.join(sem_bad, "doc_id", "left_anti")
                 )
-            raw_dups = dedup.incremental_lsh_matches_indexed(
+            raw_dups = scope.adopt(dedup.incremental_lsh_matches_indexed(
                 spark, survivors, index_table,
                 threshold=threshold, n=n_dedup,
-            )
-            # .select().distinct() below returns a new frame WITHOUT
-            # the operator's _pinned_persisted attr — collect the pin
-            # here or it leaks one cached shingle frame per micro-batch
-            pinned.extend(getattr(raw_dups, "_pinned_persisted", ()))
+            ))
             dups = raw_dups.select(F.col("d1").alias("doc_id")).distinct()
-            kept = pin(survivors.join(dups, "doc_id", "left_anti"))
+            kept = survivors.join(dups, "doc_id", "left_anti")
+            if stats:
+                kept = scope.persist(kept)
             on_batch(batch_id, sampling.hash_split(kept, splits))
-            if on_stats is not None:
+            if stats:
                 funnel = {
                     "n_in": batch_df.count(),
                     "n_gated": gated.count(),
@@ -441,10 +400,6 @@ def assembly_ingest_stream(
                 if emb_table is not None:
                     funnel["n_semantic"] = survivors.count()
                 on_stats(batch_id, funnel)
-        finally:
-            rep_flags.unpersist()
-            for df in pinned:
-                df.unpersist()
 
     return _start(docs_stream.writeStream.foreachBatch(_process), query_name, checkpoint_dir)
 
@@ -775,15 +730,13 @@ def additive_card_stream(
         from ..etl.sinks import write_partitioned_snapshot
 
         spark = batch_df.sparkSession
-        delta = (
-            delta_fn(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
+        with PinScope() as scope:
             # the aggregated delta is read twice (emptiness probe +
-            # write); without the pin the whole delta_fn aggregation
+            # write); without the cache the whole delta_fn aggregation
             # over the batch would run twice per micro-batch
-            .persist()
-        )
-        try:
+            delta = scope.persist(
+                delta_fn(batch_df).withColumn("batch_id", F.lit(batch_id))
+            )
             if not delta.isEmpty():
                 write_partitioned_snapshot(delta, state_dir, ["batch_id"])
             try:
@@ -792,11 +745,8 @@ def additive_card_stream(
                 # nothing ever written (every batch so far all-NULL
                 # text): the empty delta carries the correct schema
                 log = delta
-            _handoff(
-                on_batch, batch_id, finish_fn(_fold(log, key_cols, count_cols))
-            )
-        finally:
-            delta.unpersist()
+            card = finish_fn(_fold(log, key_cols, count_cols))
+            on_batch(batch_id, scope.adopt(card))
 
     return _start(
         docs_stream.writeStream.foreachBatch(_process), query_name, checkpoint_dir

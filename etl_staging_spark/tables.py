@@ -114,10 +114,6 @@ def respread_narrow(
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, rls_filter=None) -> None:
     """Register every table as a temp view for the SQL API.
 
@@ -132,20 +128,68 @@ def register_views(spark: SparkSession, sf_dir: str, rls_filter=None) -> None:
         df.createOrReplaceTempView(t)
 
 
-def release_pinned(df: DataFrame) -> None:
-    """Explicitly release a result frame's pinned persisted inputs.
+# Persisted-frame lifecycle. A builder that persists a frame its
+# returned plan still reads attaches it with ``pin``; the consumer
+# releases it with ``release_pinned`` after the terminal action. A
+# cached relation stays in the session's CacheManager until someone
+# unpersists it — dropping the Python wrapper does not free it — so a
+# long-lived session that never calls ``clearCache()`` must release
+# every result it runs.
 
-    THE PIN CONTRACT: catalog builders that persist internal frames the
-    returned plan still references attach them to the result as
-    ``_pinned_persisted`` (a tuple of persisted DataFrames) so Python
-    GC can't drop the cache entries mid-consumption. One-shot harnesses
-    (bench.py, tools/check.py) `clearCache()` between queries and never
-    need this; a LONG-LIVED or multi-tenant session should call
-    ``release_pinned(result)`` after its terminal action to drop
-    exactly this query's pins — not every tenant's cache. Safe on
-    frames without pins and on already-unpersisted frames."""
-    for frame in getattr(df, "_pinned_persisted", ()):
+
+def pins_of(df) -> tuple:
+    """The persisted frames attached to ``df`` (empty when none), for a
+    caller that wraps an operator's result and passes its pins on:
+    ``pin(out, normed, *pins_of(cand))``."""
+    return getattr(df, "_pinned_persisted", ())
+
+
+def pin(out, *frames: DataFrame):
+    """Attach persisted ``frames`` to ``out`` (added to any it already
+    carries) and return ``out``. Transformations return new frames
+    without pins, so a builder pins to the frame it returns."""
+    out._pinned_persisted = pins_of(out) + frames
+    return out
+
+
+def release_pinned(df) -> None:
+    """Unpersist the frames attached to ``df`` and detach them. One-shot
+    harnesses that ``clearCache()`` between queries never need this; a
+    long-lived or multi-tenant session calls ``release_pinned(result)``
+    after its terminal action to drop exactly this query's cache
+    entries, not every tenant's. Safe on frames without pins and on
+    frames already unpersisted."""
+    for frame in pins_of(df):
         try:
             frame.unpersist()
         except Exception:
             pass
+    df._pinned_persisted = ()
+
+
+class PinScope:
+    """The frames one unit of work persists, released together when the
+    ``with`` block exits, also on an exception — the lifecycle for
+    one-shot callers such as a stream micro-batch:
+
+        with PinScope() as scope:
+            feats = scope.persist(features(batch))
+            on_batch(batch_id, scope.adopt(match(feats)))
+    """
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` and register it for release."""
+        df = df.persist()
+        pin(self, df)
+        return df
+
+    def adopt(self, df: DataFrame) -> DataFrame:
+        """Register ``df``'s pins for release; returns ``df``."""
+        pin(self, *pins_of(df))
+        return df
+
+    def __enter__(self) -> "PinScope":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        release_pinned(self)

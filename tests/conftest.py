@@ -29,9 +29,13 @@ SF_DIR = "/root/testdata/sf0.001"
 #   to the driver's own rotating 50-query certification window, which
 #   independently certifies the full registry at sf0.01 every round
 #   (tools/check.py runs the full 215 on demand).
-# - the explicit >=8 s integration tests below: each re-verifies a
-#   path that keeps a faster sibling in the tier (stream-vs-batch
-#   twins, pipeline-facade compositions, duckdb property cross-checks).
+# - the explicit >=8 s integration tests below, keyed by (module,
+#   test name): each re-verifies a path that keeps a faster sibling in
+#   the tier (stream-vs-batch twins, pipeline-facade compositions,
+#   duckdb property cross-checks). test_tiers.py checks every key still
+#   names a collected test.
+# - the 215-entry cache-leak sweep: test_leaks.py marks its own slow
+#   params (an md5 sample plus the entries that once leaked stay fast).
 #
 # Run everything: python -m pytest tests/ -q -m ""
 _SLOW_MODULES = {"test_plan_lock", "test_plans_global", "test_cards_property"}
@@ -40,62 +44,65 @@ _ORACLE_SWEEPS = {
     "test_oracle_arrow_types_are_harness_safe",
 }
 _SLOW_TESTS = {
-    # test_llmdata
-    "test_corpus_pipeline_full_hygiene_chain",
-    "test_decontam_rate_by_source_planted_and_duckdb",
-    "test_simhash_pairs_planted",
-    "test_r14_new_cards_match_duckdb_on_real_tables",
-    "test_ann_lsh_subset_of_bruteforce",
-    "test_r15_wave2_cards_match_duckdb_on_real_tables",
-    "test_split_by_cluster_matches_duckdb_oracle",
-    "test_source_overlap_matrix_matches_duckdb_oracle",
-    "test_corpus_pipeline_facade_matches_manual_composition",
-    "test_decontamination_report_all_rungs",
-    # test_streaming
-    "test_assembly_ingest_stream_semantic_rung_matches_batch",
-    "test_multimodal_dedup_stream_matches_batch",
-    "test_assembly_ingest_stream_matches_batch",
-    "test_cluster_share_card_stream_matches_batch_and_refinishes",
-    "test_pii_and_charclass_card_streams_match_batch",
-    "test_quality_lang_card_stream_matches_batch",
-    "test_fertility_card_stream_matches_batch",
-    "test_gated_ingest_clean_and_lang_matches_batch",
-    "test_multimodal_dedup_stream_checkpointed_restart",
-    "test_length_card_stream_matches_batch",
-    "test_ttr_state_serves_cosine_matrix_card",
-    "test_concentration_card_stream_matches_batch",
-    "test_compact_card_state_respects_uncommitted_batches",
-    "test_multimodal_self_maintaining_feature_index",
-    "test_length_card_stream_checkpointed_replay_converges",
-    "test_ttr_state_serves_vocab_coverage_card",
-    "test_interarrival_stream_matches_batch_across_boundary",
-    "test_corpus_pipeline_to_training_set_verifies",
-    "test_corpus_pipeline_dedup_bytes_matches_hand_composed_chain",
-    "test_corpus_pipeline_dedup_keep_quality",
-    "test_corpus_pipeline_cluster_share_and_curriculum",
-    "test_pq_ivf_topk_planted_routing",
-    "test_bpe_train_matches_python_reference",
-    # test_streaming (second wave, 5-7s each; every one is a
-    # stream-vs-batch or restart twin whose batch/stream siblings stay)
-    "test_self_maintaining_ingest_appends_to_index",
-    "test_length_card_stream_crash_replay_overwrites_own_partition",
-    "test_ttr_card_stream_matches_batch_and_compacts",
-    "test_events_volume_stream_matches_batch",
-    "test_truncation_card_stream_matches_batch",
-    "test_lm_score_stream_batch_boundary_independent",
-    "test_length_card_stream_first_batch_all_null_text",
-    "test_checkpointed_ingest_resumes_without_reprocessing",
-    "test_compaction_preserves_params_marker",
-    # test_domain_property
-    "test_domain_sql_backend_matches_column_backend",
-    # test_all_exports
-    "test_dataset_card_assembles_and_exports",
-    "test_report_exports_all_formats",
-    "test_dataset_card_embeddings_optional_but_not_swallowed",
-    "test_dataset_card_empty_corpus_placeholder",
-    "test_dataset_card_all_null_source_corpus",
-    # test_fast_argmax
-    "test_pq_code_fast_matches_exact",
+    ("test_llmdata", n)
+    for n in (
+        "test_corpus_pipeline_full_hygiene_chain",
+        "test_decontam_rate_by_source_planted_and_duckdb",
+        "test_simhash_pairs_planted",
+        "test_r14_new_cards_match_duckdb_on_real_tables",
+        "test_ann_lsh_subset_of_bruteforce",
+        "test_r15_wave2_cards_match_duckdb_on_real_tables",
+        "test_split_by_cluster_matches_duckdb_oracle",
+        "test_source_overlap_matrix_matches_duckdb_oracle",
+        "test_corpus_pipeline_facade_matches_manual_composition",
+        "test_decontamination_report_all_rungs",
+        "test_corpus_pipeline_to_training_set_verifies",
+        "test_corpus_pipeline_dedup_bytes_matches_hand_composed_chain",
+        "test_corpus_pipeline_dedup_keep_quality",
+        "test_corpus_pipeline_cluster_share_and_curriculum",
+        "test_pq_ivf_topk_planted_routing",
+        "test_bpe_train_matches_python_reference",
+    )
+} | {
+    ("test_streaming", n)
+    for n in (
+        "test_assembly_ingest_stream_semantic_rung_matches_batch",
+        "test_multimodal_dedup_stream_matches_batch",
+        "test_assembly_ingest_stream_matches_batch",
+        "test_cluster_share_card_stream_matches_batch_and_refinishes",
+        "test_pii_and_charclass_card_streams_match_batch",
+        "test_quality_lang_card_stream_matches_batch",
+        "test_fertility_card_stream_matches_batch",
+        "test_gated_ingest_clean_and_lang_matches_batch",
+        "test_multimodal_dedup_stream_checkpointed_restart",
+        "test_length_card_stream_matches_batch",
+        "test_ttr_state_serves_cosine_matrix_card",
+        "test_concentration_card_stream_matches_batch",
+        "test_compact_card_state_respects_uncommitted_batches",
+        "test_multimodal_self_maintaining_feature_index",
+        "test_length_card_stream_checkpointed_replay_converges",
+        "test_ttr_state_serves_vocab_coverage_card",
+        "test_interarrival_stream_matches_batch_across_boundary",
+        # second wave, 5-7s each; every one is a stream-vs-batch or
+        # restart twin whose batch/stream siblings stay
+        "test_self_maintaining_ingest_appends_to_index",
+        "test_length_card_stream_crash_replay_overwrites_own_partition",
+        "test_ttr_card_stream_matches_batch_and_compacts",
+        "test_events_volume_stream_matches_batch",
+        "test_truncation_card_stream_matches_batch",
+        "test_lm_score_stream_batch_boundary_independent",
+        "test_length_card_stream_first_batch_all_null_text",
+        "test_checkpointed_ingest_resumes_without_reprocessing",
+        "test_compaction_preserves_params_marker",
+    )
+} | {
+    ("test_domain_property", "test_domain_sql_backend_matches_column_backend"),
+    ("test_all_exports", "test_dataset_card_assembles_and_exports"),
+    ("test_all_exports", "test_report_exports_all_formats"),
+    ("test_all_exports", "test_dataset_card_embeddings_optional_but_not_swallowed"),
+    ("test_all_exports", "test_dataset_card_empty_corpus_placeholder"),
+    ("test_all_exports", "test_dataset_card_all_null_source_corpus"),
+    ("test_fast_argmax", "test_pq_code_fast_matches_exact"),
 }
 
 
@@ -113,11 +120,10 @@ def pytest_collection_modifyitems(config, items):
         base = item.name.split("[", 1)[0]
         if mod in _SLOW_MODULES:
             item.add_marker(slow)
-        elif base in _ORACLE_SWEEPS:
-            param = item.name[len(base) + 1 : -1]
-            if not _oracle_fast(param):
+        elif base in _ORACLE_SWEEPS and hasattr(item, "callspec"):
+            if not _oracle_fast(item.callspec.params["name"]):
                 item.add_marker(slow)
-        elif base in _SLOW_TESTS:
+        elif (mod, base) in _SLOW_TESTS:
             item.add_marker(slow)
 
 

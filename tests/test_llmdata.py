@@ -2273,12 +2273,12 @@ def test_release_pinned_contract(spark):
     """release_pinned drops exactly the result's pinned frames (the
     multi-tenant alternative to clearCache) and is a no-op on frames
     without pins."""
-    from etl_staging_spark.tables import release_pinned
+    from etl_staging_spark.tables import pins_of, release_pinned
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     out = simsearch.lsh_multitable_topk(emb, F.col("vec_id") == 0, dim=64, k=2)
     out.collect()
-    pins = out._pinned_persisted
+    pins = pins_of(out)
     assert pins and all(f.storageLevel.useMemory for f in pins)
     release_pinned(out)
     assert all(not f.storageLevel.useMemory for f in pins)
@@ -2895,19 +2895,20 @@ def test_quality_threshold_null_text_docs_excluded(spark):
 
 
 def test_corpus_pipeline_release_does_not_clobber_caller_pins(spark):
-    """release() must not touch the kept frame's own _pinned_persisted:
-    a caller-owned result frame wrapped in a pipeline keeps its pin
+    """release() must not touch the kept frame's own pins: a
+    caller-owned result frame wrapped in a pipeline keeps its pin
     record (and its cache) after the pipeline releases its stages."""
     from etl_staging_spark.llmdata.pipeline import CorpusPipeline
+    from etl_staging_spark.tables import pin, pins_of
 
     docs = spark.createDataFrame(
         [(1, "alpha text", "web")], "doc_id long, text string, source string")
     pinned = spark.createDataFrame([(1,)], "x long").persist()
     pinned.count()
-    docs._pinned_persisted = (pinned,)
+    pin(docs, pinned)
     pipe = CorpusPipeline(docs)
     pipe.release()
-    assert docs._pinned_persisted == (pinned,)
+    assert pins_of(docs) == (pinned,)
     assert pinned.storageLevel.useMemory  # still cached
     pinned.unpersist()
 
@@ -3772,7 +3773,7 @@ def test_corpus_pipeline_full_hygiene_chain(spark):
         [(901, [float(x) for x in base_v])], eschema)
 
     # Earlier tests in a shared session may legitimately leave pinned
-    # caches behind (the _pinned_persisted pattern); assert on the DELTA
+    # caches behind (unreleased pinned results); assert on the DELTA
     # this pipeline creates, not on a globally empty cache.
     def _persisted_ids():
         it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
@@ -4256,21 +4257,22 @@ def test_corpus_pipeline_fork_release_is_refcounted(spark):
     sibling's plan still references: the shared pool frees only when
     the LAST branch releases (and per-branch release is idempotent)."""
     from etl_staging_spark.llmdata.pipeline import CorpusPipeline
+    from etl_staging_spark.tables import pins_of
 
     docs = spark.createDataFrame(
         [(i, f"tok{i} " * 30, "web") for i in range(8)],
         "doc_id long, text string, source string",
     )
     parent = CorpusPipeline(docs).quality_gate_keep_rate(0.9)
-    assert parent._pins, "the calibrated gate should pin its scored frame"
-    pinned = parent._pins[0]
+    assert pins_of(parent._pins), "the calibrated gate should pin its scored frame"
+    pinned = pins_of(parent._pins)[0]
     child = parent.fork().quality_gate(0.0)
     parent.release()
     parent.release()  # idempotent: must not double-decrement
     assert pinned.storageLevel.useMemory  # child still alive -> cached
     child.release()
     assert not pinned.storageLevel.useMemory  # last branch -> freed
-    assert not child._pins
+    assert not pins_of(child._pins)
 
 
 def test_token_drift_card_rejects_self_comparison(spark):
@@ -4320,6 +4322,7 @@ def test_corpus_pipeline_release_drains_post_release_pins(spark):
     """A builder that keeps chaining after its release() must free the
     NEW pins on its next release() — not leak them for the session."""
     from etl_staging_spark.llmdata.pipeline import CorpusPipeline
+    from etl_staging_spark.tables import pins_of
 
     docs = spark.createDataFrame(
         [(i, f"tok{i} " * 30, "web") for i in range(8)],
@@ -4328,10 +4331,10 @@ def test_corpus_pipeline_release_drains_post_release_pins(spark):
     pipe = CorpusPipeline(docs).quality_gate_keep_rate(0.9)
     pipe.release()
     pipe.quality_gate_keep_rate(0.8)  # chained AFTER the release
-    assert pipe._pins
-    late_pin = pipe._pins[0]
+    assert pins_of(pipe._pins)
+    late_pin = pins_of(pipe._pins)[0]
     pipe.release()
-    assert not late_pin.storageLevel.useMemory and not pipe._pins
+    assert not late_pin.storageLevel.useMemory and not pins_of(pipe._pins)
 
 
 def test_corpus_pipeline_rearmed_branch_survives_sibling_release(spark):
@@ -4339,6 +4342,7 @@ def test_corpus_pipeline_rearmed_branch_survives_sibling_release(spark):
     a sibling's redundant release() must not drain its in-use cache;
     its own next release() does."""
     from etl_staging_spark.llmdata.pipeline import CorpusPipeline
+    from etl_staging_spark.tables import pins_of
 
     docs = spark.createDataFrame(
         [(i, f"tok{i} " * 30, "web") for i in range(8)],
@@ -4349,17 +4353,18 @@ def test_corpus_pipeline_rearmed_branch_survives_sibling_release(spark):
     a.release()
     b.release()  # live count 0, pool empty so far
     b.quality_gate_keep_rate(0.9)  # b re-arms with a fresh pin
-    pin = b._pins[0]
+    pin = pins_of(b._pins)[0]
     a.release()  # redundant sibling release: must NOT yank b's cache
     assert pin.storageLevel.useMemory
     b.release()
-    assert not pin.storageLevel.useMemory and not b._pins
+    assert not pin.storageLevel.useMemory and not pins_of(b._pins)
 
 
 def test_corpus_pipeline_pinless_stage_does_not_rearm(spark):
     """A post-release stage that pins NOTHING must not re-arm the
     branch: the sibling's pool drain stays unblocked."""
     from etl_staging_spark.llmdata.pipeline import CorpusPipeline
+    from etl_staging_spark.tables import pins_of
 
     docs = spark.createDataFrame(
         [(1, "alpha beta", "web")], "doc_id long, text string, source string"
@@ -4370,7 +4375,7 @@ def test_corpus_pipeline_pinless_stage_does_not_rearm(spark):
     b.quality_gate(0.0)  # pins nothing
     assert b._released and b._live_branches[0] == 1
     a.release()  # must drain: only pin-less work happened after b left
-    assert a._live_branches[0] == 0 and not a._pins
+    assert a._live_branches[0] == 0 and not pins_of(a._pins)
 
 
 def test_length_histogram_card_planted(spark):

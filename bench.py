@@ -2,6 +2,16 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
+
+Usage: python bench.py [query ...]   (a named subset instead of
+HEADLINE, under the same protocol)
+
+bench_last.json holds the full-precision record, including
+"build_exec": each query's [build_s, exec_s] for its fastest rep —
+Python/py4j DataFrame construction vs the noop-sink run (Catalyst
+planning + execution). :func:`timed_run` and :func:`warm` ARE the
+repo's one query-timing protocol: tools/ab_ansi.py,
+tools/ab_respread.py and tools/scaling_probe.py time through them.
 """
 
 from __future__ import annotations
@@ -18,20 +28,34 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # MUST exist in queries() — a missing name is a hard error so the bench
 # can never silently measure less than it advertises.
 #
-# Curation rule (r13): entries whose steady-state is far below the
-# guard floor (<0.25 s at sf0.1 — job-scheduling constants, not
-# throughput) are retired when the publication line would otherwise
-# outgrow the driver's stdout budget and force the shed, PROVIDED the
-# operator family stays represented by a heavier benched entry; the
-# registry certification of a retired entry is unaffected. Retired
-# r13: mixture_epoch_upsample (0.04 s; mixture_weighted_sample stays),
-# shard_training_order + shard_manifest (0.09/0.14 s; seq_pack_chunks
-# and training_set_pack stay), c4_asof_reconstruction (0.11 s),
-# dup_rate_by_source + token_drift_card (0.15/0.24 s; the card family
-# keeps corpus_source_profile, source_overlap_matrix,
-# quality_calibration_card, embedding_stats_card, ngram_freq_spectrum,
-# source_novelty_card + the six r13 cards), text_quality_score
-# (0.16 s; text_repetition_gopher and boilerplate_flag stay).
+# Curation rule (r13): entries below the guard floor at sf0.1 (their
+# time is job-scheduling constants, not throughput, and they cannot
+# trip the guard) are retired whenever the publication line would
+# otherwise outgrow the driver's stdout budget, PROVIDED the operator
+# family stays represented by a heavier benched entry and the name is
+# not in CORE_R1; the registry certification of a retired entry is
+# unaffected. The line then fits by construction and names every
+# benched query (tests/test_bench_guard.py checks it at worst-case
+# widths). Retired r13 (under a 0.25 s cut): mixture_epoch_upsample
+# (0.04 s), shard_training_order + shard_manifest (0.09/0.14 s),
+# c4_asof_reconstruction (0.11 s), dup_rate_by_source +
+# token_drift_card (0.15/0.24 s), text_quality_score (0.16 s; the
+# text-gate family keeps text_repetition_gopher and boilerplate_flag).
+# Retired with the stdout-budget shed, which this curation replaces
+# (sf0.1 times on 4 cores; the last two ran 0.40-0.42 s there, but
+# r17's 32-core run shed both as sub-floor): seq_pack_chunks (0.20 s;
+# training_set_pack stays), br_report (0.20 s; gl_report, es_report,
+# aged_report), vocab_coverage_by_source (0.21 s;
+# source_vocab_cosine_matrix), hier_rollup (0.24 s; f7_child_of,
+# gl_report), mixture_weighted_sample (0.24 s; mixture_cluster_share,
+# cluster_balanced_sample), bpe_pair_counts (0.25 s; text_lm_bigram's
+# adjacent-pair counts), ttr_card + length_histogram_card (0.27/0.33 s;
+# the r13 cards keep quality_calibration_by_domain, lang_source_matrix,
+# lang_confusion_card), domain_quality_cap (0.31 s;
+# domain_token_budget), events_attribution (0.34 s; events_sessionize),
+# ngram_freq_spectrum (0.40 s; dup_ngram_coverage, text_lm_bigram),
+# pii_rate_by_source (0.42 s; pii_mask_regex, and embedding_stats_card
+# for the single-map-combinable per-group aggregate shape).
 HEADLINE = [
     "a1_hash_agg",
     "j1_star_join_revenue",
@@ -50,8 +74,6 @@ HEADLINE = [
     "sim_cosine_topk",
     # round 3 additions
     "es_report",
-    "br_report",
-    "hier_rollup",
     "analytic_report",
     "e4_carryover",
     "m4_serial_rebuild",
@@ -63,8 +85,6 @@ HEADLINE = [
     "pii_mask_regex",
     # round 5 additions
     "f7_child_of",
-    "seq_pack_chunks",
-    "mixture_weighted_sample",
     # round 6 additions
     "sa_stock_ageing",
     "dedup_incremental_lsh",
@@ -72,13 +92,11 @@ HEADLINE = [
     "search_bm25_topk",
     "boilerplate_flag",
     "dedup_semantic_ivf",
-    "domain_quality_cap",
     "corpus_assembly_full",
     "dedup_segments",
     "text_lm_bigram",
     "search_hybrid_rrf",
     "events_sessionize",
-    "bpe_pair_counts",
     "contrastive_pairs",
     "corpus_source_profile",
     "corpus_assembly_v2",
@@ -86,7 +104,6 @@ HEADLINE = [
     "decontaminate_fuzzy",
     "sim_ann_recall",
     "training_set_pack",
-    "events_attribution",
     # round 8/9 additions
     "sim_ann_lsh",
     "dedup_semantic_recall",
@@ -95,7 +112,6 @@ HEADLINE = [
     "quality_calibration_card",
     "embedding_stats_card",
     # round 11 additions
-    "ngram_freq_spectrum",
     "decontaminate_semantic",
     # round 12 additions
     "source_novelty_card",
@@ -103,16 +119,13 @@ HEADLINE = [
     "mm_feature_hist",
     # round 13 additions
     "quality_calibration_by_domain",
-    "length_histogram_card",
-    "ttr_card",
     "lang_source_matrix",
     "lang_confusion_card",
-    "vocab_coverage_by_source",
     # round 14 additions — one per NEW plan family; the other eight r14
     # card registrations (charclass/sentence/fertility/joint/truncation/
-    # dup_token_rate/events_volume/mm_usability) share pii_rate's
-    # single-map-combinable-aggregate shape and would only re-measure it
-    "pii_rate_by_source",
+    # dup_token_rate/events_volume/mm_usability) share the retired
+    # pii_rate_by_source's single-map-combinable-aggregate shape and
+    # would only re-measure it
     "dup_similarity_histogram",
     "dup_ngram_coverage",
     "source_vocab_cosine_matrix",
@@ -198,14 +211,15 @@ def _prior_timings(here: str, sf: float | None = None) -> dict[str, float]:
     queries) must not become the sole comparison base — a 7.6 s
     contention artifact as the reference would let a genuine 3x
     regression pass unflagged. Per-query (not last-two-overall): a
-    query shed from a publication by the stdout-budget degrade keeps
-    its reference from the most recent rounds that did publish it.
-    Bounded at four rounds: an ancient artifact (different machine
-    era, pre-sf-tagging) must age OUT, not resurrect as a reference
-    that trips the guard forever on a since-slowed query. Rounds at a
-    DIFFERENT scale factor are skipped when ``sf`` is given; a round
-    without per-query timings ({"parsed": null} crash artifacts, or a
-    fully-omitted publication) is skipped, never adopted as {}."""
+    query missing from a round (added later, or shed by an older
+    publication format) keeps its reference from the most recent
+    rounds that did publish it. Bounded at four rounds: an ancient
+    artifact (different machine era, pre-sf-tagging) must age OUT, not
+    resurrect as a reference that trips the guard forever on a
+    since-slowed query. Rounds at a DIFFERENT scale factor are skipped
+    when ``sf`` is given; a round without per-query timings
+    ({"parsed": null} crash artifacts, or a fully-omitted publication)
+    is skipped, never adopted as {}."""
     rounds: dict[int, dict[str, float]] = {}
     for rnd, parsed in bench_rounds(here).items():
         qs = parsed.get("queries", {})
@@ -214,48 +228,30 @@ def _prior_timings(here: str, sf: float | None = None) -> dict[str, float]:
         if isinstance(qs, dict) and qs:
             rounds[rnd] = qs
     seen: dict[str, list[float]] = {}
-    ordered = sorted(rounds, reverse=True)
-    for rnd in ordered[:4]:
+    for rnd in sorted(rounds, reverse=True)[:4]:
         for name, sec in rounds[rnd].items():
             if isinstance(sec, (int, float)) and sec > 0:
                 vals = seen.setdefault(name, [])
                 if len(vals) < 2:
                     vals.append(float(sec))
-    # Shed-query carry: a sub-floor query shed from the publication for
-    # 4+ consecutive rounds ages out of the bounded lookback above; if
-    # it then regresses past the floor, its first regressed round would
-    # have no reference — the guard couldn't trip and the slow timing
-    # would become the future baseline. Carry the most recent SUB-FLOOR
-    # record from older rounds for queries with no reference at all:
-    # only sub-floor queries can be shed (publish_line's invariant), a
-    # sub-floor reference can only trip the guard on a genuine
-    # above-floor 2x regression, and one published recovery replaces it
-    # via the normal lookback — so the age-out rationale (ancient
-    # artifacts must not trip forever) is preserved for everything else.
-    # Only the MOST RECENT pre-window record counts: if a query's last
-    # published state before falling off the window was ABOVE the
-    # floor (it slowed legitimately and then retired — it cannot have
-    # been shed in that state), the age-out applies and nothing is
-    # carried; resurrecting an older sub-floor record would falsely
-    # trip the guard on a re-added query's genuine steady state.
-    aged_out: set[str] = set()
-    for rnd in ordered[4:]:
-        for name, sec in rounds[rnd].items():
-            if name in seen or name in aged_out:
-                continue
-            if not isinstance(sec, (int, float)) or sec <= 0:
-                continue
-            if sec < GUARD_FLOOR_SEC:
-                seen[name] = [float(sec)]
-            else:
-                aged_out.add(name)
     return {name: min(vals) for name, vals in seen.items()}
 
 
-# absolute floor on outlier-guard trips AND the shed ceiling below: a
-# query that can trip the guard (best > this) must never be shed from
-# the publication, or its reference would eventually vanish
+# absolute floor on outlier-guard trips: sub-0.4s results are
+# dominated by job-scheduling constants and 2-decimal reference
+# quantization (a 0.15s ref tripping at 0.31s is timer noise, not
+# contention) — they can neither signal a real regression nor justify a
+# rerun
 GUARD_FLOOR_SEC = 0.4
+
+# the round-1 headline subset, for like-for-like cross-round comparison
+# now that the headline set has grown
+CORE_R1 = [
+    "a1_hash_agg", "j1_star_join_revenue", "w2_running_balance",
+    "w1_gl_initial_and_period", "a3_aged_bucket_pivot",
+    "j3_lateral_agg_join", "j7_asof_join", "a9_ledger_netting",
+    "o2_pagination",
+]
 
 
 def publish_line(
@@ -265,90 +261,133 @@ def publish_line(
     reruns: list[str],
     attempts: int,
     sf: float | None,
-    budget: int = 1900,  # headroom under the observed 2000-char tail
 ) -> str:
-    """The stdout publication, fitted to the driver's BOUNDED (~2000
-    char) stdout tail by construction — round 10's default-formatted
-    59-query line outgrew it and published "parsed": null. Compact
-    separators, 2-decimal timings (the outlier guard's 2x test needs
-    no more), the rerun list capped at 3 names + a count, and a
-    degrade that drops the smallest-timed SUB-GUARD-FLOOR queries one
-    at a time until the line fits: they cannot trip the guard anyway
-    (a trip needs best > 0.4s absolute), and the guard's PER-QUERY
-    lookback keeps covering a shed query from the most recent rounds
-    that did publish it. Queries at or above the floor are never shed
-    — if the line still doesn't fit, the whole dict is omitted (the
-    old last resort) rather than erode guard coverage. NO 1-decimal
-    rung: quantizing a 0.149s steady state to 0.1 would poison the
-    next round's references (false trips at 2x a halved ref, real 2x
-    regressions hidden). bench_last.json always carries the
-    full-precision record."""
+    """The stdout publication. The driver keeps a BOUNDED (~2000 char)
+    stdout tail — round 10's default-formatted 59-query line outgrew it
+    and published "parsed": null — so the line is compact by
+    construction: compact separators, 2-decimal timings (the outlier
+    guard's 2x test needs no more), the rerun list capped at 3 names +
+    a count, and a HEADLINE curated (r13 rule, above) so that every
+    name fits under 1900 chars even at worst-case widths
+    (tests/test_bench_guard.py pins it). NO 1-decimal rung: quantizing
+    a 0.149s steady state to 0.1 would poison the next round's
+    references (false trips at 2x a halved ref, real 2x regressions
+    hidden). bench_last.json always carries the full-precision
+    record."""
+    return json.dumps({
+        "metric": "headline_queries_total_time",
+        "value": round(total, 2),
+        "unit": "sec",
+        "queries": {n: round(s, 2) for n, s in timings.items()},
+        # every timed query is published; the driver's round diff reads
+        # this field
+        "queries_dropped": 0,
+        "core_r1_subset_time": round(core_total, 2),
+        "n_queries": len(timings),
+        "reruns": reruns[:3],
+        "n_reruns": len(reruns),
+        "attempts": attempts,
+        "sf": sf,
+    }, separators=(",", ":"))
 
-    # sheddable = sub-floor queries only (smallest first): a query that
-    # can trip the guard must stay published or its reference vanishes.
-    # Sheddability compares the ROUNDED value (what would actually
-    # publish): a raw 0.398 publishes as 0.40 — a reference exactly at
-    # the floor — so the publication and the shed rule must agree at
-    # the boundary. Rounding is monotone, so the rounded-sheddable
-    # queries are exactly the n_sheddable smallest raw timings and the
-    # tail-drop below can never reach a guard-eligible query. Sorted
-    # once; drop-invariant.
-    by_size_desc = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))
-    n_sheddable = sum(
-        1 for _, v in timings.items() if round(v, 2) < GUARD_FLOOR_SEC
+
+def timed_run(build) -> tuple[float, float]:
+    """THE timed action: ``build()`` constructs the query's DataFrame,
+    then the noop sink runs it. Returns (build_s, exec_s). The split
+    follows Catalyst's phases (Spark SQL, SIGMOD 2015): build_s is
+    Python/py4j plan construction (~8 s of pq_ivf_topk's r16 cost) plus
+    any eager job the builder runs (bounded driver collects,
+    checkpoints); exec_s is analysis, planning and execution under the
+    action — the two call for different fixes."""
+    t0 = time.perf_counter()
+    df = build()
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return t1 - t0, time.perf_counter() - t1
+
+
+def warm(spark, qs: dict, names: list[str], sf_dir: str) -> None:
+    """Bring ``names`` to steady state before anything is timed.
+
+    Warm the JVM per query SHAPE, not just per session: first execution
+    of a shape pays codegen/JIT compilation of its generated methods
+    (md5 expression trees, 16-way minhash aggregates, decimal HOF
+    lambdas) — ~10-25 s on the heavies, independent of data volume.
+    Running every query once at sf0.001 ($SPARK_GRAFT_WARM_DIR, default
+    the sf0.001 directory beside ``sf_dir``) compiles those methods on
+    trivial data. Then one untimed pass at
+    the TARGET sf lets the async C2 tier land on the hot generated
+    methods and faults the parquet files into the page cache (without
+    it, whichever queries run first absorb the background compile and
+    flap 2-5x run to run). The cache is cleared after each pass."""
+    warm_dir = os.environ.get(
+        "SPARK_GRAFT_WARM_DIR",
+        os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.001"),
     )
-
-    def _line(drop: int = 0) -> str:
-        if drop >= len(timings):
-            kept: dict[str, float] = {}
-            shed: list[str] = []
-        elif drop:
-            kept = dict(by_size_desc[: len(timings) - drop])
-            shed = sorted(n for n, _ in by_size_desc[len(timings) - drop:])
-        else:
-            kept = timings
-            shed = []
-        return json.dumps({
-            "metric": "headline_queries_total_time",
-            "value": round(total, 2),
-            "unit": "sec",
-            "queries": {n: round(s, 2) for n, s in kept.items()},
-            "queries_dropped": drop,
-            # r17 (VERDICT r16): name what was shed so the driver's
-            # round-over-round diff can tell "shed sub-floor query"
-            # from "query dropped from the bench" — 6 false positives
-            # in PERF_r16. HARD-capped at 3 names (the reruns-field
-            # convention): naming every shed query costs nearly the
-            # chars publishing it would, so an uncapped list defeats
-            # the budget degrade (the first r17 run omitted the whole
-            # dict). The FULL timing record — from which the complete
-            # shed set is derivable as full-set minus published — is
-            # always in bench_last.json.
-            "shed": shed[:3],
-            "queries_omitted": drop >= len(timings),
-            "core_r1_subset_time": round(core_total, 2),
-            "n_queries": len(timings),
-            "reruns": reruns[:3],
-            "n_reruns": len(reruns),
-            "attempts": attempts,
-            "sf": sf,
-        }, separators=(",", ":"))
-
-    line = _line()
-    drop = 0
-    while len(line) > budget and drop < n_sheddable:
-        drop += 1
-        line = _line(drop)
-    if len(line) > budget:
-        # every sub-floor query is already shed and the line still
-        # doesn't fit: publish without the dict (the guard skips the
-        # round via the per-query lookback) rather than shed a
-        # guard-eligible query
-        line = _line(len(timings))
-    return line
+    if not os.path.isdir(warm_dir):
+        warm_dir = sf_dir
+    for d in (warm_dir, sf_dir):
+        for name in names:
+            timed_run(lambda: qs[name](spark, d))
+        spark.catalog.clearCache()
 
 
-def main() -> None:
+def ab_main(
+    app: str, set_arm, names: list[str], labels: tuple[str, str]
+) -> None:
+    """Interleaved A/B of two engine variants in ONE session (same JVM,
+    page cache and JIT for both arms) — the adjudication shape of the
+    r13-r17 perf notes, shared by tools/ab_*.py. ``set_arm(spark, on)``
+    selects arm A (True) or B (False). Each arm is warmed with
+    :func:`warm`; then per query ``rounds`` interleaved A-B passes
+    through :func:`timed_run`, best-of per arm, the cache cleared
+    between queries. Arm A is restored on ANY exit, so an exception
+    cannot leave the session in arm B. Relative verdict only —
+    absolute numbers are not bench's.
+
+    argv: [sf_dir] [rounds]; SPARK_GRAFT_SF_DIR (the sf_dir default)
+    and SPARK_GRAFT_WARM_DIR as in bench."""
+    from etl_staging_spark.session import DEFAULT_SF_DIR, get_spark
+    import __spark_entry__ as entrymod
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
+    rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 5
+    spark = get_spark(app)
+    qs = entrymod.queries()
+    a, b = labels
+    results: dict[str, dict[str, list[float]]] = {}
+    try:
+        for on in (True, False):
+            set_arm(spark, on)
+            warm(spark, qs, names, sf_dir)
+        for name in names:
+            runs: dict[str, list[float]] = {a: [], b: []}
+            for _ in range(rounds):
+                for on, label in ((True, a), (False, b)):
+                    set_arm(spark, on)
+                    t = sum(timed_run(lambda: qs[name](spark, sf_dir)))
+                    runs[label].append(round(t, 3))
+            results[name] = runs
+            best_a, best_b = min(runs[a]), min(runs[b])
+            delta = (best_a - best_b) / best_b * 100
+            print(f"{name}: {a}={best_a:.3f} {b}={best_b:.3f} "
+                  f"delta={delta:+.1f}%", flush=True)
+            spark.catalog.clearCache()
+    finally:
+        set_arm(spark, True)
+    sum_a = sum(min(r[a]) for r in results.values())
+    sum_b = sum(min(r[b]) for r in results.values())
+    print(json.dumps({
+        "sf_dir": sf_dir,
+        "rounds": rounds,
+        f"{a}_best_sum": round(sum_a, 3),
+        f"{b}_best_sum": round(sum_b, 3),
+        "delta_pct": round((sum_a - sum_b) / sum_b * 100, 1),
+        "queries": results,
+    }))
+
+
+def main(names: list[str]) -> None:
     from etl_staging_spark.session import get_spark
     import __spark_entry__ as entrymod
 
@@ -358,31 +397,11 @@ def main() -> None:
 
     spark = get_spark("bench")
     qs = entrymod.queries()
-    missing = [n for n in HEADLINE if n not in qs]
+    names = names or list(HEADLINE)
+    missing = [n for n in names if n not in qs]
     if missing:
-        raise SystemExit(f"bench HEADLINE queries not implemented: {missing}")
-    names = list(HEADLINE)
-
-    # Warm the JVM per query SHAPE, not just per session: first execution
-    # of a shape pays codegen/JIT compilation of its generated methods
-    # (md5 expression trees, 16-way minhash aggregates, decimal HOF
-    # lambdas) — ~10-25 s on the heavies, independent of data volume.
-    # Running every headline query once at sf0.001 compiles those methods
-    # on trivial data, so the timed loop below measures the query.
-    warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    for name in names:
-        qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
-    # One untimed pass at the TARGET sf: lets the async C2 tier land on
-    # the hot generated methods and faults the parquet files into the
-    # page cache, so the timed loop below starts from steady state
-    # (without this, whichever queries run first absorb the background
-    # compile and flap 2-5x run to run).
-    for name in names:
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
+        raise SystemExit(f"bench queries not implemented: {missing}")
+    warm(spark, qs, names, sf_dir)
 
     # Best-of-3 per query: the sf0.001 warmup compiles each shape's
     # generated code, but the C2 JIT tier still lands asynchronously —
@@ -396,23 +415,28 @@ def main() -> None:
     # the best-of-3 once and keep the overall minimum, flagging the
     # query in "reruns" so a genuine regression is visible as a number
     # that survived SIX runs.
-    prior = _prior_timings(os.path.dirname(os.path.abspath(__file__)), sf)
+    here = os.path.dirname(os.path.abspath(__file__))
+    prior = _prior_timings(here, sf)
 
     # forensics (r17, VERDICT r16): every raw timed run per query, so
     # bench_last.json can publish the min/max spread — a contended run
     # shows a wide spread, making "contention vs regression" machine-
-    # checkable instead of forensically inferred. Recording only; the
-    # timing methodology (best-of-3, guard, reruns) is unchanged.
+    # checkable instead of forensically inferred.
     raw_runs: dict[str, list[float]] = {}
+    # (build_s, exec_s) of each query's fastest rep over every run,
+    # guard reruns and restarted attempts included — its sum IS the
+    # published timing
+    fastest: dict[str, tuple[float, float]] = {}
     loadavg_start = os.getloadavg()
 
     def best_of_3(name: str) -> float:
         best = float("inf")
         for _ in range(3):
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
+            split = timed_run(lambda: qs[name](spark, sf_dir))
+            dt = sum(split)
             raw_runs.setdefault(name, []).append(round(dt, 3))
+            if name not in fastest or dt < sum(fastest[name]):
+                fastest[name] = split
             best = min(best, dt)
         return best
 
@@ -424,7 +448,6 @@ def main() -> None:
     # keeping each query's overall minimum, and only publish when a
     # pass ends with <=3 rerun flags (or attempts are exhausted, in
     # which case the non-empty "reruns" field is the visible signal).
-    timings: dict[str, float] = {}
     reruns: list[str] = []
     attempts = 0
     for attempt in range(3):
@@ -433,21 +456,13 @@ def main() -> None:
         for name in names:
             best = best_of_3(name)
             ref = prior.get(name)
-            # absolute floor on trips: sub-0.4s results are dominated
-            # by job-scheduling constants and 2-decimal reference
-            # quantization (a 0.15s ref tripping at 0.31s is timer
-            # noise, not contention) — they can neither signal a real
-            # regression nor justify a rerun
             if ref and best > 2 * ref and best > GUARD_FLOOR_SEC:
                 spark.catalog.clearCache()
-                best = min(best, best_of_3(name))
+                best_of_3(name)
                 # flagged on the TRIP, not on recovery: the rerun list
                 # is the run's contention signal, and a recovered rerun
                 # still means the first three runs were untrustworthy
                 reruns.append(name)
-            if name in timings:
-                best = min(best, timings[name])
-            timings[name] = round(best, 3)
             # every call re-persists its internal frames; dropping them
             # between queries keeps heap/GC pressure flat across the run
             # instead of penalizing whichever queries time last
@@ -455,17 +470,9 @@ def main() -> None:
         if len(reruns) <= 3:
             break
 
+    timings = {n: round(sum(fastest[n]), 3) for n in names}
     total = round(sum(timings.values()), 3)
-    # the round-1 headline subset, for like-for-like cross-round
-    # comparison now that the headline set has grown
-    core = [
-        "a1_hash_agg", "j1_star_join_revenue", "w2_running_balance",
-        "w1_gl_initial_and_period", "a3_aged_bucket_pivot",
-        "j3_lateral_agg_join", "j7_asof_join", "a9_ledger_netting",
-        "o2_pagination",
-    ]
-    core_total = round(sum(timings[n] for n in core if n in timings), 3)
-    here = os.path.dirname(os.path.abspath(__file__))
+    core_total = round(sum(timings[n] for n in CORE_R1 if n in timings), 3)
     verbose = {
         "metric": "headline_queries_total_time",
         "value": total,
@@ -476,6 +483,9 @@ def main() -> None:
         "reruns": reruns,
         "attempts": attempts,
         "sf": sf,
+        "build_exec": {
+            n: [round(b, 3), round(e, 3)] for n, (b, e) in fastest.items()
+        },
         # forensics (r17): per-query [min, max] over every raw timed
         # run (including guard reruns and restarted attempts) plus the
         # 1/5/15-min load averages bracketing the timed loop — so a
@@ -491,4 +501,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

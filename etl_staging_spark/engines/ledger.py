@@ -52,21 +52,6 @@ def rate_table(spark: SparkSession) -> DataFrame:
 
 _LEDGER_CACHE: dict = {}
 
-# Parallelism posture of heavy SINGLE-PASS fact aggregates (r16, guide
-# §2.5 "input skew — one huge unsplittable file"): the test parquet
-# files are ONE row group, so a scan-stage map side runs on one core no
-# matter the cluster width. Spreading the scan rows helps ONLY when the
-# per-row map work dominates the extra full-width exchange — measured
-# true for a1_hash_agg's 4-decimal-sum pass (−27%), and measured FALSE
-# for the move_lines consumers (tools/ab_respread.py interleaved A/B:
-# +19% net — their partial aggregates already collapse rows before any
-# exchange, and the engine reports re-pay the respread shuffle on every
-# per-scope collect job). So the flag gates the few single-pass heavy
-# consumers (a1), NOT the shared ledger frame. Module flag (not a conf)
-# so tools/ab_respread.py can interleave both arms in one session.
-SPREAD_FACT = True
-
-
 def move_lines(
     spark: SparkSession, sf_dir: str, spread: bool = False
 ) -> DataFrame:
@@ -82,17 +67,15 @@ def move_lines(
     two columns every consumer already scans, so the spread widens
     nothing; no-op at real scale (respread_narrow's split guard). Only
     for SINGLE-JOB heavy-map consumers — multi-collect engines re-pay
-    the exchange per job and measured slower (tools/ab_respread.py)."""
-    # The built plan depends on the EFFECTIVE spread (spread and
-    # SPREAD_FACT), not the argument alone — keying on the argument let a
-    # cached spread frame be returned after SPREAD_FACT was flipped off
-    # (tools/ab_respread.py's arms timed the same plan; ADVICE r16).
-    key = (spark, sf_dir, spread and SPREAD_FACT)
+    the exchange per job and measured +19% slower net over 14 ledger
+    entries (tools/ab_respread.py, OPTIMIZATION_r16.md)."""
+    key = (spark, sf_dir, spread)
     cached = _LEDGER_CACHE.get(key)
     if cached is not None:
         return cached
     li = load(spark, sf_dir, "lineitem")
-    if spread and SPREAD_FACT:
+    if spread:
+        # bound at call time so tools/ab_respread.py can swap it
         from ..tables import respread_narrow
 
         li = respread_narrow(li, ("l_orderkey", "l_partkey"))

@@ -45,13 +45,6 @@ class Hierarchy:
         """``pairs`` is (id, parent_id); parent_id None marks a root."""
         return cls(dict(pairs))
 
-    @classmethod
-    def from_frame(cls, dim: DataFrame, id_col: str, parent_col: str) -> "Hierarchy":
-        """Collect a hierarchy DIMENSION (bounded by construction — the
-        reference's analytic plans / account groups are small tables)."""
-        rows = dim.select(id_col, parent_col).collect()
-        return cls({r[0]: r[1] for r in rows})
-
     def descendants(self, root) -> list:
         """The subtree rooted at ``root``, INCLUDING root itself —
         osv.expression's child_of semantics. Iterative BFS with a seen

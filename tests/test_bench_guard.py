@@ -106,46 +106,6 @@ def test_ledger_bench_history_tolerates_non_dict_payload(tmp_path):
     assert "| r8 |" not in joined
 
 
-def test_publish_line_sheds_smallest_subfloor_queries_first():
-    """The stdout budget degrade sheds the SMALLEST-timed queries one
-    at a time, but ONLY those under the guard's 0.4s absolute floor —
-    they cannot trip the guard anyway, while shedding a guard-eligible
-    query would erode its reference. The r12 motivation: 66 queries at
-    2-dec measured 1795 chars against the 1900 budget, so r13's three
-    registrations would have crossed into the old all-or-nothing
-    omission rung."""
-    from bench import publish_line
-
-    # 90 sheddable sub-floor queries + 10 guard-eligible heavies
-    t = {f"q{i:03d}": 0.05 + i * 0.003 for i in range(90)}
-    t.update({f"h{i}": 1.5 + i for i in range(10)})
-    line = publish_line(t, 50.0, 3.0, [], 1, 0.1, budget=900)
-    d = json.loads(line)
-    assert len(line) <= 900
-    assert 0 < d["queries_dropped"] < 100 and not d["queries_omitted"]
-    # every guard-eligible query survives; the smallest sub-floor go
-    assert all(f"h{i}" in d["queries"] for i in range(10))
-    assert "q000" not in d["queries"] and "q089" in d["queries"]
-    assert d["n_queries"] == 100  # the true count survives the drop
-    # r17: the first shed names are published (hard cap 3, the reruns
-    # convention) so the driver's round diff can tell shed-sub-floor
-    # from dropped-from-bench — the PERF_r16 "dropped_from_bench"
-    # false positives. An uncapped list would defeat the budget
-    # degrade: naming a shed query costs nearly what publishing it
-    # does, so the loop could never converge and the whole dict
-    # was omitted (observed on the first r17 run).
-    assert "q000" in d["shed"] and len(d["shed"]) <= 3
-    assert all(n not in d["queries"] for n in d["shed"])
-
-    full = json.loads(publish_line(t, 50.0, 3.0, [], 1, 0.1, budget=10_000))
-    assert full["queries_dropped"] == 0 and len(full["queries"]) == 100
-
-    # budget unreachable even after shedding every sub-floor query:
-    # the whole dict is omitted rather than shedding a heavy
-    tiny = json.loads(publish_line(t, 50.0, 3.0, [], 1, 0.1, budget=10))
-    assert tiny["queries_omitted"] and tiny["queries"] == {}
-
-
 def test_prior_timings_per_query_lookback_survives_shedding(tmp_path):
     """A query shed from recent publications keeps its guard reference
     from the most recent rounds that DID publish it — persistent
@@ -172,21 +132,18 @@ def test_prior_timings_per_query_lookback_survives_shedding(tmp_path):
     _write(tmp_path, "BENCH_r12.json",
            {"parsed": {"queries": {"big": 1.0}, "queries_dropped": 1}})
     ref = _prior_timings(str(tmp_path))
-    # r13 ADVICE fix: tiny fell off the 4-round window, but a SUB-FLOOR
-    # query can be shed indefinitely — its last-known reference is
-    # carried from the most recent older round so a regression past the
-    # floor still trips the guard on its first regressed round
-    assert ref["tiny"] == 0.12
+    # tiny fell off the 4-round window: it ages out like any other
+    # query (every benched query is published, so none is absent for
+    # long while still benched)
+    assert "tiny" not in ref
     assert ref["big"] == 1.0  # min of its two MOST RECENT rounds (r11, r12)
 
 
 def test_prior_timings_above_floor_queries_still_age_out(tmp_path):
-    """The shed-query carry is restricted to SUB-FLOOR records: an
-    above-floor query absent from the 4-round window (retired from the
-    headline set, or a different machine era) must still age out — a
-    stale heavy reference resurrected forever is exactly what the
-    bound exists to prevent, and an above-floor query can never have
-    been shed (publish_line's invariant)."""
+    """A query absent from the 4-round window (retired from the
+    headline set, or a different machine era) ages out whatever its
+    timing — a stale reference resurrected forever is exactly what the
+    bound exists to prevent."""
     _write(tmp_path, "BENCH_r07.json",
            {"parsed": {"queries": {"heavy": 5.0, "tiny": 0.2}}})
     for r in range(9, 13):
@@ -194,7 +151,7 @@ def test_prior_timings_above_floor_queries_still_age_out(tmp_path):
                {"parsed": {"queries": {"big": 1.0}, "queries_dropped": 1}})
     ref = _prior_timings(str(tmp_path))
     assert "heavy" not in ref  # above-floor: aged out with its round
-    assert ref["tiny"] == 0.2  # sub-floor: carried as last-known
+    assert "tiny" not in ref  # sub-floor: no longer carried either
     assert ref["big"] == 1.0
 
 
@@ -203,7 +160,8 @@ def test_prior_timings_carry_respects_most_recent_pre_window_state(tmp_path):
     was above the floor (it slowed legitimately, published that, then
     retired) must age out — resurrecting an older sub-floor record
     from an earlier round would falsely trip the guard on the query's
-    genuine steady state if it is ever re-added."""
+    genuine steady state if it is ever re-added. Nothing before the
+    window is read at all."""
     _write(tmp_path, "BENCH_r05.json",
            {"parsed": {"queries": {"q": 0.2}}})   # ancient sub-floor
     _write(tmp_path, "BENCH_r06.json",
@@ -215,27 +173,20 @@ def test_prior_timings_carry_respects_most_recent_pre_window_state(tmp_path):
     assert "q" not in ref  # the r5 0.2 must NOT resurrect past r6's 0.6
 
 
-def test_publish_line_sheddability_agrees_with_published_rounding():
-    """r12 ADVICE boundary: sheddability is decided on the ROUNDED
-    value (what actually publishes) — a raw 0.398 publishes as 0.40, a
-    reference exactly at the guard floor, so it must NOT be shed as
-    sub-floor; a raw 0.394 publishes as 0.39 and may be."""
-    from bench import publish_line
+def test_publish_line_fits_every_headline_name():
+    """The curated HEADLINE fits the driver's bounded stdout tail by
+    construction (1900 chars, headroom under the observed ~2000-char
+    tail), so every benched query is published and none is shed — the
+    shed's missing names were flagged as dropped_from_bench by the
+    driver's round diff (PERF_r16/r17). Worst-case widths: 4-char
+    timings, a 3-digit total, the three longest names as reruns, 3
+    attempts."""
+    from bench import HEADLINE, publish_line
 
-    t = {"edge": 0.398, "small": 0.394, "heavy": 5.0}
-    # budget forces shedding; only 'small' is eligible
-    line = publish_line(t, 6.0, 5.0, [], 1, 0.1, budget=len(
-        json.dumps({"metric": "headline_queries_total_time", "value": 6.0,
-                    "unit": "sec", "queries": {"heavy": 5.0, "edge": 0.4},
-                    "queries_dropped": 1, "shed": ["small"],
-                    "queries_omitted": False,
-                    "core_r1_subset_time": 5.0, "n_queries": 3,
-                    "reruns": [], "n_reruns": 0, "attempts": 1, "sf": 0.1},
-                   separators=(",", ":"))))
+    t = {n: 9.99 for n in HEADLINE}
+    longest = sorted(HEADLINE, key=len, reverse=True)[:3]
+    line = publish_line(t, 999.99, 99.99, longest, 3, 0.1)
     d = json.loads(line)
-    # the line MUST fit by shedding (a vacuous omitted-dict pass would
-    # hide the boundary regression this test exists to pin)
-    assert d["queries"] and not d["queries_omitted"]
-    assert "edge" in d["queries"] and d["queries"]["edge"] == 0.4
-    assert "small" not in d["queries"]
-    assert d["queries_dropped"] == 1
+    assert len(line) <= 1900, len(line)
+    assert set(d["queries"]) == set(HEADLINE)
+    assert d["queries_dropped"] == 0 and d["n_queries"] == len(HEADLINE)

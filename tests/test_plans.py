@@ -179,6 +179,34 @@ def test_column_groups_fused_to_two_scans(spark, queries):
         assert fact_scans <= 2, f"{name}: {fact_scans} lineitem scans"
 
 
+def test_respread_plain_arm_drops_exactly_the_spread_exchanges(spark, queries):
+    """tools/ab_respread.py's plain arm (`tables.respread_narrow`
+    swapped for identity) must remove the respread from exactly the
+    call-time spread sites (a1_hash_agg, move_lines(spread=True) under
+    hg_column_groups) and leave the plain ledger frame alone — and the
+    restore must bring them back, or the tool times one plan in both
+    arms (the r16 ADVICE bug). Counts Repartition nodes of the
+    optimized plan, not plan text: the text carries expression ids."""
+    from tools.ab_respread import set_spread
+
+    def reparts() -> dict[str, int]:
+        return {
+            n: queries[n](spark, SF_DIR)._jdf.queryExecution()
+            .optimizedPlan().toString().count("Repartition")
+            for n in ("a1_hash_agg", "hg_column_groups", "gl_report")
+        }
+
+    spread = reparts()
+    try:
+        set_spread(spark, False)
+        plain = reparts()
+    finally:
+        set_spread(spark, True)
+    assert spread == {"a1_hash_agg": 1, "hg_column_groups": 2, "gl_report": 0}
+    assert plain == dict.fromkeys(spread, 0)
+    assert reparts() == spread
+
+
 def test_child_of_in_list_pushes_down(spark, queries):
     """The expanded child_of subtree is a literal IN that reaches the
     parquet scans — the hierarchy dim is never joined for the filter."""

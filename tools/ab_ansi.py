@@ -2,91 +2,30 @@
 `spark.sql.ansi.enabled=true`, added r14) against the +32% uniform
 core-subset drift in BENCH_r14 (r14 verdict, "What's wrong #1").
 
-Protocol (the established adjudication shape from the r13/r14 perf
-notes, tightened): ONE session, same JVM / page cache / JIT for both
-arms, because `spark.sql.ansi.enabled` is a runtime SQL conf — each
-timed pass rebuilds the query's DataFrame fresh, so analysis picks up
-the arm's conf. Per query: one untimed warmup pass per arm, then
-``rounds`` interleaved A-B passes (A=pin on, B=off), best-of per arm.
-Relative verdict only — absolute numbers are not comparable to
-bench.py's 70-query session.
+`spark.sql.ansi.enabled` is a runtime SQL conf and every timed pass
+rebuilds the query's DataFrame fresh, so analysis picks up the arm's
+conf within one session. Arm A = pin on, B = off. Protocol:
+bench.ab_main.
 
 Usage: python tools/ab_ansi.py [sf_dir] [rounds]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entry
-from etl_staging_spark.session import get_spark
+import bench  # noqa: E402
 
-CORE = [
-    "a1_hash_agg", "j1_star_join_revenue", "w2_running_balance",
-    "w1_gl_initial_and_period", "a3_aged_bucket_pivot",
-    "j3_lateral_agg_join", "j7_asof_join", "a9_ledger_netting",
-    "o2_pagination",
-]
 LLM_MOVERS = ["dedup_minhash_lsh", "sim_cosine_topk", "m4_serial_rebuild"]
 
 
-def _run(spark, fn, sf_dir) -> float:
-    t0 = time.monotonic()
-    fn(spark, sf_dir).collect()
-    return time.monotonic() - t0
-
-
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-    spark = get_spark("ab-ansi")
-    qs = entry.queries()
-    names = [n for n in CORE + LLM_MOVERS if n in qs]
-
-    def set_ansi(on: bool) -> None:
-        spark.conf.set("spark.sql.ansi.enabled", "true" if on else "false")
-
-    results: dict[str, dict] = {}
-    for name in names:
-        fn = qs[name]
-        # shape warmup, one untimed pass per arm (page cache + codegen)
-        for on in (True, False):
-            set_ansi(on)
-            _run(spark, fn, sf_dir)
-        a, b = [], []
-        for _ in range(rounds):
-            set_ansi(True)
-            a.append(_run(spark, fn, sf_dir))
-            set_ansi(False)
-            b.append(_run(spark, fn, sf_dir))
-        results[name] = {
-            "ansi_on_best": round(min(a), 3),
-            "ansi_off_best": round(min(b), 3),
-            "ansi_on_all": [round(x, 3) for x in a],
-            "ansi_off_all": [round(x, 3) for x in b],
-        }
-        print(
-            f"{name}: on={min(a):.3f} off={min(b):.3f} "
-            f"delta={(min(a) - min(b)) / min(b) * 100:+.1f}%",
-            flush=True,
-        )
-    set_ansi(True)  # leave the session in the pinned state
-    on_sum = sum(r["ansi_on_best"] for r in results.values())
-    off_sum = sum(r["ansi_off_best"] for r in results.values())
-    print(json.dumps({
-        "sf_dir": sf_dir,
-        "rounds": rounds,
-        "ansi_on_best_sum": round(on_sum, 3),
-        "ansi_off_best_sum": round(off_sum, 3),
-        "delta_pct": round((on_sum - off_sum) / off_sum * 100, 1),
-        "queries": results,
-    }))
+def set_ansi(spark, on: bool) -> None:
+    spark.conf.set("spark.sql.ansi.enabled", "true" if on else "false")
 
 
 if __name__ == "__main__":
-    main()
+    bench.ab_main("ab-ansi", set_ansi, bench.CORE_R1 + LLM_MOVERS,
+                  ("ansi_on", "ansi_off"))

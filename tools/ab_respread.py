@@ -1,105 +1,51 @@
-"""Interleaved A/B of the fact-scan respread (`engines/ledger.py
-SPREAD_FACT`, r16): single-row-group scans serialize the whole
-broadcast-join + decimal-conv + partial-aggregate map side on one core;
-the respread spreads surviving scan rows to defaultParallelism (no-op
-at real scale).
+"""Interleaved A/B of the keyed fact-scan respread (r16): single-row-
+group scans serialize the whole broadcast-join + decimal-conv +
+partial-aggregate map side on one core; `tables.respread_narrow`
+spreads surviving scan rows to defaultParallelism (no-op at real
+scale).
 
-VERDICT RECORDED IN OPTIMIZATION_r16.md: with the flag gating
-move_lines itself, this A/B measured a +19% net LOSS across the 14
-ledger entries below (spread 16.7 s vs plain 14.0 s, losing on 10/14)
-— the consumers' partial aggregates collapse rows before any exchange,
-and per-scope collect jobs re-pay the shuffle. The move_lines gate was
-REVERTED; SPREAD_FACT now gates only the single-pass heavy-aggregate
-consumers (a1_hash_agg, −59% with the keyed spread), so re-running
-this tool today A/Bs exactly those.
+VERDICT RECORDED IN OPTIMIZATION_r16.md: spreading move_lines for
+every consumer measured a +19% net LOSS across 14 ledger entries (the
+consumers' partial aggregates collapse rows before any exchange, and
+per-scope collect jobs re-pay the shuffle), so that spread was
+REVERTED. The respread now stays only where this A/B shows a win: the
+single-pass heavy-aggregate consumers `a1_hash_agg` (−59% with the
+keyed spread) and `hg_column_groups` (move_lines(spread=True), −11%) —
+the DEFAULT list, the only catalog entries whose plan the plain arm
+changes.
 
-Protocol: ab_ansi.py's (one session, same JVM/page-cache/JIT, per-arm
-warmup, N interleaved passes, best-of per arm), with the noop sink as
-the timed action (bench.py's methodology).
+Plain arm: `tables.respread_narrow` swapped for identity. Only
+`ledger.move_lines` and `a1_hash_agg` import that name at call time,
+so the swap reaches exactly the spread sites above (modules that bind
+it at import keep theirs); `_LEDGER_CACHE` is cleared on every flip so
+a memoized frame never times the other arm's plan (the r16 ADVICE
+bug). Protocol: bench.ab_main.
 
 Usage: python tools/ab_respread.py [sf_dir] [rounds] [query ...]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entry
-from etl_staging_spark.session import get_spark
-from etl_staging_spark.engines import ledger
+import bench  # noqa: E402
+from etl_staging_spark import tables  # noqa: E402
+from etl_staging_spark.engines import ledger  # noqa: E402
 
-DEFAULT = [
-    "a1_hash_agg",
-    "hg_column_groups",
-    "gl_report",
-    "es_report",
-    "aged_report",
-    "e3_account_codes",
-    "e4_carryover",
-    "m4_serial_rebuild",
-    "a9_ledger_netting",
-    "w1_gl_initial_and_period",
-    "a3_aged_bucket_pivot",
-    "analytic_report",
-    "hier_rollup",
-    "w2_running_balance",
-]
+DEFAULT = ["a1_hash_agg", "hg_column_groups"]
+
+_RESPREAD = tables.respread_narrow
 
 
-def _run(spark, fn, sf_dir) -> float:
-    t0 = time.monotonic()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.monotonic() - t0
-
-
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-    names = sys.argv[3:] or DEFAULT
-    spark = get_spark("ab-respread")
-    qs = entry.queries()
-
-    # move_lines memoizes on the EFFECTIVE spread (ledger.py keys on
-    # `spread and SPREAD_FACT` since r17), so flipping the flag selects
-    # the right cached plan per arm. Belt-and-braces: clear the memo on
-    # every flip anyway so a stale entry can never time the wrong arm
-    # again (the r16 ADVICE bug), and restore the flag on ANY exit so an
-    # exception can't leave the module in the last arm's state.
-    def _arm(on: bool) -> None:
-        ledger.SPREAD_FACT = on
-        ledger._LEDGER_CACHE.clear()
-
-    results: dict[str, dict] = {}
-    try:
-        for name in names:
-            fn = qs[name]
-            for on in (True, False):
-                _arm(on)
-                _run(spark, fn, sf_dir)
-            a, b = [], []
-            for _ in range(rounds):
-                _arm(True)
-                a.append(_run(spark, fn, sf_dir))
-                _arm(False)
-                b.append(_run(spark, fn, sf_dir))
-            results[name] = {"spread_best": round(min(a), 3), "plain_best": round(min(b), 3)}
-            print(
-                f"{name}: spread={min(a):.3f} plain={min(b):.3f} "
-                f"delta={(min(a) - min(b)) / min(b) * 100:+.1f}%",
-                flush=True,
-            )
-            spark.catalog.clearCache()
-    finally:
-        _arm(True)
-    on_sum = sum(r["spread_best"] for r in results.values())
-    off_sum = sum(r["plain_best"] for r in results.values())
-    print(json.dumps({"spread_sum": round(on_sum, 3), "plain_sum": round(off_sum, 3)}))
+def set_spread(spark, on: bool) -> None:
+    """Arm setter: the real respread (on) or identity (off)."""
+    tables.respread_narrow = _RESPREAD if on else (lambda df, *a, **k: df)
+    ledger._LEDGER_CACHE.clear()
 
 
 if __name__ == "__main__":
-    main()
+    bench.ab_main("ab-respread", set_spread, sys.argv[3:] or DEFAULT,
+                  ("spread", "plain"))

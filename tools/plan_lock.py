@@ -29,7 +29,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 LOCK_PATH = os.path.join(os.path.dirname(__file__), "..", "PLAN_LOCK.json")
 SF_DIR = "/root/testdata/sf0.001"

@@ -20,12 +20,14 @@ CI; the committed evidence lives in COVERAGE.md.
 from __future__ import annotations
 
 import json
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from bench import timed_run  # noqa: E402
 
 
 
@@ -403,13 +405,8 @@ def run_probe(
         n = frame.count()  # also materializes the cache
         for name, fn in fns.items():
             # warm the shape once, then best-of-2
-            fn(frame).write.format("noop").mode("overwrite").save()
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                fn(frame).write.format("noop").mode("overwrite").save()
-                best = min(best, time.time() - t0)
-            results[name][r] = round(best, 3)
+            runs = [sum(timed_run(lambda: fn(frame))) for _ in range(3)]
+            results[name][r] = round(min(runs[1:]), 3)
             if not quiet:
                 print(json.dumps({"op": name, "replicas": r, count_key: n,
                                   "sec": results[name][r]}), flush=True)

@@ -17,7 +17,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Import catalog modules for their registration side effects.
 from etl_staging_spark.queries import registry  # noqa: E402

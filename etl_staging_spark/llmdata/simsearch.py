@@ -112,17 +112,11 @@ def with_norm(df: DataFrame, vec_col: str = "embedding", out: str = "nrm") -> Da
 from ..tables import respread_narrow as _respread_narrow  # noqa: E402
 
 
-# Deployment knob for the narrow-checkpoint pattern (cluster_profile,
-# cluster_balanced_sample): True materializes the narrow per-row frame
-# once with an eager localCheckpoint so the broadcast-centroid fold
-# runs ONE scan instead of one per downstream pass (measured 2.5-2.6x
-# at sf0.1; at 100 TB the gap is the corpus width).
-NARROW_EAGER_CHECKPOINT = True
-
-
 def _narrow_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint of a NARROW (~16-20 bytes/row) frame —
-    with two deployment caveats the speedup buys:
+    """Eager localCheckpoint of a NARROW (~16-20 bytes/row) frame, so
+    the broadcast-centroid fold runs ONE scan instead of one per
+    downstream pass (measured 2.5-2.6x at sf0.1; at 100 TB the gap is
+    the corpus width) — with two deployment caveats the speedup buys:
 
     - localCheckpoint blocks live in EXECUTOR-LOCAL storage and are
       not fault-tolerant: on a real cluster, losing an executor (or a
@@ -130,16 +124,8 @@ def _narrow_checkpoint(df: DataFrame) -> DataFrame:
       recomputing lineage.
     - ``eager=True`` makes frame CONSTRUCTION side-effecting: the full
       assignment scan runs even if the caller never executes the
-      result.
-
-    Cluster deployments that prefer reliable recompute (or lazy
-    construction) over the single-scan speedup set
-    ``NARROW_EAGER_CHECKPOINT = False`` — output is bit-identical;
-    each downstream pass then re-runs the broadcast-centroid fold
-    through normal lineage (tested both ways)."""
-    if NARROW_EAGER_CHECKPOINT:
-        return df.localCheckpoint(eager=True)
-    return df
+      result."""
+    return df.localCheckpoint(eager=True)
 
 
 def _sign_nonneg(a: Column, b: Column) -> Column:
@@ -752,7 +738,6 @@ def mt_dup_pairs(
     vec_col: str = "embedding",
     cand_filter: Column | None = None,
     d1_pred: Column | None = None,
-    candidates_only: bool = False,
 ) -> DataFrame:
     """Embedding near-dup pairs under MULTI-TABLE sign-LSH discovery
     (d1 < d2, cosine >= threshold) — the high-recall configuration:
@@ -766,25 +751,16 @@ def mt_dup_pairs(
     restricts the smaller-id side before the bucket join, cutting join
     volume by the panel fraction). Same bucketed equi-join + shared
     exact-decimal verify as every dup path; never all-pairs."""
-    # ONE fused corpus pass (r17, guide §2.4): discovery-only callers
-    # need just the keys, but the verify path needs norms too — compute
-    # both in the same persisted projection so the verify branch does
-    # not re-read the corpus (the r16 shape persisted a keys frame AND
-    # a norms frame). Buckets, pairs and verify are expression-
-    # identical; only the pass count changes.
-    if candidates_only:
-        keyed = _table_keys_frame(
-            emb, F.lit(False), dim, n_tables, bits, id_col, vec_col
-        ).persist()
-        base = None
-    else:
-        keys_k = _mt_keys_udf(dim, n_tables, bits)
-        base = (
-            with_norm(_respread_narrow(emb), vec_col)
-            .withColumn("__keys", keys_k(F.col(vec_col)))
-            .persist()
-        )
-        keyed = base.select(F.col(id_col), F.explode("__keys").alias("bkt"))
+    # ONE fused corpus pass (r17, guide §2.4): keys and the verify
+    # side's norms come from the same persisted projection, so the
+    # verify branch does not re-read the corpus
+    keys_k = _mt_keys_udf(dim, n_tables, bits)
+    base = (
+        with_norm(_respread_narrow(emb), vec_col)
+        .withColumn("__keys", keys_k(F.col(vec_col)))
+        .persist()
+    )
+    keyed = base.select(F.col(id_col), F.explode("__keys").alias("bkt"))
     a_src = keyed.where(d1_pred) if d1_pred is not None else keyed
     a = a_src.select(F.col(id_col).alias("d1"), "bkt")
     b = keyed.select(F.col(id_col).alias("d2"), "bkt")
@@ -792,8 +768,6 @@ def mt_dup_pairs(
     if cand_filter is not None:
         cand = cand.where(cand_filter)
     cand = cand.distinct()
-    if candidates_only:
-        return pin(cand, keyed)
     out = _verify_pairs(cand, base, threshold, id_col, vec_col).select(
         "d1", "d2", pround(F.col("cos_raw"), 6).alias("cosine")
     )
@@ -1580,8 +1554,7 @@ def cluster_profile(
     # 3.07 s -> 1.23 s, output bit-identical; ~20 bytes/row
     # checkpointed vs re-scanning the vectors — the same
     # narrow-checkpoint argument as `cluster_balanced_sample`; see
-    # `_narrow_checkpoint` for the executor-loss caveat and the
-    # NARROW_EAGER_CHECKPOINT opt-out)
+    # `_narrow_checkpoint` for the executor-loss caveat)
     per = _narrow_checkpoint(normed.select(
         F.array_sort(scored).getItem(0).alias("best"),
         F.col(label_col).alias("label"),
@@ -1671,7 +1644,7 @@ def cluster_balanced_sample(
     id-keyed semi-join when ``keep`` is given). Checkpoint blocks are
     freed when the returned frame's references drop (no CacheManager
     entry pinning them across calls); see `_narrow_checkpoint` for the
-    executor-loss caveat and the NARROW_EAGER_CHECKPOINT opt-out."""
+    executor-loss caveat."""
     from .sampling import (
         _threshold_filter, mixture_rates, temperature_weights,
     )

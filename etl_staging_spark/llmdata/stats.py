@@ -1070,9 +1070,6 @@ def pii_rate_by_source(
     return finish_pii_card(pii_counts(docs, source_col, text_col))
 
 
-PII_COUNT_COLS = ("n_docs", "n_emails", "n_phones", "n_ids", "n_pii_docs")
-
-
 def pii_counts(
     docs: DataFrame,
     source_col: str = "source",
@@ -1211,9 +1208,6 @@ def charclass_profile_card(
     return finish_charclass_card(
         charclass_counts(docs, source_col, text_col)
     )
-
-
-CHARCLASS_COUNT_COLS = ("n_docs", "n_chars", "n_alpha", "n_digit", "n_space")
 
 
 def charclass_counts(
@@ -1388,9 +1382,6 @@ def token_fertility_by_lang(docs: DataFrame) -> DataFrame:
     per-language sums incrementally and re-derives the ratio per
     batch."""
     return finish_fertility_card(fertility_counts(docs))
-
-
-FERTILITY_COUNT_COLS = ("n_docs", "n_chars", "n_tokens")
 
 
 def fertility_counts(docs: DataFrame) -> DataFrame:
@@ -1703,9 +1694,6 @@ def truncation_loss_card(
     )
 
 
-TRUNCATION_COUNT_COLS = ("n_docs", "n_tokens", "n_truncated", "tokens_lost")
-
-
 def truncation_counts(
     docs: DataFrame,
     max_len: int = 512,
@@ -1863,9 +1851,6 @@ def source_concentration_card(
     return finish_concentration_card(
         concentration_counts(docs, source_col, text_col)
     )
-
-
-CONCENTRATION_COUNT_COLS = ("n_docs_s", "n_tok_s")
 
 
 def concentration_counts(
@@ -2110,9 +2095,6 @@ def quality_by_lang(
     -> ONE map-side-combinable aggregate on the bounded
     #profiles+1 key."""
     return finish_quality_by_lang(quality_lang_counts(docs, low_cut, text_col))
-
-
-QUALITY_LANG_COUNT_COLS = ("n_docs", "q_micro", "qn", "low_q_docs")
 
 
 def quality_lang_counts(

@@ -3619,32 +3619,44 @@ def ttr_card_q(spark, sf_dir):
     return stats.ttr_card(load(spark, sf_dir, "documents"))
 
 
+from ..streaming.ingest import CARDS, AdditiveCard  # noqa: E402
+
+
+def _stream_fold(card: AdditiveCard, docs, emb=None, **params):
+    """Batch twin of a card stream's maintenance path, certified by the
+    batch card's own DuckDB oracle: ``docs`` splits into three
+    micro-batches on pmod(doc_id, 3) — the arrival order a stream might
+    deliver — each batch's ADDITIVE delta is ``card.counts(batch,
+    **params)``, and the union is merged by THE shared
+    `streaming.ingest._fold` and presented by ``card.finish``, the same
+    two functions the live stream and `compact_card_state` run. With
+    ``emb`` its vectors split on pmod(vec_id, 3) alongside, and each
+    delta is ``card.counts(docs_batch, emb_batch, **params)``.
+    Hash-matching the oracle certifies the fold/finish additivity that
+    the streaming pytests can only pin Spark-vs-Spark; the delta log
+    never touches disk here (its parquet round-trip, checkpoint
+    ownership and replay idempotence are tests/test_streaming.py's
+    subject)."""
+
+    def split(df, id_col):
+        # NULL-safe: pmod(NULL, 3) is NULL and would match no batch,
+        # silently dropping a NULL-id row the oracle counts
+        bucket = F.coalesce(F.pmod(id_col, F.lit(3)), F.lit(0))
+        return [df.where(bucket == b) for b in range(3)]
+
+    docs_b = split(docs, "doc_id")
+    batches = zip(docs_b) if emb is None else zip(docs_b, split(emb, "vec_id"))
+    deltas = [card.counts(*b, **params) for b in batches]
+    return card.refresh(deltas[0].unionByName(deltas[1]).unionByName(deltas[2]))
+
+
 @query("ttr_card_stream_fold", oracle=o_ttr_card())
 def ttr_card_stream_fold_q(spark, sf_dir):
-    """Batch twin of the TTR STREAM's maintenance path (new r15 — the
-    last DISTINCT fold shape in the additive-card family without a
-    driver row): where the other card streams fold bounded-key COUNT
-    deltas, the TTR stream folds the per-source VOCABULARY state
-    (source, token, cnt), because types and hapax counts are not
-    additive but the occurrence counts they derive from are. Three
-    pmod(doc_id, 3) micro-batch deltas (`stats.ttr_token_counts`),
-    merged by THE shared `streaming.ingest._fold` — a token hapax in
-    two different batches must come out cnt=2, NOT hapax — and
-    presented by `stats.finish_ttr_card`, hash-matched against the
-    batch card's own DuckDB oracle."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.ttr_token_counts(docs.where(bucket == b)).withColumn(
-            "batch_id", F.lit(b)
-        )
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(log.drop("batch_id"), ("source", "token"), ("cnt",))
-    return stats.finish_ttr_card(merged)
+    """Batch twin of the TTR stream (`_stream_fold`): the one card in
+    the family whose folded state is the per-source VOCABULARY
+    (source, token, cnt) rather than bounded-key counts — a token
+    hapax in two different batches must come out cnt=2, NOT hapax."""
+    return _stream_fold(CARDS["ttr"], load(spark, sf_dir, "documents"))
 
 
 @query("lang_source_matrix", oracle=o_lang_source_matrix())
@@ -3688,36 +3700,9 @@ def vocab_coverage_by_source_q(spark, sf_dir):
 
 @query("length_card_stream_fold", oracle=o_length_histogram_card())
 def length_card_stream_fold_q(spark, sf_dir):
-    """Batch twin of the STREAMING card-maintenance path (registered
-    r13, VERDICT r12 item 7): the documents table is split into three
-    micro-batches (pmod(doc_id, 3) — the arrival order a stream might
-    deliver), each batch's ADDITIVE delta (`stats.length_hist_counts`)
-    is tagged with its batch_id exactly as `additive_card_stream`
-    writes its delta-log partitions, and the union is merged by THE
-    shared `streaming.ingest._fold` and presented by
-    `stats.finish_length_card` — the same two functions the live
-    stream and `compact_card_state` run. Hash-matching the batch
-    card's own DuckDB oracle certifies the fold/finish semantics
-    (additivity across batches) that the streaming pytests can only
-    pin Spark-vs-Spark. The log never touches disk here: the
-    partitioned-parquet round-trip, checkpoint ownership, and replay
-    idempotence are the streaming tests' subject
-    (tests/test_streaming.py)."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    # NULL-safe split: pmod(NULL, 3) is NULL and would match no batch,
-    # silently dropping a NULL-doc_id doc the oracle counts
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.length_hist_counts(
-            docs.where(bucket == b)
-        ).withColumn("batch_id", F.lit(b))
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(log.drop("batch_id"), ("source", "lo_tokens"), ("n_docs",))
-    return stats.finish_length_card(merged)
+    """Batch twin of the length-histogram stream (`_stream_fold`;
+    registered r13, VERDICT r12 item 7)."""
+    return _stream_fold(CARDS["length"], load(spark, sf_dir, "documents"))
 
 
 def o_pii_rate_by_source() -> str:
@@ -4198,26 +4183,8 @@ def pii_rate_by_source_q(spark, sf_dir):
 
 @query("pii_card_stream_fold", oracle=o_pii_rate_by_source())
 def pii_card_stream_fold_q(spark, sf_dir):
-    """Batch twin of the PII STREAM's maintenance path (new r16, the
-    `concentration_card_stream_fold` pattern): three pmod(doc_id, 3)
-    micro-batches, each batch's additive per-source delta
-    (`stats.pii_counts`), merged by THE shared `streaming.ingest._fold`
-    and presented by `stats.finish_pii_card` — hash-matching the batch
-    card's own DuckDB oracle certifies the fold/finish additivity with
-    a driver row."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.pii_counts(docs.where(bucket == b)).withColumn(
-            "batch_id", F.lit(b)
-        )
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(log.drop("batch_id"), ("source",), stats.PII_COUNT_COLS)
-    return stats.finish_pii_card(merged)
+    """Batch twin of the PII stream (`_stream_fold`)."""
+    return _stream_fold(CARDS["pii"], load(spark, sf_dir, "documents"))
 
 
 @query("dup_token_rate_by_source", oracle=o_dup_token_rate_by_source())
@@ -4270,28 +4237,8 @@ def sentence_stats_card_q(spark, sf_dir):
 
 @query("charclass_card_stream_fold", oracle=o_charclass_profile_card())
 def charclass_card_stream_fold_q(spark, sf_dir):
-    """Batch twin of the charclass STREAM's maintenance path (new r16,
-    the `concentration_card_stream_fold` pattern): three
-    pmod(doc_id, 3) micro-batches, each batch's additive per-source
-    character-class sums (`stats.charclass_counts`), merged by THE
-    shared `streaming.ingest._fold` and presented by
-    `stats.finish_charclass_card` — hash-matched against the batch
-    card's own DuckDB oracle."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.charclass_counts(docs.where(bucket == b)).withColumn(
-            "batch_id", F.lit(b)
-        )
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(
-        log.drop("batch_id"), ("source",), stats.CHARCLASS_COUNT_COLS
-    )
-    return stats.finish_charclass_card(merged)
+    """Batch twin of the charclass stream (`_stream_fold`)."""
+    return _stream_fold(CARDS["charclass"], load(spark, sf_dir, "documents"))
 
 
 @query("token_fertility_by_lang", oracle=o_token_fertility_by_lang())
@@ -4307,29 +4254,9 @@ def token_fertility_by_lang_q(spark, sf_dir):
 
 @query("token_fertility_stream_fold", oracle=o_token_fertility_by_lang())
 def token_fertility_stream_fold_q(spark, sf_dir):
-    """Batch twin of the fertility STREAM's maintenance path (new r16,
-    the `concentration_card_stream_fold` pattern): three
-    pmod(doc_id, 3) micro-batches, each batch's additive per-language
-    (docs, chars, tokens) delta (`stats.fertility_counts` — the
-    lang-ID projection runs per batch, as the stream's does), merged
-    by THE shared `streaming.ingest._fold` and presented by
-    `stats.finish_fertility_card` — hash-matched against the batch
-    card's own DuckDB oracle."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.fertility_counts(docs.where(bucket == b)).withColumn(
-            "batch_id", F.lit(b)
-        )
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(
-        log.drop("batch_id"), ("pred_lang",), stats.FERTILITY_COUNT_COLS
-    )
-    return stats.finish_fertility_card(merged)
+    """Batch twin of the fertility stream (`_stream_fold`): the lang-ID
+    projection runs per batch, as the stream's does."""
+    return _stream_fold(CARDS["fertility"], load(spark, sf_dir, "documents"))
 
 
 @query("length_quality_joint_card", oracle=o_length_quality_joint_card())
@@ -4387,29 +4314,13 @@ def truncation_loss_card_q(spark, sf_dir):
 
 @query("truncation_card_stream_fold", oracle=o_truncation_loss_card(64))
 def truncation_card_stream_fold_q(spark, sf_dir):
-    """Batch twin of the truncation STREAM's maintenance path (new
-    r16, the `concentration_card_stream_fold` pattern): three
-    pmod(doc_id, 3) micro-batches, each batch's additive per-source
-    token/truncation sums at the FIXED max_len=64 the batch card pins
-    (`stats.truncation_counts` — max_len is part of the state's
-    identity, matching the stream's `_guard_card_params` contract),
-    merged by THE shared `streaming.ingest._fold` and presented by
-    `stats.finish_truncation_card` — hash-matched against the batch
-    card's own DuckDB oracle."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.truncation_counts(docs.where(bucket == b), max_len=64)
-        .withColumn("batch_id", F.lit(b))
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(
-        log.drop("batch_id"), ("source",), stats.TRUNCATION_COUNT_COLS
+    """Batch twin of the truncation stream (`_stream_fold`) at the
+    FIXED max_len=64 the batch card pins — max_len is part of the
+    state's identity, matching the stream's `_guard_card_params`
+    contract."""
+    return _stream_fold(
+        CARDS["truncation"], load(spark, sf_dir, "documents"), max_len=64
     )
-    return stats.finish_truncation_card(merged)
 
 
 @query("source_signature_terms", oracle=o_source_signature_terms())
@@ -4655,62 +4566,48 @@ def mixture_cluster_share(spark, sf_dir):
     )
 
 
+def _pinned_mix_centroids(emb) -> list:
+    """The mixture card's 8 centroids, pinned from the full embeddings
+    as literals (bit-identical to the data-derived rule)."""
+    cent_arrs, _ = simsearch._resolve_centroids(
+        emb, None, 8, "vec_id", "embedding"
+    )
+    return [cent_arrs[i] for i in sorted(cent_arrs)]
+
+
 @query(
     "mixture_cluster_share_fold", oracle=o_mixture_cluster_share(_MIX_TARGET)
 )
 def mixture_cluster_share_fold(spark, sf_dir):
     """Incremental twin of `mixture_cluster_share` (new r16 — the
     card-stream fold pattern applied to the mixture family): docs AND
-    vectors split into three pmod(id, 3) micro-batches, each batch
-    assigned under centroids PINNED from the full embeddings (the
-    fixed-geometry contract incremental drops require — pinned
-    literals are bit-identical to the data-derived rule, the decimal-
-    norm replica), the two ADDITIVE states — per-cell vector counts
-    and the (source, cell) occupancy matrix — merged by THE shared
-    `streaming.ingest._fold`, and the card finished from the folded
-    state alone (`cluster_share_mixture_from_state`: O(#sources x
-    #cells) driver math + the keep filter; no vector re-scan).
-    Hash-matching the batch card's own oracle certifies the
-    state/finish additivity with a driver row."""
-    from ..streaming.ingest import _fold
-
+    vectors split into three micro-batches (`_stream_fold` with
+    ``emb``), each batch assigned under centroids PINNED from the full
+    embeddings (the fixed-geometry contract incremental drops require
+    — pinned literals are bit-identical to the data-derived rule, the
+    decimal-norm replica), the two ADDITIVE states — per-cell vector
+    counts and the (source, cell) occupancy matrix — each folded, and
+    the card finished from the folded state alone
+    (`cluster_share_mixture_from_state`: O(#sources x #cells) driver
+    math + the keep filter; no vector re-scan)."""
     docs = load(spark, sf_dir, "documents")
     emb = load(spark, sf_dir, "embeddings")
-    cent_arrs, _ = simsearch._resolve_centroids(
-        emb, None, 8, "vec_id", "embedding"
-    )
-    cents = [cent_arrs[i] for i in sorted(cent_arrs)]
-    dbucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    vbucket = F.coalesce(F.pmod("vec_id", F.lit(3)), F.lit(0))
-    cell_batches, mat_batches = [], []
-    for b in range(3):
-        emb_b = emb.where(vbucket == b)
-        docs_b = docs.where(dbucket == b)
-        cell_batches.append(
-            simsearch.cluster_cell_counts(emb_b, centroids=cents)
-        )
-        mat_batches.append(
-            simsearch.cluster_source_cell_matrix(
-                docs_b, emb_b, centroids=cents
-            )
-        )
-    cells = _fold(
-        cell_batches[0].unionByName(cell_batches[1]).unionByName(
-            cell_batches[2]
+    cents = _pinned_mix_centroids(emb)
+    cells = _stream_fold(AdditiveCard(
+        lambda _docs_b, emb_b: simsearch.cluster_cell_counts(
+            emb_b, centroids=cents
         ),
-        ("cell",),
-        ("n_vecs",),
-    )
-    matrix = _fold(
-        mat_batches[0].unionByName(mat_batches[1]).unionByName(
-            mat_batches[2]
+        ("cell",), ("n_vecs",), lambda folded: folded,
+    ), docs, emb)
+    return _stream_fold(AdditiveCard(
+        lambda docs_b, emb_b: simsearch.cluster_source_cell_matrix(
+            docs_b, emb_b, centroids=cents
         ),
-        ("source", "cell"),
-        ("n_docs",),
-    )
-    return simsearch.cluster_share_mixture_from_state(
-        docs, cells, matrix, _MIX_TARGET
-    )
+        ("source", "cell"), ("n_docs",),
+        lambda matrix: simsearch.cluster_share_mixture_from_state(
+            docs, cells, matrix, _MIX_TARGET
+        ),
+    ), docs, emb)
 
 
 @query(
@@ -4720,44 +4617,30 @@ def mixture_cluster_share_fold(spark, sf_dir):
 def mixture_cluster_share_state_card(spark, sf_dir):
     """The card-stream state lifecycle of the mixture family (the r17
     plan's remaining on-disk item, certified batch-side): docs and
-    vectors split into three pmod micro-batches, each batch reduced to
-    the single-log three-grain additive delta
-    (`simsearch.cluster_share_state_delta`: per-cell vector counts +
-    (source, cell) occupancy + the (source, keep-bucket) histogram,
-    ONE shared assignment pass under centroids pinned from the full
-    embeddings), the deltas merged by THE shared
-    `streaming.ingest._fold`, and the card finished from the folded
-    state ALONE (`cluster_share_card_from_state_log`). Unlike
+    vectors split into three micro-batches (`_stream_fold` with
+    ``emb``), each batch reduced to the single-log three-grain
+    additive delta (`simsearch.cluster_share_state_delta`: per-cell
+    vector counts + (source, cell) occupancy + the (source,
+    keep-bucket) histogram, ONE shared assignment pass under centroids
+    pinned from the full embeddings), and the card finished from the
+    folded state ALONE (`cluster_share_card_from_state_log`). Unlike
     `mixture_cluster_share_fold`, even n_kept comes from the folded
     bucket histogram — Σ_{b<t_s} hist(s, b) — so the finish touches
     zero corpus rows; hash-matching the batch card's unchanged oracle
     certifies that the histogram IS the keep filter, bit-for-bit.
     This is exactly the state `cluster_share_card_stream` maintains
     on disk per micro-batch."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
     emb = load(spark, sf_dir, "embeddings")
-    cent_arrs, _ = simsearch._resolve_centroids(
-        emb, None, 8, "vec_id", "embedding"
-    )
-    cents = [cent_arrs[i] for i in sorted(cent_arrs)]
-    dbucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    vbucket = F.coalesce(F.pmod("vec_id", F.lit(3)), F.lit(0))
-    deltas = [
-        simsearch.cluster_share_state_delta(
-            docs.where(dbucket == b),
-            emb.where(vbucket == b),
-            centroids=cents,
-        )
-        for b in range(3)
-    ]
-    log = _fold(
-        deltas[0].unionByName(deltas[1]).unionByName(deltas[2]),
-        ("grain", "source", "cell"),
-        ("n",),
-    )
-    return simsearch.cluster_share_card_from_state_log(log, _MIX_TARGET)
+    cents = _pinned_mix_centroids(emb)
+    return _stream_fold(AdditiveCard(
+        lambda docs_b, emb_b: simsearch.cluster_share_state_delta(
+            docs_b, emb_b, centroids=cents
+        ),
+        ("grain", "source", "cell"), ("n",),
+        lambda log: simsearch.cluster_share_card_from_state_log(
+            log, _MIX_TARGET
+        ),
+    ), load(spark, sf_dir, "documents"), emb)
 
 
 @query("mm_usability_card", oracle=o_mm_usability_card(16))
@@ -5208,30 +5091,10 @@ def snapshot_drift_card_q(spark, sf_dir):
     "concentration_card_stream_fold", oracle=o_source_concentration_card()
 )
 def concentration_card_stream_fold_q(spark, sf_dir):
-    """Batch twin of the concentration STREAM's maintenance path (new
-    r14, the `length_card_stream_fold` pattern): the documents table
-    splits into three micro-batches (pmod(doc_id, 3)), each batch's
-    additive per-source delta (`stats.concentration_counts`) is tagged
-    like the delta log's partitions, and the union is merged by THE
-    shared `streaming.ingest._fold` and presented by
-    `stats.finish_concentration_card` — hash-matching the batch card's
-    own DuckDB oracle certifies the fold/finish additivity the
-    streaming pytests can only pin Spark-vs-Spark."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.concentration_counts(docs.where(bucket == b)).withColumn(
-            "batch_id", F.lit(b)
-        )
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(
-        log.drop("batch_id"), ("source",), stats.CONCENTRATION_COUNT_COLS
+    """Batch twin of the concentration stream (`_stream_fold`)."""
+    return _stream_fold(
+        CARDS["concentration"], load(spark, sf_dir, "documents")
     )
-    return stats.finish_concentration_card(merged)
 
 
 def o_quality_by_lang(low_cut: float = 0.5) -> str:
@@ -5290,29 +5153,11 @@ def quality_by_lang_q(spark, sf_dir):
 
 @query("quality_by_lang_stream_fold", oracle=o_quality_by_lang(0.5))
 def quality_by_lang_stream_fold_q(spark, sf_dir):
-    """Batch twin of the quality-by-language STREAM's maintenance path
-    (new r15, the `concentration_card_stream_fold` pattern): three
-    pmod(doc_id, 3) micro-batches, each batch's additive per-language
-    delta (`stats.quality_lang_counts` — micro-unit BIGINT quality
-    sums), merged by THE shared `streaming.ingest._fold` and presented
-    by `stats.finish_quality_by_lang` — hash-matching the batch card's
-    own DuckDB oracle certifies the fold/finish additivity (including
-    the exact-integer quality-sum representation) with a driver row."""
-    from ..streaming.ingest import _fold
-
-    docs = load(spark, sf_dir, "documents")
-    bucket = F.coalesce(F.pmod("doc_id", F.lit(3)), F.lit(0))
-    batches = [
-        stats.quality_lang_counts(docs.where(bucket == b)).withColumn(
-            "batch_id", F.lit(b)
-        )
-        for b in range(3)
-    ]
-    log = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    merged = _fold(
-        log.drop("batch_id"), ("pred_lang",), stats.QUALITY_LANG_COUNT_COLS
+    """Batch twin of the quality-by-language stream (`_stream_fold`),
+    including the exact-integer (micro-unit BIGINT) quality sums."""
+    return _stream_fold(
+        CARDS["quality_lang"], load(spark, sf_dir, "documents")
     )
-    return stats.finish_quality_by_lang(merged)
 
 
 # ---------------------------------------------------------------------------

@@ -19,11 +19,13 @@ the same decision continuously applied at ingest time.
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..llmdata import dedup
+from ..llmdata import dedup, stats
+from ..operators import events as ev
 from ..tables import PinScope
 
 DOC_SCHEMA = StructType(
@@ -52,6 +54,30 @@ def _start(stream_writer, query_name: str, checkpoint_dir: str | None):
     if checkpoint_dir:
         w = w.option("checkpointLocation", checkpoint_dir)
     return w.start()
+
+
+def _quality_repetition_gate(
+    batch_df: DataFrame, scope: PinScope, quality_min: float
+) -> DataFrame:
+    """The quality gate + Gopher repetition gate over one micro-batch:
+    doc-keyed semi-joins of per-doc verdicts, so batch boundaries
+    cannot change which documents pass."""
+    from pyspark.sql import functions as F
+
+    from ..llmdata import textstats
+
+    qual = (
+        textstats.quality_scores(batch_df)
+        .where(F.col("quality") >= quality_min)
+        .select("doc_id")
+    )
+    # materialize before filtering the HOF-derived flags (caller note
+    # on repetition_stats)
+    rep_flags = scope.persist(textstats.repetition_stats(batch_df))
+    rep = rep_flags.where(~F.col("repetitive")).select("doc_id")
+    return batch_df.join(qual, "doc_id", "left_semi").join(
+        rep, "doc_id", "left_semi"
+    )
 
 
 def dedup_ingest_stream(
@@ -130,19 +156,7 @@ def gated_ingest_stream(
                     F.col("pred_lang").isin(*langs)
                 ).select("doc_id")
                 batch_df = batch_df.join(ok, "doc_id", "left_semi")
-            qual = (
-                textstats.quality_scores(batch_df)
-                .where(F.col("quality") >= quality_min)
-                .select("doc_id")
-            )
-            # materialize before filtering the HOF-derived flags (caller
-            # note on repetition_stats)
-            rep_flags = scope.persist(textstats.repetition_stats(batch_df))
-            rep = rep_flags.where(~F.col("repetitive")).select("doc_id")
-            kept = (
-                batch_df.join(qual, "doc_id", "left_semi")
-                .join(rep, "doc_id", "left_semi")
-            )
+            kept = _quality_repetition_gate(batch_df, scope, quality_min)
             on_batch(batch_id, sampling.hash_split(kept, splits))
 
     return _start(docs_stream.writeStream.foreachBatch(_process), query_name, checkpoint_dir)
@@ -186,7 +200,6 @@ def multimodal_dedup_stream(
     dim: int = 64,
     query_name: str = "multimodal_dedup",
     checkpoint_dir: str | None = None,
-    within_batch: bool = True,
 ):
     """Per micro-batch, extract byte-histogram feature vectors from the
     incoming payload documents (`multimodal.feature_table` — the Arrow
@@ -194,14 +207,11 @@ def multimodal_dedup_stream(
     match them against the persisted multi-table sign-LSH embedding
     index, handing ``(batch_id, matches)`` with the (d1, d2, cosine)
     shape to the handler — the byte-level sibling of
-    :func:`embedding_dedup_stream`. With ``within_batch`` (default) the
-    batch ALSO pairs against itself (`simsearch.mt_dup_pairs`, d1 < d2,
-    both ids from this batch), so two byte-identical payloads landing
-    in the same drop are caught before a self-maintaining handler
-    appends them both to the index — without it the stream only sees
-    batch-vs-index and intra-batch duplicates are invisible (they
-    surface as matches only from the NEXT batch on, if the handler
-    appends). Even so, the stream is batch-boundary-DEPENDENT where
+    :func:`embedding_dedup_stream`. The batch ALSO pairs against itself
+    (`simsearch.mt_dup_pairs`, d1 < d2, both ids from this batch), so
+    two byte-identical payloads landing in the same drop are caught
+    before a self-maintaining handler appends them both to the index.
+    Even so, the stream is batch-boundary-DEPENDENT where
     `CorpusPipeline.dedup_bytes` sees the whole corpus at once: it
     reports match pairs and leaves the keep/append decision to the
     handler, rather than electing cluster canonicals. The batch rung's
@@ -217,7 +227,7 @@ def multimodal_dedup_stream(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         with PinScope() as scope:
-            # persisted: the feature frame feeds up to four uncached
+            # persisted: the feature frame feeds four uncached
             # subtrees (index-match keys + normed verify side, intra keys
             # + normed side) and the Arrow byte-histogram kernel is the
             # dominant per-batch Python cost — without the cache it would
@@ -228,12 +238,12 @@ def multimodal_dedup_stream(
             matches = scope.adopt(simsearch.incremental_embedding_matches(
                 batch_df.sparkSession, feats, index_table, threshold, dim,
             ))
-            if within_batch:
-                intra = scope.adopt(
-                    simsearch.mt_dup_pairs(feats, threshold=threshold, dim=dim)
-                )
-                matches = matches.unionByName(intra.select("d1", "d2", "cosine"))
-            on_batch(batch_id, matches)
+            intra = scope.adopt(
+                simsearch.mt_dup_pairs(feats, threshold=threshold, dim=dim)
+            )
+            on_batch(
+                batch_id, matches.unionByName(intra.select("d1", "d2", "cosine"))
+            )
 
     return _start(
         docs_stream.writeStream.foreachBatch(_process), query_name, checkpoint_dir
@@ -304,11 +314,11 @@ def assembly_ingest_stream(
     ``n_semantic`` when the semantic rung is on) — the streaming
     twin of ``corpus_assembly_v2``'s per-prefix survivor counts, the
     observability row a production ingest job appends to its metrics
-    sink. Costs one extra action per stage on the (persisted) batch
-    frames; leave None for the zero-overhead path."""
+    sink. Costs one ``count()`` per stage over frames the batch
+    persists anyway: the plan is the same with or without it."""
     from pyspark.sql import functions as F
 
-    from ..llmdata import decontam, sampling, textstats
+    from ..llmdata import decontam, sampling
 
     splits = splits or {"train": 0.9, "val": 0.05, "test": 0.05}
     if (emb_table is None) != (bench_emb_table is None):
@@ -318,41 +328,24 @@ def assembly_ingest_stream(
             "silently ingest embedding-unscreened documents"
         )
 
-    stats = on_stats is not None
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         with PinScope() as scope:
-            if stats:
-                batch_df = scope.persist(batch_df)
-            qual = (
-                textstats.quality_scores(batch_df)
-                .where(F.col("quality") >= quality_min)
-                .select("doc_id")
+            # every stage frame below feeds more than one consumer (the
+            # next gate's scan and its semi/anti-join, or the handler
+            # and the funnel), so each persists — one plan whether or
+            # not on_stats is given
+            batch_df = scope.persist(batch_df)
+            gated = scope.persist(
+                _quality_repetition_gate(batch_df, scope, quality_min)
             )
-            # materialize before filtering the HOF-derived flags (caller
-            # note on repetition_stats)
-            rep_flags = scope.persist(textstats.repetition_stats(batch_df))
-            rep = rep_flags.where(~F.col("repetitive")).select("doc_id")
-            gated = (
-                batch_df.join(qual, "doc_id", "left_semi")
-                .join(rep, "doc_id", "left_semi")
-            )
-            if stats:
-                gated = scope.persist(gated)
             bench = spark.table(bench_table)
             clean = (
                 decontam.ngram_overlap(gated, bench, n=n_contam, min_hits=1)
                 .where(~F.col("contaminated"))
                 .select("doc_id")
             )
-            survivors = gated.join(clean, "doc_id", "left_semi")
-            # the semantic rung makes survivors a genuine multi-consumer
-            # node (emb semi-join + anti-join left side + the scrub),
-            # so it persists even on the zero-stats path — otherwise
-            # the gate chain would re-execute per branch
-            if stats or emb_table is not None:
-                survivors = scope.persist(survivors)
+            survivors = scope.persist(gated.join(clean, "doc_id", "left_semi"))
             n_decontam = survivors
             if emb_table is not None:
                 # batch survivors' vectors looked up by semi-join —
@@ -375,9 +368,6 @@ def assembly_ingest_stream(
                     id_col="doc_id",
                 ))
                 sem_bad = flagged.where(F.col("contaminated")).select("doc_id")
-                # the post-semantic frame is itself multi-consumer (LSH
-                # discovery + the kept anti-join), so persist it even on
-                # the zero-stats path — same hazard as the pre-semantic one
                 survivors = scope.persist(
                     survivors.join(sem_bad, "doc_id", "left_anti")
                 )
@@ -386,11 +376,9 @@ def assembly_ingest_stream(
                 threshold=threshold, n=n_dedup,
             ))
             dups = raw_dups.select(F.col("d1").alias("doc_id")).distinct()
-            kept = survivors.join(dups, "doc_id", "left_anti")
-            if stats:
-                kept = scope.persist(kept)
+            kept = scope.persist(survivors.join(dups, "doc_id", "left_anti"))
             on_batch(batch_id, sampling.hash_split(kept, splits))
-            if stats:
+            if on_stats is not None:
                 funnel = {
                     "n_in": batch_df.count(),
                     "n_gated": gated.count(),
@@ -573,25 +561,15 @@ def _guard_card_state(
     probe = _checkpoint_has_commits(checkpoint_dir, spark)
     ckpt_probeable = probe is not None
     ckpt_committed = bool(probe)
-    if owner is None:
-        if has_log:
+    if owner != ckpt:
+        # an unowned state_dir, or one rotated to a new checkpoint
+        if has_log and owner is None:
             raise ValueError(
                 f"state_dir {state_dir!r} holds an unowned delta log "
                 "(written without a checkpoint); a checkpointed run "
                 "restarts batch ids at 0 and would double-count — "
                 "start a fresh state_dir"
             )
-        if ckpt_committed:
-            raise ValueError(
-                f"checkpoint {checkpoint_dir!r} has already committed "
-                f"batches but state_dir {state_dir!r} is empty; "
-                "committed batches are never redelivered, so the card "
-                "would permanently undercount — start a fresh "
-                "checkpoint with the fresh state_dir"
-            )
-        _write_card_owner(state_dir, checkpoint_dir)
-        return
-    if owner != ckpt:
         if has_log:
             raise ValueError(
                 f"state_dir {state_dir!r} belongs to checkpoint "
@@ -599,8 +577,6 @@ def _guard_card_state(
                 "start a fresh state_dir"
             )
         if ckpt_committed:
-            # same undercount as the unowned case: the rotated-to
-            # checkpoint never redelivers its committed batches
             raise ValueError(
                 f"checkpoint {checkpoint_dir!r} has already committed "
                 f"batches but state_dir {state_dir!r} is empty; "
@@ -609,7 +585,7 @@ def _guard_card_state(
                 "checkpoint with the fresh state_dir"
             )
         # empty log, uncommitted checkpoint: nothing to double- or
-        # under-count — allow rotation
+        # under-count — take ownership
         _write_card_owner(state_dir, checkpoint_dir)
         return
     if has_log and ckpt_probeable and not ckpt_committed:
@@ -684,24 +660,101 @@ def _guard_card_params(state_dir: str, params: dict | None) -> None:
         fh.write(want)
 
 
+@dataclass(frozen=True)
+class AdditiveCard:
+    """One additive dataset card, split into the halves a stream can
+    maintain: ``counts(docs, **params)`` is the per-batch delta whose
+    ``count_cols`` sum per ``keys`` (`_fold`), and ``finish`` presents
+    the folded counts. The batch card is ``finish(counts(docs))``;
+    `additive_card_stream` keeps the fold current at ingest, and the
+    catalog's ``*_stream_fold`` entries certify it against the batch
+    card's oracle."""
+
+    counts: Callable[..., DataFrame]
+    keys: tuple[str, ...]
+    count_cols: tuple[str, ...]
+    finish: Callable[[DataFrame], DataFrame]
+
+    def refresh(self, log: DataFrame) -> DataFrame:
+        """The card over a delta log (or any union of deltas)."""
+        return self.finish(_fold(log, self.keys, self.count_cols))
+
+
+def _fold(log: DataFrame, key_cols: tuple[str, ...],
+          count_cols: tuple[str, ...]) -> DataFrame:
+    """THE delta-log merge, shared by the per-batch refresh and the
+    offline compaction so the two can never diverge (key set, sum,
+    bigint cast)."""
+    from pyspark.sql import functions as F
+
+    return log.groupBy(*key_cols).agg(
+        *[F.sum(c).cast("bigint").alias(c) for c in count_cols]
+    )
+
+
+CARDS: dict[str, AdditiveCard] = {
+    "length": AdditiveCard(
+        stats.length_hist_counts, ("source", "lo_tokens"), ("n_docs",),
+        stats.finish_length_card,
+    ),
+    "ttr": AdditiveCard(
+        stats.ttr_token_counts, ("source", "token"), ("cnt",),
+        stats.finish_ttr_card,
+    ),
+    "pii": AdditiveCard(
+        stats.pii_counts, ("source",),
+        ("n_docs", "n_emails", "n_phones", "n_ids", "n_pii_docs"),
+        stats.finish_pii_card,
+    ),
+    "charclass": AdditiveCard(
+        stats.charclass_counts, ("source",),
+        ("n_docs", "n_chars", "n_alpha", "n_digit", "n_space"),
+        stats.finish_charclass_card,
+    ),
+    "fertility": AdditiveCard(
+        stats.fertility_counts, ("pred_lang",),
+        ("n_docs", "n_chars", "n_tokens"),
+        stats.finish_fertility_card,
+    ),
+    "truncation": AdditiveCard(
+        stats.truncation_counts, ("source",),
+        ("n_docs", "n_tokens", "n_truncated", "tokens_lost"),
+        stats.finish_truncation_card,
+    ),
+    "quality_lang": AdditiveCard(
+        stats.quality_lang_counts, ("pred_lang",),
+        ("n_docs", "q_micro", "qn", "low_q_docs"),
+        stats.finish_quality_by_lang,
+    ),
+    "concentration": AdditiveCard(
+        stats.concentration_counts, ("source",), ("n_docs_s", "n_tok_s"),
+        stats.finish_concentration_card,
+    ),
+    "events_volume": AdditiveCard(
+        ev.volume_counts, ("event_type",),
+        ("n_events", "n_value", "value_cents"),
+        ev.finish_volume_card,
+    ),
+}
+
+
 def additive_card_stream(
     docs_stream: DataFrame,
     state_dir: str,
-    delta_fn: Callable[[DataFrame], DataFrame],
-    key_cols: tuple[str, ...],
-    finish_fn: Callable[[DataFrame], DataFrame],
+    card: AdditiveCard,
     on_batch: Callable[[int, DataFrame], None],
-    count_cols: tuple[str, ...] = ("n_docs",),
     query_name: str = "additive_card",
     checkpoint_dir: str | None = None,
-    state_params: dict | None = None,
+    params: dict | None = None,
 ):
     """Incremental dataset-card maintenance: per micro-batch, compute
-    the batch's ADDITIVE counts (``delta_fn``), append them to a
-    batch_id-partitioned delta log, and hand the REFRESHED card
-    (``finish_fn`` over the re-merged log) to ``on_batch`` — the
-    dataset card stays current at ingest time without ever re-scanning
-    the corpus; each batch pays O(batch) + O(log).
+    the batch's ADDITIVE counts (``card.counts(batch, **params)``),
+    append them to a batch_id-partitioned delta log, and hand the
+    REFRESHED card (``card.finish`` over the re-merged log) to
+    ``on_batch`` — the dataset card stays current at ingest time
+    without ever re-scanning the corpus; each batch pays O(batch) +
+    O(log). ``params``, the counts' keyword arguments, are also the
+    state's identity (`_guard_card_params`).
 
     Replay convergence: the delta partition is keyed by batch_id and
     written with DYNAMIC partition overwrite (`etl.sinks.
@@ -721,7 +774,7 @@ def additive_card_stream(
     non-empty local ``state_dir`` without ``checkpoint_dir`` is
     refused at start."""
     _guard_card_state(state_dir, checkpoint_dir, docs_stream.sparkSession)
-    _guard_card_params(state_dir, state_params)
+    _guard_card_params(state_dir, params)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.errors import AnalysisException
@@ -732,10 +785,11 @@ def additive_card_stream(
         spark = batch_df.sparkSession
         with PinScope() as scope:
             # the aggregated delta is read twice (emptiness probe +
-            # write); without the cache the whole delta_fn aggregation
+            # write); without the cache the whole counts aggregation
             # over the batch would run twice per micro-batch
             delta = scope.persist(
-                delta_fn(batch_df).withColumn("batch_id", F.lit(batch_id))
+                card.counts(batch_df, **(params or {}))
+                .withColumn("batch_id", F.lit(batch_id))
             )
             if not delta.isEmpty():
                 write_partitioned_snapshot(delta, state_dir, ["batch_id"])
@@ -745,23 +799,10 @@ def additive_card_stream(
                 # nothing ever written (every batch so far all-NULL
                 # text): the empty delta carries the correct schema
                 log = delta
-            card = finish_fn(_fold(log, key_cols, count_cols))
-            on_batch(batch_id, scope.adopt(card))
+            on_batch(batch_id, scope.adopt(card.refresh(log)))
 
     return _start(
         docs_stream.writeStream.foreachBatch(_process), query_name, checkpoint_dir
-    )
-
-
-def _fold(log: DataFrame, key_cols: tuple[str, ...],
-          count_cols: tuple[str, ...]) -> DataFrame:
-    """THE delta-log merge, shared by the per-batch refresh and the
-    offline compaction so the two can never diverge (key set, sum,
-    bigint cast)."""
-    from pyspark.sql import functions as F
-
-    return log.groupBy(*key_cols).agg(
-        *[F.sum(c).cast("bigint").alias(c) for c in count_cols]
     )
 
 
@@ -778,19 +819,9 @@ def length_card_stream(
     presentation reruns on the bounded merged frame — after any batch,
     the emitted card equals the batch card over every document seen so
     far (the parity pytest pins it)."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.length_hist_counts(b, source_col=source_col),
-        ("source", "lo_tokens"),
-        stats.finish_length_card,
-        on_batch,
-        count_cols=("n_docs",),
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"source_col": source_col},
+        docs_stream, state_dir, CARDS["length"], on_batch,
+        query_name, checkpoint_dir, {"source_col": source_col},
     )
 
 
@@ -807,19 +838,9 @@ def ttr_card_stream(
     per-source VOCABULARY, not corpus size — because types and hapax
     counts are not additive but the counts they derive from are. The
     rollup/rates rerun on the merged state each batch."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.ttr_token_counts(b, source_col=source_col),
-        ("source", "token"),
-        stats.finish_ttr_card,
-        on_batch,
-        count_cols=("cnt",),
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"source_col": source_col},
+        docs_stream, state_dir, CARDS["ttr"], on_batch,
+        query_name, checkpoint_dir, {"source_col": source_col},
     )
 
 
@@ -837,19 +858,9 @@ def pii_card_stream(
     presentation reruns on the bounded merged frame — PII incidence
     stays current at ingest time, the release-review read without a
     corpus re-scan."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.pii_counts(b, source_col=source_col),
-        ("source",),
-        stats.finish_pii_card,
-        on_batch,
-        count_cols=stats.PII_COUNT_COLS,
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"source_col": source_col},
+        docs_stream, state_dir, CARDS["pii"], on_batch,
+        query_name, checkpoint_dir, {"source_col": source_col},
     )
 
 
@@ -867,19 +878,9 @@ def charclass_card_stream(
     encoding-health read stays current as drops arrive (a mojibake
     crawl surfaces on its FIRST batch, not at the next full-corpus
     audit)."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.charclass_counts(b, source_col=source_col),
-        ("source",),
-        stats.finish_charclass_card,
-        on_batch,
-        count_cols=stats.CHARCLASS_COUNT_COLS,
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"source_col": source_col},
+        docs_stream, state_dir, CARDS["charclass"], on_batch,
+        query_name, checkpoint_dir, {"source_col": source_col},
     )
 
 
@@ -897,18 +898,9 @@ def fertility_card_stream(
     frame (#profiles + 1 rows). A tokenizer-bias drift (a new crawl
     shifting a language's fertility) surfaces on its first batch, not
     at the next full-corpus audit."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        stats.fertility_counts,
-        ("pred_lang",),
-        stats.finish_fertility_card,
-        on_batch,
-        count_cols=stats.FERTILITY_COUNT_COLS,
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
+        docs_stream, state_dir, CARDS["fertility"], on_batch,
+        query_name, checkpoint_dir,
     )
 
 
@@ -931,21 +923,9 @@ def truncation_card_stream(
     (`_guard_card_params`): restarting an existing state with a
     DIFFERENT cut is refused rather than silently merging counts that
     correspond to no single context length."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.truncation_counts(
-            b, max_len=max_len, source_col=source_col
-        ),
-        ("source",),
-        stats.finish_truncation_card,
-        on_batch,
-        count_cols=stats.TRUNCATION_COUNT_COLS,
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"max_len": max_len, "source_col": source_col},
+        docs_stream, state_dir, CARDS["truncation"], on_batch,
+        query_name, checkpoint_dir, {"max_len": max_len, "source_col": source_col},
     )
 
 
@@ -963,18 +943,9 @@ def events_volume_stream(
     replay/compaction because the maintained state is integer cents
     (each value DECIMAL(18,2)-rounded once, at first sight), never a
     running double."""
-    from ..operators import events as ev
-
     return additive_card_stream(
-        events_stream,
-        state_dir,
-        ev.volume_counts,
-        ("event_type",),
-        ev.finish_volume_card,
-        on_batch,
-        count_cols=("n_events", "n_value", "value_cents"),
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
+        events_stream, state_dir, CARDS["events_volume"], on_batch,
+        query_name, checkpoint_dir,
     )
 
 
@@ -1016,7 +987,9 @@ def cluster_share_card_stream(
     from ..llmdata import simsearch
     from pyspark.sql import functions as F
 
-    def _delta(b: DataFrame) -> DataFrame:
+    def _counts(b: DataFrame, **_identity) -> DataFrame:
+        # reads its parameters from this closure: the identity below
+        # records the pinned centroids by fingerprint only
         emb_b = b.where(F.col(vec_col).isNotNull()).select(
             F.col(doc_id_col).alias("vec_id"), F.col(vec_col)
         )
@@ -1032,19 +1005,17 @@ def cluster_share_card_stream(
             salt=salt,
         )
 
-    return additive_card_stream(
-        drops_stream,
-        state_dir,
-        _delta,
+    card = AdditiveCard(
+        _counts,
         ("grain", domain_col, "cell"),
+        ("n",),
         lambda folded: simsearch.cluster_share_card_from_state_log(
             folded, target_total, domain_col=domain_col
         ),
-        on_batch,
-        count_cols=("n",),
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={
+    )
+    return additive_card_stream(
+        drops_stream, state_dir, card, on_batch, query_name, checkpoint_dir,
+        {
             "centroids_fp": simsearch.centroid_fingerprint(centroids),
             "n_centroids": n_centroids,
             "salt": salt,
@@ -1188,19 +1159,9 @@ def quality_lang_card_stream(
     on the batch where it lands. ``low_cut`` is part of the state's
     identity (`_guard_card_params`): folding deltas taken at different
     cutoffs would silently mix two different below-cut definitions."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.quality_lang_counts(b, low_cut=low_cut),
-        ("pred_lang",),
-        stats.finish_quality_by_lang,
-        on_batch,
-        count_cols=stats.QUALITY_LANG_COUNT_COLS,
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"low_cut": low_cut},
+        docs_stream, state_dir, CARDS["quality_lang"], on_batch,
+        query_name, checkpoint_dir, {"low_cut": low_cut},
     )
 
 
@@ -1219,17 +1180,7 @@ def concentration_card_stream(
     silently taking over the token mass surfaces on the batch where it
     happens, not at the next full-corpus audit. The source_col is part
     of the state's identity (`_guard_card_params`)."""
-    from ..llmdata import stats
-
     return additive_card_stream(
-        docs_stream,
-        state_dir,
-        lambda b: stats.concentration_counts(b, source_col=source_col),
-        ("source",),
-        stats.finish_concentration_card,
-        on_batch,
-        count_cols=stats.CONCENTRATION_COUNT_COLS,
-        query_name=query_name,
-        checkpoint_dir=checkpoint_dir,
-        state_params={"source_col": source_col},
+        docs_stream, state_dir, CARDS["concentration"], on_batch,
+        query_name, checkpoint_dir, {"source_col": source_col},
     )

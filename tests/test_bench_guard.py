@@ -6,9 +6,11 @@ stray or corrupt files (a broken guard silently disables re-runs)."""
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import _prior_timings
 
@@ -93,7 +95,7 @@ def test_ledger_bench_history_tolerates_non_dict_payload(tmp_path):
     bare list) crashed bench_history() with AttributeError on
     data.get('tail') while bench_rounds() tolerated the same shape —
     the ledger regeneration must skip it instead."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(REPO, "tools"))
     from ledger import bench_history
 
     _write(tmp_path, "BENCH_r08.json", [1, 2, 3])

@@ -5229,36 +5229,6 @@ def test_cluster_share_mixture_planted_semantics(spark):
         assert 0 <= r.n_kept <= r.n_docs
 
 
-def test_narrow_checkpoint_optout_bit_identical(spark):
-    """NARROW_EAGER_CHECKPOINT=False (the cluster-deployment opt-out
-    for localCheckpoint's executor-loss caveat) must yield bit-
-    identical output from both narrow-checkpoint operators — the knob
-    trades single-scan speed for lineage recompute, never values."""
-    from etl_staging_spark.llmdata import simsearch
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-
-    def _both():
-        prof = _nsafe_sorted(
-            tuple(r) for r in simsearch.cluster_profile(emb).collect()
-        )
-        samp = sorted(
-            tuple(r)
-            for r in simsearch.cluster_balanced_sample(
-                emb, target_total=100
-            ).collect()
-        )
-        return prof, samp
-
-    base = _both()
-    simsearch.NARROW_EAGER_CHECKPOINT = False
-    try:
-        assert _both() == base
-    finally:
-        simsearch.NARROW_EAGER_CHECKPOINT = True
-    assert len(base[1]) > 0
-
-
 def test_cluster_profile_planted_and_duckdb(spark):
     """cluster_profile (r15 queue): hand-checkable assignment on a
     planted 2-centroid corpus — the equidistant vector ties to the

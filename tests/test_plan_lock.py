@@ -15,9 +15,10 @@ and review the diff the tool prints before committing the new lock.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def test_registry_plan_shapes_match_lock(spark):

@@ -476,6 +476,65 @@ def test_assembly_ingest_stream_matches_batch(spark, tmp_path):
     assert 50 not in got and 51 not in got and 52 not in got
 
 
+def test_assembly_ingest_stream_on_stats_keeps_one_plan(spark, tmp_path):
+    """``on_stats`` only adds the funnel counts: inside ``on_batch`` the
+    session caches the same number of frames with and without it, and
+    the kept ids match."""
+    from etl_staging_spark.llmdata import dedup
+    from etl_staging_spark.streaming.ingest import assembly_ingest_stream, doc_stream
+
+    good = (
+        "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
+        "kilo lima mike november oscar papa quebec romeo sierra tango"
+    )
+    corpus_text = (
+        "entirely separate corpus resident document describing harvest "
+        "seasons crop rotation irrigation channels terraced fields"
+    )
+    rows = (
+        [(i, good + f" tail{i}") for i in range(6)]
+        + [(50, "spam ham spam ham spam ham spam ham spam ham spam ham")]
+        + [(52, corpus_text + " x")]
+    )
+    drop_dir = str(tmp_path / "drops")
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
+        drop_dir
+    )
+    dedup.write_signature_index(
+        spark.createDataFrame([(1000, corpus_text)], "doc_id long, text string"),
+        "asm_stats_ix", n_buckets=4,
+    )
+    spark.createDataFrame(
+        [(2000, "held out benchmark question text")], "doc_id long, text string"
+    ).createOrReplaceTempView("asm_stats_bench")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+
+    def run(on_stats):
+        seen = {"cached": [], "ids": set()}
+
+        def sink(bid, frame):
+            seen["cached"].append(cache.numCachedEntries())
+            seen["ids"] |= {r.doc_id for r in frame.collect()}
+
+        assembly_ingest_stream(
+            doc_stream(spark, drop_dir), "asm_stats_ix", "asm_stats_bench", sink,
+            quality_min=0.5, threshold=0.6, on_stats=on_stats,
+        ).awaitTermination()
+        return seen
+
+    funnels = []
+    with_stats = run(lambda bid, f: funnels.append(f))
+    without = run(None)
+    spark.sql("DROP TABLE IF EXISTS asm_stats_ix_bands")
+    spark.sql("DROP TABLE IF EXISTS asm_stats_ix_arrays")
+
+    assert with_stats["cached"] == without["cached"]
+    assert with_stats["ids"] == without["ids"] == set(range(6))
+    assert funnels == [{"n_in": 8, "n_gated": 7, "n_decontam": 7, "n_kept": 6}]
+    assert cache.isEmpty()
+
+
 def test_assembly_ingest_stream_semantic_rung_matches_batch(spark, tmp_path):
     """The OPTIONAL semantic-decontamination rung completes ladder
     parity between the streaming front door and CorpusPipeline: a

@@ -31,6 +31,14 @@ table — broadcast in every plan.
 
 The DuckDB oracle twin of this mapping is ``O_LEDGER`` — every engine
 oracle builds on it, so engine results are hash-checked end to end.
+
+The fact stays resident per session, as the reference's hot
+``account_move_line`` stays in PostgreSQL's buffer cache: ``move_lines``
+memoizes a *persisted* frame, so a session's report requests read the
+cached relation instead of re-joining lineitem ⋈ orders and recomputing
+``conv``. It is a snapshot of ``sf_dir`` at first use (``tables.load``
+already pins the file listing). A session keeps facts for one
+directory at a time; ``release(spark)`` drops them all.
 """
 
 from __future__ import annotations
@@ -52,13 +60,23 @@ def rate_table(spark: SparkSession) -> DataFrame:
 
 _LEDGER_CACHE: dict = {}
 
+
 def move_lines(
     spark: SparkSession, sf_dir: str, spread: bool = False
 ) -> DataFrame:
-    """The ledger fact. Filters applied by engines push down through
-    this projection into both parquet scans (verified via .explain).
-    Memoized per (session, dir) like tables.load — the frame is lazy and
-    immutable, and every engine entry starts from it.
+    """The ledger fact, resident in the session's cache. Memoized per
+    (session, dir, spread) like tables.load, and every engine entry
+    starts from it; engines' filters and projections read the cached
+    columns instead of pushing down into the two parquet scans.
+
+    The memo holds the persisted frame. ``persist()`` is lazy, so the
+    first consumer's action fills the cache and no extra job runs. A hit
+    whose cache entry was dropped (``clearCache()``) is re-persisted
+    before it is returned. The fact is a snapshot of ``sf_dir`` at first
+    use. A session holds facts for at most one directory: a call for a
+    new one unpersists the session's facts for any other. ``release``
+    drops them all; a long-lived caller needs it and
+    ``tables.release_pinned`` for its per-query frames, nothing else.
 
     ``spread=True`` (opt-in per consumer): keyed respread of the
     lineitem side BELOW the broadcast join, so the join + decimal conv
@@ -72,7 +90,10 @@ def move_lines(
     key = (spark, sf_dir, spread)
     cached = _LEDGER_CACHE.get(key)
     if cached is not None:
+        if not cached.storageLevel.useMemory:
+            cached.persist()
         return cached
+    _drop_facts(spark, keep=sf_dir)
     li = load(spark, sf_dir, "lineitem")
     if spread:
         # bound at call time so tools/ab_respread.py can swap it
@@ -103,8 +124,19 @@ def move_lines(
     )
     conv = F.round(F.col("balance").cast("decimal(18,6)") * F.col("rate"), 2)
     out = led.join(F.broadcast(rate_table(spark)), "company_id").withColumn("conv", conv)
-    _LEDGER_CACHE[key] = out
+    _LEDGER_CACHE[key] = out.persist()
     return out
+
+
+def release(spark: SparkSession) -> None:
+    """Unpersist and drop every resident ledger fact of ``spark``."""
+    _drop_facts(spark)
+
+
+def _drop_facts(spark: SparkSession, keep: str | None = None) -> None:
+    # reads the module global at call time: a tracer may swap the dict
+    for key in [k for k in _LEDGER_CACHE if k[0] is spark and k[1] != keep]:
+        _LEDGER_CACHE.pop(key).unpersist()
 
 
 def is_balance_sheet(code_col=None) -> F.Column:

@@ -3,9 +3,12 @@
 A long-lived session (an accountant's report service, a stream) never
 calls ``clearCache()`` between requests, so every cached relation a
 query builds must be pinned to its result and dropped by
-``tables.release_pinned``. For each registry entry: ``clearCache()``,
-build, run the plan to a noop sink, release, then assert that the
-CacheManager is empty.
+``tables.release_pinned``. The one cache entry a session keeps on
+purpose is the resident ledger fact (``engines.ledger.move_lines``),
+which ``ledger.release`` drops. For each registry entry:
+``clearCache()``, build, run the plan to a noop sink,
+``release_pinned``, ``ledger.release``, then assert that the
+CacheManager is empty — so a per-query frame left cached still fails.
 
 Out of scope: ``localCheckpoint`` blocks (the connected-components
 rounds, the ANN cell assignments). They are unnamed persistent RDDs,
@@ -19,10 +22,13 @@ regression in the pin plumbing they exercise fails fast."""
 from __future__ import annotations
 
 import hashlib
+import os
+from collections import Counter
 
 import pytest
 
 import __spark_entry__ as entrymod
+from etl_staging_spark.engines import ledger
 from etl_staging_spark.tables import release_pinned
 
 from tests.conftest import SF_DIR
@@ -67,7 +73,72 @@ def test_released_entry_leaves_no_cached_relation(name, spark):
     df = QUERIES[name](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
     release_pinned(df)
+    ledger.release(spark)
     assert cache.isEmpty(), f"{name}: cached relations remain after release"
+
+
+def _persisted_ids(spark) -> set:
+    it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next())
+    return ids
+
+
+def _resident(spark, sf_dir: str) -> list:
+    # read the memo itself: move_lines would re-persist a dropped fact
+    return [ledger._LEDGER_CACHE.get((spark, sf_dir, s)) for s in (False, True)]
+
+
+def test_resident_facts_outlive_query_release_until_ledger_release(spark):
+    """Request cycles of the two report entries built on the fact
+    (plain and spread) release their own frames and leave exactly the
+    two resident facts cached; ``ledger.release`` then empties the
+    CacheManager."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    ledger.release(spark)
+    before = _persisted_ids(spark)
+    for _ in range(3):
+        for name in ("gl_report", "hg_column_groups"):
+            df = QUERIES[name](spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+            release_pinned(df)
+    facts = _resident(spark, SF_DIR)
+    assert all(f is not None and f.storageLevel.useMemory for f in facts)
+    assert len(_persisted_ids(spark) - before) == 2
+    ledger.release(spark)
+    assert cache.isEmpty()
+    assert _resident(spark, SF_DIR) == [None, None]
+
+
+def test_move_lines_recaches_after_clear_cache(spark):
+    ledger.move_lines(spark, SF_DIR)
+    spark.catalog.clearCache()
+    assert ledger.move_lines(spark, SF_DIR).storageLevel.useMemory
+    ledger.release(spark)
+
+
+def test_new_directory_unpersists_the_other_directorys_facts(spark):
+    other = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    old = [ledger.move_lines(spark, other, s) for s in (False, True)]
+    assert all(f.storageLevel.useMemory for f in old)
+    ledger.move_lines(spark, SF_DIR)
+    assert not any(f.storageLevel.useMemory for f in old)
+    assert _resident(spark, other) == [None, None]
+    ledger.release(spark)
+
+
+def test_gl_report_rows_match_on_fill_and_cached_read(spark):
+    """The call that fills the resident fact and the call that reads it
+    return the same rows."""
+    spark.catalog.clearCache()
+    rows = []
+    for _ in range(2):
+        df = QUERIES["gl_report"](spark, SF_DIR)
+        rows.append(Counter(df.collect()))
+        release_pinned(df)
+    assert rows[0] == rows[1] and rows[0]
 
 
 def test_once_leaked_entries_are_registered():

@@ -17,9 +17,10 @@ changes.
 Plain arm: `tables.respread_narrow` swapped for identity. Only
 `ledger.move_lines` and `a1_hash_agg` import that name at call time,
 so the swap reaches exactly the spread sites above (modules that bind
-it at import keep theirs); `_LEDGER_CACHE` is cleared on every flip so
-a memoized frame never times the other arm's plan (the r16 ADVICE
-bug). Protocol: bench.ab_main.
+it at import keep theirs); every flip calls `ledger.release`, which
+unpersists and drops the session's resident ledger facts, so a memoized
+fact never times the other arm's plan (the r16 ADVICE bug). Protocol:
+bench.ab_main.
 
 Usage: python tools/ab_respread.py [sf_dir] [rounds] [query ...]
 """
@@ -43,7 +44,7 @@ _RESPREAD = tables.respread_narrow
 def set_spread(spark, on: bool) -> None:
     """Arm setter: the real respread (on) or identity (off)."""
     tables.respread_narrow = _RESPREAD if on else (lambda df, *a, **k: df)
-    ledger._LEDGER_CACHE.clear()
+    ledger.release(spark)
 
 
 if __name__ == "__main__":

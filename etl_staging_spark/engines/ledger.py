@@ -37,8 +37,8 @@ The fact stays resident per session, as the reference's hot
 memoizes a *persisted* frame, so a session's report requests read the
 cached relation instead of re-joining lineitem ⋈ orders and recomputing
 ``conv``. It is a snapshot of ``sf_dir`` at first use (``tables.load``
-already pins the file listing). A session keeps facts for one
-directory at a time; ``release(spark)`` drops them all.
+already pins the file listing). A session keeps one resident fact, for
+one directory at a time; ``release(spark)`` drops it.
 """
 
 from __future__ import annotations
@@ -64,42 +64,30 @@ _LEDGER_CACHE: dict = {}
 def move_lines(
     spark: SparkSession, sf_dir: str, spread: bool = False
 ) -> DataFrame:
-    """The ledger fact, resident in the session's cache. Memoized per
-    (session, dir, spread) like tables.load, and every engine entry
-    starts from it; engines' filters and projections read the cached
-    columns instead of pushing down into the two parquet scans.
+    """The ledger fact, resident in the session's cache. Every engine
+    entry starts from it; engines' filters and projections read the
+    cached columns instead of pushing down into the two parquet scans.
 
-    The memo holds the persisted frame. ``persist()`` is lazy, so the
-    first consumer's action fills the cache and no extra job runs. A hit
-    whose cache entry was dropped (``clearCache()``) is re-persisted
-    before it is returned. The fact is a snapshot of ``sf_dir`` at first
-    use. A session holds facts for at most one directory: a call for a
-    new one unpersists the session's facts for any other. ``release``
-    drops them all; a long-lived caller needs it and
-    ``tables.release_pinned`` for its per-query frames, nothing else.
+    The memo maps a session to ``(sf_dir, fact)``. ``persist()`` is
+    lazy, so the first consumer's action fills the cache and no extra
+    job runs. A hit whose cache entry was dropped (``clearCache()``) is
+    re-persisted before it is returned. The fact is a snapshot of
+    ``sf_dir`` at first use; a call for another directory unpersists it
+    and builds that directory's fact instead. ``release`` drops it; a
+    long-lived caller needs it and ``tables.release_pinned`` for its
+    per-query frames, nothing else.
 
-    ``spread=True`` (opt-in per consumer): keyed respread of the
-    lineitem side BELOW the broadcast join, so the join + decimal conv
-    + the consumer's predicate/aggregate map side run cluster-wide
-    instead of on the single task a one-row-group scan yields. Keys are
-    two columns every consumer already scans, so the spread widens
-    nothing; no-op at real scale (respread_narrow's split guard). Only
-    for SINGLE-JOB heavy-map consumers — multi-collect engines re-pay
-    the exchange per job and measured +19% slower net over 14 ledger
-    entries (tools/ab_respread.py, OPTIMIZATION_r16.md)."""
-    key = (spark, sf_dir, spread)
-    cached = _LEDGER_CACHE.get(key)
-    if cached is not None:
-        if not cached.storageLevel.useMemory:
-            cached.persist()
-        return cached
-    _drop_facts(spark, keep=sf_dir)
+    ``spread`` is accepted and ignored: every caller gets the one fact."""
+    # reads the module global at call time: a tracer may swap the dict
+    entry = _LEDGER_CACHE.get(spark)
+    if entry is not None:
+        cached_dir, cached = entry
+        if cached_dir == sf_dir:
+            if not cached.storageLevel.useMemory:
+                cached.persist()
+            return cached
+        cached.unpersist()
     li = load(spark, sf_dir, "lineitem")
-    if spread:
-        # bound at call time so tools/ab_respread.py can swap it
-        from ..tables import respread_narrow
-
-        li = respread_narrow(li, ("l_orderkey", "l_partkey"))
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_custkey", "o_orderpriority"
     )
@@ -124,19 +112,15 @@ def move_lines(
     )
     conv = F.round(F.col("balance").cast("decimal(18,6)") * F.col("rate"), 2)
     out = led.join(F.broadcast(rate_table(spark)), "company_id").withColumn("conv", conv)
-    _LEDGER_CACHE[key] = out.persist()
+    _LEDGER_CACHE[spark] = (sf_dir, out.persist())
     return out
 
 
 def release(spark: SparkSession) -> None:
-    """Unpersist and drop every resident ledger fact of ``spark``."""
-    _drop_facts(spark)
-
-
-def _drop_facts(spark: SparkSession, keep: str | None = None) -> None:
-    # reads the module global at call time: a tracer may swap the dict
-    for key in [k for k in _LEDGER_CACHE if k[0] is spark and k[1] != keep]:
-        _LEDGER_CACHE.pop(key).unpersist()
+    """Unpersist and drop the resident ledger fact of ``spark``."""
+    entry = _LEDGER_CACHE.pop(spark, None)
+    if entry is not None:
+        entry[1].unpersist()
 
 
 def is_balance_sheet(code_col=None) -> F.Column:

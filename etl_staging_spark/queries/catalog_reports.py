@@ -116,12 +116,8 @@ def hg_column_groups(spark, sf_dir):
     pushed-down scan predicate as its date scope. Drives the SAME
     gl_sums pipeline as gl_report, so the variant required by the
     reference's comparison x groups filter matrix shares one code
-    path. spread=True: with 6 column groups the per-row predicate +
-    24-conditional-aggregate map side dominates, and the keyed spread
-    below the broadcast join parallelizes it (interleaved A/B −13 to
-    −24%; the 2-group gl_report measured SLOWER spread and stays
-    plain — see engines/ledger.move_lines)."""
-    return gl_sums(move_lines(spark, sf_dir, spread=True), HG_OPTS)
+    path."""
+    return gl_sums(move_lines(spark, sf_dir), HG_OPTS)
 
 
 @query(
@@ -580,13 +576,6 @@ _ES_IN = "date >= TIMESTAMP '1997-01-01'"
 def es_report(spark, sf_dir):
     from ..reports.executive_summary import executive_summary
 
-    # plain (r17): the r16 spread=True here rested on an A/B whose
-    # plain arm was poisoned by the move_lines memo keying bug (ADVICE
-    # r16) — with the fixed tool the spread measures ±1% twice
-    # (1.40 vs 1.38 / 1.40 vs 1.42), so the added exchange buys
-    # nothing and es_report returns to the plain ledger.
-    # hg_column_groups re-measured −11/−12% with the same fixed tool
-    # and keeps its spread.
     led = move_lines(spark, sf_dir)
     return executive_summary(spark, led, make_options("1997-01-01", "1997-12-31"))
 

@@ -16,6 +16,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def default_driver_memory() -> str:
+    """Half the machine's physical memory, capped at 48g: a local-mode
+    driver heap shares the box with its Python workers, and a default
+    above the machine's memory gets the JVM killed instead of
+    collected. ``SPARK_DRIVER_MEM`` overrides it."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2 // 2**20, 48 * 1024)}m"
+
+
 def get_spark(app_name: str = "etl_staging_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the shared local SparkSession.
 
@@ -40,7 +49,10 @@ def get_spark(app_name: str = "etl_staging_spark", cpus: int | None = None) -> S
         # expects ANSI overflow errors, not silent NULLs. Pin it.
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # events.parquet carries TIMESTAMP(NANOS) which Spark has no native

@@ -85,16 +85,16 @@ def _persisted_ids(spark) -> set:
     return ids
 
 
-def _resident(spark, sf_dir: str) -> list:
+def _resident(spark, sf_dir: str):
     # read the memo itself: move_lines would re-persist a dropped fact
-    return [ledger._LEDGER_CACHE.get((spark, sf_dir, s)) for s in (False, True)]
+    entry = ledger._LEDGER_CACHE.get(spark)
+    return entry[1] if entry is not None and entry[0] == sf_dir else None
 
 
 def test_resident_facts_outlive_query_release_until_ledger_release(spark):
-    """Request cycles of the two report entries built on the fact
-    (plain and spread) release their own frames and leave exactly the
-    two resident facts cached; ``ledger.release`` then empties the
-    CacheManager."""
+    """Request cycles of two report entries built on the fact release
+    their own frames and leave exactly the one resident fact cached;
+    ``ledger.release`` then empties the CacheManager."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     ledger.release(spark)
@@ -104,12 +104,12 @@ def test_resident_facts_outlive_query_release_until_ledger_release(spark):
             df = QUERIES[name](spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             release_pinned(df)
-    facts = _resident(spark, SF_DIR)
-    assert all(f is not None and f.storageLevel.useMemory for f in facts)
-    assert len(_persisted_ids(spark) - before) == 2
+    fact = _resident(spark, SF_DIR)
+    assert fact is not None and fact.storageLevel.useMemory
+    assert len(_persisted_ids(spark) - before) == 1
     ledger.release(spark)
     assert cache.isEmpty()
-    assert _resident(spark, SF_DIR) == [None, None]
+    assert _resident(spark, SF_DIR) is None
 
 
 def test_move_lines_recaches_after_clear_cache(spark):
@@ -119,13 +119,20 @@ def test_move_lines_recaches_after_clear_cache(spark):
     ledger.release(spark)
 
 
+def test_spread_keyword_selects_the_one_fact(spark):
+    assert ledger.move_lines(spark, SF_DIR, spread=True) is ledger.move_lines(spark, SF_DIR)
+    ledger.release(spark)
+
+
 def test_new_directory_unpersists_the_other_directorys_facts(spark):
     other = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
-    old = [ledger.move_lines(spark, other, s) for s in (False, True)]
-    assert all(f.storageLevel.useMemory for f in old)
+    old = ledger.move_lines(spark, other)
+    assert old.storageLevel.useMemory
+    assert _resident(spark, other) is old
     ledger.move_lines(spark, SF_DIR)
-    assert not any(f.storageLevel.useMemory for f in old)
-    assert _resident(spark, other) == [None, None]
+    assert not old.storageLevel.useMemory
+    assert _resident(spark, other) is None
+    assert _resident(spark, SF_DIR) is not None
     ledger.release(spark)
 
 

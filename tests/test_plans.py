@@ -182,14 +182,12 @@ def test_column_groups_fused_to_two_scans(spark, queries):
 def test_respread_plain_arm_drops_exactly_the_spread_exchanges(spark, queries):
     """tools/ab_respread.py's plain arm (`tables.respread_narrow`
     swapped for identity) must remove the respread from exactly the
-    call-time spread sites (a1_hash_agg, move_lines(spread=True) under
-    hg_column_groups) and leave the plain ledger frame alone — and the
-    restore must bring them back, or the tool times one plan in both
-    arms (the r16 ADVICE bug). Counts Repartition nodes of the
-    optimized plan, not plan text: the text carries expression ids.
-    hg_column_groups reads the resident fact, whose optimized plan is
-    an InMemoryRelation, so its spread is counted on the pre-cache
-    (analyzed) plan of the fact it reads, move_lines(spread=True)."""
+    call-time spread site (a1_hash_agg) and leave the ledger fact alone
+    — and the restore must bring it back, or the tool times one plan in
+    both arms. Counts Repartition nodes of the optimized plan, not plan
+    text: the text carries expression ids. The resident fact's
+    optimized plan is an InMemoryRelation, so it is counted on the
+    pre-cache (analyzed) plan."""
     from etl_staging_spark.engines.ledger import move_lines
     from tools.ab_respread import set_spread
 
@@ -199,8 +197,8 @@ def test_respread_plain_arm_drops_exactly_the_spread_exchanges(spark, queries):
             .optimizedPlan().toString().count("Repartition")
             for n in ("a1_hash_agg", "gl_report")
         }
-        counts["hg_column_groups"] = (
-            move_lines(spark, SF_DIR, spread=True)._jdf.queryExecution()
+        counts["move_lines"] = (
+            move_lines(spark, SF_DIR)._jdf.queryExecution()
             .analyzed().toString().count("Repartition")
         )
         return counts
@@ -211,7 +209,7 @@ def test_respread_plain_arm_drops_exactly_the_spread_exchanges(spark, queries):
         plain = reparts()
     finally:
         set_spread(spark, True)
-    assert spread == {"a1_hash_agg": 1, "hg_column_groups": 1, "gl_report": 0}
+    assert spread == {"a1_hash_agg": 1, "move_lines": 0, "gl_report": 0}
     assert plain == dict.fromkeys(spread, 0)
     assert reparts() == spread
 

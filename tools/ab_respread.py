@@ -9,18 +9,12 @@ every consumer measured a +19% net LOSS across 14 ledger entries (the
 consumers' partial aggregates collapse rows before any exchange, and
 per-scope collect jobs re-pay the shuffle), so that spread was
 REVERTED. The respread now stays only where this A/B shows a win: the
-single-pass heavy-aggregate consumers `a1_hash_agg` (−59% with the
-keyed spread) and `hg_column_groups` (move_lines(spread=True), −11%) —
-the DEFAULT list, the only catalog entries whose plan the plain arm
-changes.
+single-pass heavy-aggregate consumer `a1_hash_agg` (−59% with the
+keyed spread) — the DEFAULT list.
 
-Plain arm: `tables.respread_narrow` swapped for identity. Only
-`ledger.move_lines` and `a1_hash_agg` import that name at call time,
-so the swap reaches exactly the spread sites above (modules that bind
-it at import keep theirs); every flip calls `ledger.release`, which
-unpersists and drops the session's resident ledger facts, so a memoized
-fact never times the other arm's plan (the r16 ADVICE bug). Protocol:
-bench.ab_main.
+Plain arm: `tables.respread_narrow` swapped for identity. `a1_hash_agg`
+imports that name at call time, so the swap reaches it (modules that
+bind it at import keep theirs). Protocol: bench.ab_main.
 
 Usage: python tools/ab_respread.py [sf_dir] [rounds] [query ...]
 """
@@ -34,9 +28,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from etl_staging_spark import tables  # noqa: E402
-from etl_staging_spark.engines import ledger  # noqa: E402
 
-DEFAULT = ["a1_hash_agg", "hg_column_groups"]
+DEFAULT = ["a1_hash_agg"]
 
 _RESPREAD = tables.respread_narrow
 
@@ -44,7 +37,6 @@ _RESPREAD = tables.respread_narrow
 def set_spread(spark, on: bool) -> None:
     """Arm setter: the real respread (on) or identity (off)."""
     tables.respread_narrow = _RESPREAD if on else (lambda df, *a, **k: df)
-    ledger.release(spark)
 
 
 if __name__ == "__main__":

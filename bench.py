@@ -10,8 +10,8 @@ bench_last.json holds the full-precision record, including
 "build_exec": each query's [build_s, exec_s] for its fastest rep —
 Python/py4j DataFrame construction vs the noop-sink run (Catalyst
 planning + execution). :func:`timed_run` and :func:`warm` ARE the
-repo's one query-timing protocol: tools/ab_ansi.py,
-tools/ab_respread.py and tools/scaling_probe.py time through them.
+repo's one query-timing protocol: tools/ab_respread.py and
+tools/scaling_probe.py time through them.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Odoo-domain → Spark Column predicate compiler (operator F1).
+"""Odoo-domain → Spark-SQL predicate compiler (operator F1).
 
 The reference expresses every filter as an Odoo *domain*: a list in
 prefix notation with implicit AND, e.g.::
@@ -10,10 +10,11 @@ prefix notation with implicit AND, e.g.::
 
 which the ORM compiles to SQL WHERE via ``_where_calc(...).get_sql()``
 (reference `account_reports/models/account_report.py:1496-1501`,
-`osv/expression.py` semantics). Here the same IR compiles to a
-``pyspark.sql.Column`` tree, so Catalyst sees a plain predicate it can
-push into the parquet scan — the manual "compose filters before the
-scan" optimization of the reference (SURVEY.md §4) becomes free.
+`osv/expression.py` semantics). Here the same IR compiles to Spark-SQL
+text (:func:`domain_to_sql`) — the one builder; :func:`compile_domain`
+parses it once into a ``Column``. Catalyst sees a plain predicate it
+can push into the parquet scan — the manual "compose filters before
+the scan" optimization of the reference (SURVEY.md §4) becomes free.
 
 Supported operators (the set observed across the reference):
 ``= != > >= < <= in not in like ilike not like not ilike =like =ilike``
@@ -28,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .numeric import double_sql
+
 AND, OR, NOT = "&", "|", "!"
 _CONNECTIVES = {AND: 2, OR: 2, NOT: 1}
 
@@ -38,55 +41,6 @@ FALSE_LEAF = (0, "=", 1)
 def _escape_like(value: str) -> str:
     """Escape SQL LIKE wildcards for substring-style (i)like."""
     return value.replace("\\", "\\\\").replace("%", r"\%").replace("_", r"\_")
-
-
-def _leaf_to_column(leaf: Sequence) -> Column:
-    field, op, value = leaf
-    if leaf == TRUE_LEAF or (field, op, value) == TRUE_LEAF:
-        return F.lit(True)
-    if (field, op, value) == FALSE_LEAF:
-        return F.lit(False)
-    col = F.col(field)
-    if op == "=":
-        return col.isNull() if value is None else (col == value)
-    if op in ("!=", "<>"):
-        return col.isNotNull() if value is None else (col != value) | col.isNull()
-    if op == ">":
-        return col > value
-    if op == ">=":
-        return col >= value
-    if op == "<":
-        return col < value
-    if op == "<=":
-        return col <= value
-    if op == "in":
-        vals = list(value)
-        if None in vals:
-            non_null = [v for v in vals if v is not None]
-            return col.isin(non_null) | col.isNull() if non_null else col.isNull()
-        return col.isin(vals)
-    if op == "not in":
-        vals = [v for v in value if v is not None]
-        cond = ~col.isin(vals) if vals else F.lit(True)
-        # Odoo's NOT IN keeps NULL rows (SQL would drop them).
-        return cond | col.isNull() if None not in value else cond & col.isNotNull()
-    if op == "like":
-        return col.like(f"%{_escape_like(value)}%")
-    if op == "not like":
-        return ~col.like(f"%{_escape_like(value)}%") | col.isNull()
-    if op == "ilike":
-        return F.lower(col).like(f"%{_escape_like(value).lower()}%")
-    if op == "not ilike":
-        return ~F.lower(col).like(f"%{_escape_like(value).lower()}%") | col.isNull()
-    if op == "=like":
-        return col.like(value)
-    if op == "=ilike":
-        return F.lower(col).like(value.lower())
-    if op == "not =like":
-        return ~col.like(value) | col.isNull()
-    if op == "not =ilike":
-        return ~F.lower(col).like(value.lower()) | col.isNull()
-    raise ValueError(f"unsupported domain operator {op!r} in {leaf!r}")
 
 
 def normalize(domain: Sequence) -> list:
@@ -110,8 +64,8 @@ def normalize(domain: Sequence) -> list:
 
 
 # Leaf-operator negations, as in osv.expression.TERM_OPERATORS_NEGATION:
-# '!' distributes into leaves instead of wrapping the compiled Column in
-# a SQL NOT. The distinction matters on NULLs — Odoo's NOT(a = 0) is
+# '!' distributes into leaves instead of wrapping the compiled predicate
+# in a SQL NOT. The distinction matters on NULLs — Odoo's NOT(a = 0) is
 # (a != 0), which KEEPS NULL rows, while SQL NOT(a = 0) drops them.
 _NEGATED_OP = {
     "=": "!=", "!=": "=", "<>": "=",
@@ -139,7 +93,7 @@ def distribute_not(tokens: list) -> list:
         if negate:
             # osv.expression.distribute_not special-cases the constant
             # leaves: NOT TRUE_LEAF is FALSE_LEAF (and vice versa), never
-            # an operator flip — (1, '!=', 1) would hit F.col(1).
+            # an operator flip — (1, '!=', 1) would name a field `1`.
             if tuple(token) == TRUE_LEAF:
                 out.append(FALSE_LEAF)
                 return pos + 1
@@ -197,29 +151,9 @@ def expand_hierarchy_leaves(tokens: list, hierarchies: dict | None) -> list:
 
 
 def compile_domain(domain: Sequence | None, hierarchies: dict | None = None) -> Column:
-    """Compile a domain to one Spark Column predicate.
-
-    ``hierarchies``: optional {field: Hierarchy} enabling the
-    ``child_of`` / ``parent_of`` operators (expanded to pushable IN
-    lists; see :func:`expand_hierarchy_leaves`)."""
-    if not domain:
-        return F.lit(True)
-    tokens = distribute_not(
-        expand_hierarchy_leaves(normalize(domain), hierarchies)
-    )
-
-    def parse(pos: int) -> tuple[Column, int]:
-        token = tokens[pos]
-        if isinstance(token, str) and token in _CONNECTIVES:
-            left, mid = parse(pos + 1)
-            right, nxt = parse(mid)
-            return (left & right, nxt) if token == AND else (left | right, nxt)
-        return _leaf_to_column(token), pos + 1
-
-    col, nxt = parse(0)
-    if nxt != len(tokens):
-        raise ValueError(f"trailing tokens in domain {domain!r}")
-    return col
+    """Compile a domain to one Spark Column predicate: the parsed
+    :func:`domain_to_sql` text."""
+    return F.expr(domain_to_sql(domain, hierarchies))
 
 
 def _sql_literal(value) -> str:
@@ -227,23 +161,30 @@ def _sql_literal(value) -> str:
         return "NULL"
     if isinstance(value, bool):
         return "TRUE" if value else "FALSE"
-    if isinstance(value, (int, float)):
+    if isinstance(value, int):
         return repr(value)
+    if isinstance(value, float):
+        return double_sql(value)
     if isinstance(value, str):
-        return "'" + value.replace("'", "''") + "'"
+        # Spark unescapes backslashes inside string literals
+        return "'" + value.replace("\\", "\\\\").replace("'", "''") + "'"
     raise ValueError(f"cannot render SQL literal for {value!r}")
 
 
+def _sql_field(field: str) -> str:
+    """Backtick-quoted field path: each dotted segment is one name."""
+    return ".".join("`" + part.replace("`", "``") + "`" for part in field.split("."))
+
+
 def _leaf_to_sql(leaf: Sequence) -> str:
-    """SQL-string twin of :func:`_leaf_to_column` (same NULL semantics);
-    the Spark-SQL analog of the ORM's `_where_calc(...).get_sql()`.
-    Only the operator subset needed by hot paths is implemented — the
-    Column backend stays the reference implementation."""
+    """One leaf as Spark-SQL text, with Odoo's NULL semantics: ``!=``,
+    ``not in`` and the negated like family keep NULL rows."""
     field, op, value = leaf
     if (field, op, value) == TRUE_LEAF:
         return "TRUE"
     if (field, op, value) == FALSE_LEAF:
         return "FALSE"
+    field = _sql_field(field)
     if op == "=":
         return f"{field} IS NULL" if value is None else f"{field} = {_sql_literal(value)}"
     if op in ("!=", "<>"):
@@ -265,17 +206,30 @@ def _leaf_to_sql(leaf: Sequence) -> str:
         if None in value:
             return f"({base} AND {field} IS NOT NULL)"
         return f"({base} OR {field} IS NULL)"
-    raise ValueError(f"unsupported operator {op!r} for SQL-string domain backend")
+    negated = op.startswith("not ")
+    like = op[4:] if negated else op
+    if like in ("like", "ilike", "=like", "=ilike"):
+        # (i)like matches a substring with the wildcards escaped;
+        # =(i)like takes the value as a raw LIKE pattern
+        pattern = value if like[0] == "=" else f"%{_escape_like(value)}%"
+        target = field
+        if like.endswith("ilike"):
+            target, pattern = f"lower({field})", pattern.lower()
+        if negated:
+            return f"({target} NOT LIKE {_sql_literal(pattern)} OR {field} IS NULL)"
+        return f"{target} LIKE {_sql_literal(pattern)}"
+    raise ValueError(f"unsupported domain operator {op!r} in {leaf!r}")
 
 
 def domain_to_sql(domain: Sequence | None, hierarchies: dict | None = None) -> str:
-    """Compile a domain to ONE Spark-SQL boolean expression string.
+    """Compile a domain to ONE Spark-SQL boolean expression string — the
+    analog of the ORM's ``_where_calc(...).get_sql()``. Hot builders
+    can splice it into a single ``selectExpr``: one driver→JVM
+    roundtrip instead of one per expression node.
 
-    Same semantics as :func:`compile_domain`, emitted as text so hot
-    builders can assemble an entire projection in a single
-    ``selectExpr`` — one driver→JVM roundtrip instead of one per
-    expression node (the Column API's build cost is measurable when a
-    report rebuilds its frame per invocation)."""
+    ``hierarchies``: optional {field: Hierarchy} enabling the
+    ``child_of`` / ``parent_of`` operators (expanded to pushable IN
+    lists; see :func:`expand_hierarchy_leaves`)."""
     if not domain:
         return "TRUE"
     tokens = distribute_not(expand_hierarchy_leaves(normalize(domain), hierarchies))
@@ -297,9 +251,6 @@ def domain_to_sql(domain: Sequence | None, hierarchies: dict | None = None) -> s
 
 def and_join(*domains: Sequence | None) -> Column:
     """AND-combine several domains (the reference's filter pipeline is a
-    conjunction of per-filter domains, `account_report.py:1458-1480`)."""
-    col = F.lit(True)
-    for d in domains:
-        if d:
-            col = col & compile_domain(d)
-    return col
+    conjunction of per-filter domains, `account_report.py:1458-1480`);
+    concatenated domains are implicitly AND-ed."""
+    return compile_domain([token for d in domains if d for token in d])

@@ -139,7 +139,6 @@ def evaluate(
         formula, key = queue.pop(0)
         terms = [t for t in TERM_SPLIT_RE.split(formula) if t and not _is_float(t)]
         if terms:
-            progressed = False
             for term in terms:
                 sub = eval_dict.get(term)
                 if sub is None:
@@ -153,13 +152,8 @@ def evaluate(
                     f"({sub})",
                     formula,
                 )
-                progressed = True
+            # terms not substitutable yet keep looping (guard bounds us)
             queue.append((formula, key))
-            if not progressed and all(
-                isinstance(eval_dict.get(t), (int, float)) is False for t in terms
-            ):
-                # nothing substitutable yet; keep looping (guard bounds us)
-                pass
             continue
 
         try:

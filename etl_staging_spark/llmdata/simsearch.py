@@ -34,7 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
-from ..numeric import pround
+from ..numeric import double_sql, pround
 from ..tables import pin, pins_of
 
 from .hashing import hyperplanes
@@ -42,40 +42,15 @@ from .hashing import hyperplanes
 DEC = "decimal(30,15)"
 
 
-def _lit_vec(vals, cast: str | None = None) -> Column:
-    """Literal double array built as ONE parsed SQL expression instead
-    of ``len(vals)`` per-element ``F.lit()`` py4j roundtrips. Python's
-    ``repr`` of a float is a shortest round-trip decimal, so
-    ``<repr>D`` parses to the bit-identical double Literal that
-    ``F.lit`` would create — the resulting expression tree
-    (CreateArray of double Literals, optionally a CAST per element) is
-    unchanged, only the driver-side construction path differs.
-    Measured (r16): the centroid/codebook folds spent 2-4 s PER QUERY
-    BUILD in py4j chatter at 8x64 centroid + 32x16 codebook literals
-    (``pq_ivf_topk``); one ``expr()`` per array removes ~96% of the
-    roundtrips. Non-finite components (no certified path produces
-    them) fall back to the per-element form rather than emit
-    unparseable ``inf``/``nan`` tokens."""
-    vs = [float(v) for v in vals]
-    if not all(math.isfinite(v) for v in vs):
-        elems = [F.lit(v) for v in vs]
-        if cast:
-            elems = [e.cast(cast) for e in elems]
-        return F.array(*elems)
-    if cast:
-        body = ",".join(f"CAST({v!r}D AS {cast})" for v in vs)
-    else:
-        body = ",".join(f"{v!r}D" for v in vs)
-    return F.expr(f"array({body})")
-
-
-def _vec_sql(vals) -> str | None:
-    """SQL text of a literal double array (``_lit_vec``'s string twin),
-    or None when a component is non-finite (no parseable literal)."""
-    vs = [float(v) for v in vals]
-    if not all(math.isfinite(v) for v in vs):
-        return None
-    return "array(" + ",".join(f"{v!r}D" for v in vs) + ")"
+def _vec_sql(vals) -> str:
+    """SQL text of a literal double array, parsed as ONE expression
+    instead of ``len(vals)`` per-element ``F.lit()`` py4j roundtrips
+    (`numeric.double_sql`: the bit-identical double Literals, non-finite
+    components included). Measured (r16): the centroid/codebook folds
+    spent 2-4 s PER QUERY BUILD in py4j chatter at 8x64 centroid +
+    32x16 codebook literals (``pq_ivf_topk``); one parse per array
+    removes ~96% of the roundtrips."""
+    return "array(" + ",".join(double_sql(v) for v in vals) + ")"
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -92,16 +67,15 @@ def _dot_sql(a: str, b: str) -> str:
     )
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Exact-decimal dot product of two array<float> columns, as double."""
-    prods = F.zip_with(a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(DEC))
-    return F.aggregate(
-        prods, F.lit(0).cast(DEC), lambda acc, x: (acc + x).cast(DEC)
-    ).cast("double")
+def _dot(a: str, b: str) -> Column:
+    """Exact-decimal dot product of two array<float> SQL fragments, as
+    double."""
+    return F.expr(_dot_sql(a, b))
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding", out: str = "nrm") -> DataFrame:
-    return df.withColumn(out, F.sqrt(_dot(F.col(vec_col), F.col(vec_col))))
+    v = f"`{vec_col}`"
+    return df.withColumn(out, F.sqrt(_dot(v, v)))
 
 
 # Parallelism guard for the scoring stages: a small corpus arrives as
@@ -128,7 +102,21 @@ def _narrow_checkpoint(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def _sign_nonneg(a: Column, b: Column) -> Column:
+def _ddot_mass_sql(a: str, b: str, finish: str) -> str:
+    """ONE plain-double fold over two array SQL fragments accumulating
+    the dot Σx·y (``acc.s``) and the absolute mass Σ|x·y| (``acc.m``),
+    finished by the SQL lambda body ``finish`` over ``acc`` — the
+    probe behind `_sign_nonneg` and the fast argmax."""
+    return (
+        f"aggregate(zip_with({a},{b},"
+        "(x,y)->CAST(x AS DOUBLE)*CAST(y AS DOUBLE)),"
+        "named_struct('s',0.0D,'m',0.0D),"
+        "(acc,x)->named_struct('s',acc.s+x,'m',acc.m+abs(x)),"
+        f"acc -> {finish})"
+    )
+
+
+def _sign_nonneg(a: str, b: str) -> Column:
     """``_dot(a, b) >= 0`` decided cheaply: ONE double fold accumulates
     the dot AND the absolute mass Σ|x·y|; the double sign is trusted
     outside the error envelope |dot| > 1e-12·(mass + 1), which bounds
@@ -139,17 +127,10 @@ def _sign_nonneg(a: Column, b: Column) -> Column:
     NULL and COALESCE falls through to the canonical decimal fold
     (lazily, per knife-edge row only). Output identical to the
     decimal-only sign."""
-    probe = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.struct(F.lit(0.0).alias("s"), F.lit(0.0).alias("m")),
-        lambda acc, x: F.struct(
-            (acc["s"] + x).alias("s"), (acc["m"] + F.abs(x)).alias("m")
-        ),
-        lambda acc: F.when(
-            F.abs(acc["s"]) > (acc["m"] + F.lit(1.0)) * 1e-12, acc["s"] >= 0
-        ),
+    probe = _ddot_mass_sql(
+        a, b, "CASE WHEN abs(acc.s) > (acc.m + 1.0D) * 1e-12D THEN acc.s >= 0 END"
     )
-    return F.coalesce(probe, _dot(a, b) >= 0)
+    return F.expr(f"coalesce({probe}, {_dot_sql(a, b)} >= 0)")
 
 
 def cosine_scored(
@@ -187,7 +168,7 @@ def cosine_scored(
         .select(
             "qid",
             "cid",
-            (_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias(
+            (_dot("qv", "cv") / (F.col("qn") * F.col("cn"))).alias(
                 "cos_raw"
             ),
         )
@@ -256,13 +237,14 @@ def _two_phase_topk(
 N_PLANES = 8
 
 
-def _bucket(vec_col: Column, dim: int) -> Column:
-    """8-char '0'/'1' sign-LSH bucket key (deterministic hyperplanes)."""
+def _bucket(vec_col: str, dim: int) -> Column:
+    """8-char '0'/'1' sign-LSH bucket key (deterministic hyperplanes)
+    of the array column ``vec_col``."""
     planes = hyperplanes(N_PLANES, dim)
     bits = []
     for w_p in planes:
-        lits = _lit_vec(w_p)
-        bits.append(F.when(_sign_nonneg(lits, vec_col), F.lit("1")).otherwise(F.lit("0")))
+        sign = _sign_nonneg(_vec_sql(w_p), f"`{vec_col}`")
+        bits.append(F.when(sign, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
 
 
@@ -276,7 +258,7 @@ def lsh_bucketed_topk(
 ) -> DataFrame:
     """ANN: top-k by cosine *within the query's sign-LSH bucket*."""
     normed = with_norm(_respread_narrow(emb), vec_col).withColumn(
-        "bkt", _bucket(F.col(vec_col), dim)
+        "bkt", _bucket(vec_col, dim)
     )
     q = normed.where(query_pred).select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"),
@@ -289,7 +271,7 @@ def lsh_bucketed_topk(
     scored = (
         c.join(q, "bkt")
         .where(F.col("cid") != F.col("qid"))
-        .withColumn("cos_raw", _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
+        .withColumn("cos_raw", _dot("qv", "cv") / (F.col("qn") * F.col("cn")))
     )
     return _two_phase_topk(scored, k)
 
@@ -486,7 +468,7 @@ def lsh_multitable_topk(
         .join(F.broadcast(q), "qid")
         .join(c, "cid")
         .withColumn(
-            "cos_raw", _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+            "cos_raw", _dot("qv", "cv") / (F.col("qn") * F.col("cn"))
         )
     )
     return pin(_two_phase_topk(scored, k), normed, *pins_of(cand))
@@ -646,8 +628,8 @@ def _verify_pairs(
         F.col(id_col).alias("d2"), F.col(vec_col).alias("vb"),
         F.col("nrm").alias("nb"),
     )
-    cos_fast = _ddot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    cos_exact = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cos_fast = _ddot("va", "vb") / (F.col("na") * F.col("nb"))
+    cos_exact = _dot("va", "vb") / (F.col("na") * F.col("nb"))
     return (
         cand.join(va, "d1")
         .join(vb, "d2")
@@ -693,10 +675,8 @@ def cosine_dup_pairs(
     for b in range(bands):
         bits = []
         for w_p in planes[b * per_band : (b + 1) * per_band]:
-            lits = _lit_vec(w_p)
-            bits.append(
-                F.when(_sign_nonneg(lits, F.col(vec_col)), F.lit("1")).otherwise(F.lit("0"))
-            )
+            sign = _sign_nonneg(_vec_sql(w_p), f"`{vec_col}`")
+            bits.append(F.when(sign, F.lit("1")).otherwise(F.lit("0")))
         band_cols.append(F.concat(F.lit(f"{b}|"), *bits))
     banded = normed.select(
         F.col(id_col).alias("vid"), F.explode(F.array(*band_cols)).alias("bkt")
@@ -825,15 +805,14 @@ def train_ivf_centroids(
     return [c.tolist() for c in C]
 
 
-def _ddot(a: Column, b: Column) -> Column:
-    """Plain-double dot product — ~6x cheaper than the decimal fold
-    (HOFs are interpreted; BigDecimal ops dominate `_dot`'s cost). NOT
-    cross-engine canonical: use only as an internal PREFILTER with
-    slack, never on an output edge."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _ddot(a: str, b: str) -> Column:
+    """Plain-double dot product of two array SQL fragments — ~6x
+    cheaper than the decimal fold (HOFs are interpreted; BigDecimal ops
+    dominate `_dot`'s cost). NOT cross-engine canonical: use only as an
+    internal PREFILTER with slack, never on an output edge."""
+    return F.expr(
+        f"aggregate(zip_with({a},{b},(x,y)->CAST(x AS DOUBLE)*CAST(y AS DOUBLE)),"
+        "0.0D,(acc,x)->acc+x)"
     )
 
 
@@ -857,10 +836,10 @@ def _py_decimal_norm(vec: list[float]) -> float:
 
 def _probe_cells_expr(
     cent_arrs: dict[int, list[float]],
-    vcol: Column | str,
+    vcol: str,
     probe: int,
     cent_norms: dict[int, float] | None = None,
-    nrm_col: Column | str | None = None,
+    nrm_col: str | None = None,
     fast: bool = False,
 ) -> Column:
     """The ``probe`` nearest centroid ids for a vector, as one array
@@ -874,9 +853,8 @@ def _probe_cells_expr(
     ROW re-derives every centroid's self-dot plus its own norm K+1
     times, which measured ~2x the whole assignment cost.
 
-    Pass ``vcol``/``nrm_col`` as SQL fragments (strings) to build the
-    whole expression through ONE parsed ``expr()`` — see
-    :func:`_cell_scores_expr` for why.
+    ``vcol``/``nrm_col`` are SQL fragments: the whole expression is
+    ONE parsed ``expr()`` — see :func:`_cell_scores_sql` for why.
 
     ``fast=True`` (cid-only consumers — assignment scans that never
     publish the score) routes through the certified double-prefilter
@@ -891,12 +869,7 @@ def _probe_cells_expr(
         if sql is not None:
             return F.expr(sql)
     scored = _cell_scores_sql(cent_arrs, vcol, cent_norms, nrm_col)
-    if scored is not None:
-        return F.expr(f"transform(slice(array_sort({scored}), 1, {probe}), s -> s.cid)")
-    scored_col = _cell_scores_expr(cent_arrs, vcol, cent_norms, nrm_col)
-    return F.transform(
-        F.slice(F.array_sort(scored_col), 1, probe), lambda s: s["cid"]
-    )
+    return F.expr(f"transform(slice(array_sort({scored}), 1, {probe}), s -> s.cid)")
 
 
 def _ddot_mass_struct_sql(
@@ -915,22 +888,19 @@ def _ddot_mass_struct_sql(
     slack on top; a loose envelope only sends more rows to the exact
     fallback, never changes a result."""
     div = div_sql or ""
-    return (
-        f"aggregate(zip_with({arr_sql},{vexpr},"
-        "(x,y)->CAST(x AS DOUBLE)*CAST(y AS DOUBLE)),"
-        "named_struct('s',0.0D,'m',0.0D),"
-        "(acc,x)->named_struct('s',acc.s+x,'m',acc.m+abs(x)),"
-        f"acc -> named_struct('neg', (- acc.s){div},"
-        f" 'env', (1e-11D * (acc.m + 1.0D)){div}, 'cid', {int(cid)}))"
+    return _ddot_mass_sql(
+        arr_sql, vexpr,
+        f"named_struct('neg', (- acc.s){div},"
+        f" 'env', (1e-11D * (acc.m + 1.0D)){div}, 'cid', {int(cid)})",
     )
 
 
 def _probe_cells_fast_sql(
     cent_arrs: dict[int, list[float]],
-    vexpr: Column | str,
+    vexpr: str,
     probe: int,
     cent_norms: dict[int, float] | None = None,
-    nrm_expr: Column | str | None = None,
+    nrm_expr: str | None = None,
 ) -> str | None:
     """Double-prefilter form of :func:`_probe_cells_expr` for
     cid-only consumers. The fast ranking is trusted only when every
@@ -942,10 +912,6 @@ def _probe_cells_fast_sql(
     decimal expression for that row only. NULL vectors/elements make
     every margin NULL, which also falls through — anomalies can only
     widen the fallback, never flip the fast path."""
-    if not isinstance(vexpr, str):
-        return None
-    if nrm_expr is not None and not isinstance(nrm_expr, str):
-        return None
     if cent_norms is None or probe >= len(cent_arrs):
         # no precomputed norms (inline decimal norm folds dominate
         # either way) or probe covers every cell (no certifying margin
@@ -953,11 +919,8 @@ def _probe_cells_fast_sql(
         return None
     structs = []
     for cid, cvec in sorted(cent_arrs.items()):
-        varr = _vec_sql(cvec)
-        if varr is None or not math.isfinite(cent_norms[cid]):
-            return None
-        div = f" / ({cent_norms[cid]!r}D * {nrm_expr})"
-        structs.append(_ddot_mass_struct_sql(varr, vexpr, cid, div))
+        div = f" / ({double_sql(cent_norms[cid])} * {nrm_expr})"
+        structs.append(_ddot_mass_struct_sql(_vec_sql(cvec), vexpr, cid, div))
     cond = " AND ".join(
         f"((s[{i + 1}].neg - s[{i}].neg) > (s[{i}].env + s[{i + 1}].env))"
         for i in range(probe)
@@ -968,8 +931,6 @@ def _probe_cells_fast_sql(
         f" THEN transform(slice(s, 1, {probe}), t -> t.cid) END)[0]"
     )
     exact = _cell_scores_sql(cent_arrs, vexpr, cent_norms, nrm_expr)
-    if exact is None:
-        return None
     return (
         f"coalesce({fast},"
         f" transform(slice(array_sort({exact}), 1, {probe}), s -> s.cid))"
@@ -978,30 +939,25 @@ def _probe_cells_fast_sql(
 
 def _cell_scores_sql(
     cent_arrs: dict[int, list[float]],
-    vexpr: Column | str,
+    vexpr: str,
     cent_norms: dict[int, float] | None = None,
-    nrm_expr: Column | str | None = None,
-) -> str | None:
-    """SQL-text form of :func:`_cell_scores_expr`, or None when the
-    inputs are Columns (legacy path) or a literal is non-finite. One
-    parsed string replaces ~K x (dim + lambda) py4j roundtrips —
-    measured (r16) at 2 s per build for K=8 x dim=64 — while producing
-    the IDENTICAL expression tree (same literals via shortest-repr
-    round-trip, same zip_with/aggregate decimal fold, same struct
-    names), so results and plans are unchanged."""
-    if not isinstance(vexpr, str):
-        return None
-    if nrm_expr is not None and not isinstance(nrm_expr, str):
-        return None
+    nrm_expr: str | None = None,
+) -> str:
+    """SQL text of the per-centroid (negated-cosine, cid) struct array
+    behind :func:`_probe_cells_expr`, factored so consumers that need
+    the SCORE as well as the cell (`cluster_profile`'s mean-cosine
+    column) share the exact expression the certified IVF entries
+    assign with — the assignment and the reported cosine can never
+    drift. One parsed string replaces ~K x (dim + lambda) py4j
+    roundtrips — measured (r16) at 2 s per build for K=8 x dim=64 —
+    while producing the IDENTICAL expression tree (same literals via
+    shortest-repr round-trip, same zip_with/aggregate decimal fold,
+    same struct names)."""
     parts = []
     for cid, cvec in sorted(cent_arrs.items()):
         varr = _vec_sql(cvec)
-        if varr is None:
-            return None
         if cent_norms is not None:
-            cn = repr(float(cent_norms[cid])) + "D"
-            if not math.isfinite(cent_norms[cid]):
-                return None
+            cn = double_sql(cent_norms[cid])
         else:
             cn = f"SQRT({_dot_sql(varr, varr)})"
         vn = nrm_expr if nrm_expr is not None else f"SQRT({_dot_sql(vexpr, vexpr)})"
@@ -1010,51 +966,6 @@ def _cell_scores_sql(
             f" 'cid', {int(cid)})"
         )
     return "array(" + ",".join(parts) + ")"
-
-
-def _cell_scores_expr(
-    cent_arrs: dict[int, list[float]],
-    vcol: Column | str,
-    cent_norms: dict[int, float] | None = None,
-    nrm_col: Column | str | None = None,
-) -> Column:
-    """The per-centroid (negated-cosine, cid) struct array behind
-    :func:`_probe_cells_expr`, factored so consumers that need the
-    SCORE as well as the cell (`cluster_profile`'s mean-cosine column)
-    share the exact expression the certified IVF entries assign with —
-    the assignment and the reported cosine can never drift. String
-    ``vcol``/``nrm_col`` take the one-parse SQL path
-    (:func:`_cell_scores_sql`); Columns keep the per-element build."""
-    sql = _cell_scores_sql(cent_arrs, vcol, cent_norms, nrm_col)
-    if sql is not None:
-        return F.expr(sql)
-    if isinstance(vcol, str):
-        vcol = F.expr(vcol)
-    if isinstance(nrm_col, str):
-        nrm_col = F.expr(nrm_col)
-    return F.array(
-        *[
-            F.struct(
-                (
-                    -_dot(_lit_vec(cvec), vcol)
-                    / (
-                        (
-                            F.lit(cent_norms[cid])
-                            if cent_norms is not None
-                            else F.sqrt(_dot(_lit_vec(cvec), _lit_vec(cvec)))
-                        )
-                        * (
-                            nrm_col
-                            if nrm_col is not None
-                            else F.sqrt(_dot(vcol, vcol))
-                        )
-                    )
-                ).alias("negc"),
-                F.lit(cid).alias("cid"),
-            )
-            for cid, cvec in sorted(cent_arrs.items())
-        ]
-    )
 
 
 def _resolve_centroids(
@@ -1116,7 +1027,7 @@ def ivf_topk(
         emb, centroids, n_centroids, id_col, vec_col
     )
 
-    def probe_cells(vcol: Column | str, probe: int, fast: bool = False) -> Column:
+    def probe_cells(vcol: str, probe: int, fast: bool = False) -> Column:
         return _probe_cells_expr(
             cent_arrs, vcol, probe, cent_norms=cent_norms, nrm_col="nrm",
             fast=fast,
@@ -1132,7 +1043,7 @@ def ivf_topk(
         F.col(id_col).alias("qid"),
         F.col(vec_col).alias("qv"),
         F.col("nrm").alias("qn"),
-        F.explode(probe_cells(F.col(vec_col), n_probe)).alias("cell"),
+        F.explode(probe_cells(vec_col, n_probe)).alias("cell"),
     )
     c = normed.select(
         F.col(id_col).alias("cid_"),
@@ -1143,7 +1054,7 @@ def ivf_topk(
     scored = (
         c.join(F.broadcast(q), "cell")
         .where(F.col("cid_") != F.col("qid"))
-        .withColumn("cos_raw", _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
+        .withColumn("cos_raw", _dot("qv", "cv") / (F.col("qn") * F.col("cn")))
         .withColumnRenamed("cid_", "cid")
     )
     return pin(_two_phase_topk(scored, k), normed)
@@ -1529,7 +1440,7 @@ def cluster_profile(
     sanity check before trusting semantic dedup inside a cell.
 
     Ties break toward the lower centroid id (the shared
-    `_cell_scores_expr` ordering) and toward the lower label; a NULL
+    `_cell_scores_sql` ordering) and toward the lower label; a NULL
     label sorts last so it never wins a tie. Output: (cell, n_members,
     share, avg_cos, modal_label, modal_share); avg_cos is the exact-
     decimal mean of per-row cosines prounded to 6 (order-free
@@ -1545,9 +1456,7 @@ def cluster_profile(
         emb, centroids, n_centroids, id_col, vec_col
     )
     normed = with_norm(_respread_narrow(emb), vec_col)
-    scored = _cell_scores_expr(
-        cent_arrs, vec_col, cent_norms, "nrm"
-    )
+    scored = F.expr(_cell_scores_sql(cent_arrs, vec_col, cent_norms, "nrm"))
     # the narrow per-row frame feeds TWO aggregates (cell stats and the
     # modal-label pass); materialize it once so the broadcast-centroid
     # fold runs ONE scan, not two (interleaved A/B at sf0.1:
@@ -2214,86 +2123,52 @@ def _adc_score_sql(lut: dict, m: int, n_codes: int) -> str:
     return f"CAST({acc} AS DOUBLE)"
 
 
-def _pq_best(book_j: dict[int, list[float]], sub_vec: Column | str) -> Column:
-    """Best (negated-dot, code) struct of one subvector against one
-    subspace codebook — the PQ argmax with ties toward the lower code
-    id, shared by the balance card, the encoder and the ADC scorer so
-    the assignment rule can never drift between them. Exact-decimal
-    dots (`_dot`), the `_cell_scores_expr` sort convention. A string
-    ``sub_vec`` (SQL fragment) takes the one-parse path
-    (`_cell_scores_sql`'s rationale); a Column keeps the per-element
-    build."""
-    sql = _pq_best_sql(book_j, sub_vec) if isinstance(sub_vec, str) else None
-    if sql is not None:
-        return F.expr(sql)
-    if isinstance(sub_vec, str):
-        sub_vec = F.expr(sub_vec)
-    return F.array_sort(
-        F.array(
-            *[
-                F.struct(
-                    (-_dot(_lit_vec(cvec), sub_vec))
-                    .alias("negd"),
-                    F.lit(cid).alias("cid"),
-                )
-                for cid, cvec in sorted(book_j.items())
-            ]
-        )
-    ).getItem(0)
-
-
-def _pq_best_sql(book_j: dict[int, list[float]], sub_expr: str) -> str | None:
-    """SQL text of :func:`_pq_best` over a SQL subvector fragment, or
-    None when a codebook entry is non-finite."""
-    parts = []
-    for cid, cvec in sorted(book_j.items()):
-        varr = _vec_sql(cvec)
-        if varr is None:
-            return None
-        parts.append(
-            f"named_struct('negd', (- {_dot_sql(varr, sub_expr)}),"
-            f" 'cid', {int(cid)})"
-        )
+def _pq_best_sql(book_j: dict[int, list[float]], sub_expr: str) -> str:
+    """Best (negated-dot, code) struct of one subvector SQL fragment
+    against one subspace codebook — the PQ argmax with ties toward the
+    lower code id, shared by the balance card, the encoder and the ADC
+    scorer so the assignment rule can never drift between them.
+    Exact-decimal dots (`_dot`), the `_cell_scores_sql` sort
+    convention."""
+    parts = [
+        f"named_struct('negd', (- {_dot_sql(_vec_sql(cvec), sub_expr)}),"
+        f" 'cid', {int(cid)})"
+        for cid, cvec in sorted(book_j.items())
+    ]
     return "array_sort(array(" + ",".join(parts) + "))[0]"
 
 
 def _pq_code_expr(book_j: dict[int, list[float]], sub_expr: str) -> Column:
     """The PQ code id for ENCODERS: the certified double-prefilter
-    argmax when available, else the exact `_pq_best` cid. Shares the
-    assignment rule with the balance card through `_pq_best_sql` (the
-    fallback branch IS that expression)."""
+    argmax when available, else the exact `_pq_best_sql` cid (the
+    fast path's fallback branch IS that expression)."""
     sql = _pq_best_cid_fast_sql(book_j, sub_expr)
-    if sql is not None:
-        return F.expr(sql)
-    return _pq_best(book_j, sub_expr)["cid"]
+    return F.expr(sql if sql is not None else f"{_pq_best_sql(book_j, sub_expr)}.cid")
 
 
 def _pq_best_cid_fast_sql(
     book_j: dict[int, list[float]], sub_expr: str
 ) -> str | None:
-    """Code id of :func:`_pq_best` through the certified
+    """Code id of :func:`_pq_best_sql` through the certified
     double-prefilter argmax (`_probe_cells_fast_sql`'s machinery with
     no norm division — PQ scores are raw dots): the plain-double
     ranking is trusted only when the top-2 margin exceeds both
     candidates' proven error envelopes; knife-edge rows fall back
     (lazily) to the exact-decimal argmax. For ENCODERS only — the
     balance card publishes the dot value and keeps the exact
-    expression."""
-    structs = []
-    for cid, cvec in sorted(book_j.items()):
-        varr = _vec_sql(cvec)
-        if varr is None:
-            return None
-        structs.append(_ddot_mass_struct_sql(varr, sub_expr, cid, None))
-    exact = _pq_best_sql(book_j, sub_expr)
-    if exact is None or len(book_j) < 2:
+    expression. None for a single-code book (no margin to certify)."""
+    if len(book_j) < 2:
         return None
+    structs = [
+        _ddot_mass_struct_sql(_vec_sql(cvec), sub_expr, cid, None)
+        for cid, cvec in sorted(book_j.items())
+    ]
     fast = (
         f"transform(array(array_sort(array({','.join(structs)}))),"
         " s -> CASE WHEN ((s[1].neg - s[0].neg) > (s[0].env + s[1].env))"
         " THEN s[0].cid END)[0]"
     )
-    return f"coalesce({fast}, {exact}.cid)"
+    return f"coalesce({fast}, {_pq_best_sql(book_j, sub_expr)}.cid)"
 
 
 def pq_code_balance(
@@ -2332,7 +2207,7 @@ def pq_code_balance(
     spread = _respread_narrow(emb.select(id_col, vec_col))
     per_sub = []
     for j in range(m):
-        best = _pq_best(books[j], f"slice(`{vec_col}`, {j * d + 1}, {d})")
+        best = F.expr(_pq_best_sql(books[j], f"slice(`{vec_col}`, {j * d + 1}, {d})"))
         per_sub.append(
             F.struct(
                 F.lit(j).cast("int").alias("sub"),
@@ -2377,7 +2252,7 @@ def pq_encode(
     """Encode every vector as its m PQ codes — the compressed
     representation an IVF-PQ index stores instead of raw floats
     (m bytes per vector at K<=256 vs 4*dim): one narrow scan, all m
-    argmax folds (`_pq_best`) in a single projection, eagerly reduced
+    argmax folds (`_pq_best_sql`) in a single projection, eagerly reduced
     to the (id, codes array<int>) frame (`_narrow_checkpoint` — the
     ADC scorer fans this frame out per query and must not re-run the
     assignment per fan-out)."""

@@ -695,8 +695,9 @@ def embedding_stats_card(
     norm_min, norm_max, norm_mean), ordered by group NULLS LAST.
 
     Numeric determinism: each row's norm is the exact-decimal
-    self-dot (`simsearch._dot`, DECIMAL(30,15) element products —
-    order-independent by construction) rounded to 9 places; the mean
+    self-dot (`simsearch._dot` over the column's SQL fragment — the
+    same decimal-fold text every similarity operator parses —
+    DECIMAL(30,15) element products, order-independent by construction) rounded to 9 places; the mean
     sums those rounded norms as DECIMAL(38,9) (exact, so partition
     order can't move the sum) before one IEEE division, and every
     published stat is pround-6. Scale shape: ONE map-side-combinable
@@ -712,7 +713,7 @@ def embedding_stats_card(
     # (the session runs ANSI, so a decimal-overflow element is a loud
     # error in both engines, never a silently skipped row)
     bad = v.isNotNull() & F.exists(v, lambda x: x.isNull())
-    nrm9 = pround(F.sqrt(_dot(v, v)), 9)
+    nrm9 = pround(F.sqrt(_dot(f"`{vec_col}`", f"`{vec_col}`")), 9)
     dim = F.when(v.isNotNull(), F.size(v)).cast("long")
     agg = (
         embs.select(

@@ -34,6 +34,19 @@ def o_pround(expr: str, scale: int) -> str:
     return f"FLOOR(({expr}) * {m} + 0.5) / {m}"
 
 
+def double_sql(x: float) -> str:
+    """Spark-SQL text of a double literal. Python's ``repr`` is the
+    shortest round-trip decimal, so ``<repr>D`` parses to the
+    bit-identical double ``F.lit`` would create; the non-finite values
+    have no literal token and render as a CAST Catalyst constant-folds
+    to the same Literal."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
 def py_pround(x: float, scale: int) -> float:
     """Driver-side scalar twin of :func:`pround` — the same
     floor(x*10^s + 0.5)/10^s IEEE chain for values already collected

@@ -4344,7 +4344,7 @@ def cluster_profile_q(spark, sf_dir):
     mean cosine-to-centroid (coherence) and modal-label purity — the
     topic-balance read before cluster reweighting and the sanity check
     before trusting semantic dedup inside a cell. Shares
-    `_cell_scores_expr` with the certified IVF assignment (reported
+    `_cell_scores_sql` with the certified IVF assignment (reported
     cosine can never drift from the assignment); exact-decimal mean of
     prounded cosines (order-free); broadcast centroid literals;
     bounded aggregates/windows only."""
@@ -4392,7 +4392,7 @@ def cluster_balanced_sample_q(spark, sf_dir):
     `cluster_profile` reads for): downsample the embeddings corpus to
     ~120 vectors with a UNIFORM per-cell quota, flattening topic-
     cluster skew before mixture assembly. Assignment is the certified
-    IVF rule (shared `_cell_scores_expr`); the keep decision is the
+    IVF rule (shared `_cell_scores_sql`); the keep decision is the
     shared salted-bucket threshold, so the whole chain is
     deterministic. ONE broadcast-literal scan + bounded count collect
     + literal-CASE filter — no join, the `mixture_sample` plan family

@@ -97,7 +97,6 @@ _SLOW_TESTS = {
         "test_compaction_preserves_params_marker",
     )
 } | {
-    ("test_domain_property", "test_domain_sql_backend_matches_column_backend"),
     ("test_all_exports", "test_dataset_card_assembles_and_exports"),
     ("test_all_exports", "test_report_exports_all_formats"),
     ("test_all_exports", "test_dataset_card_embeddings_optional_but_not_swallowed"),

@@ -9,7 +9,9 @@ from __future__ import annotations
 
 import pytest
 
-from etl_staging_spark.domain import compile_domain, normalize
+from pyspark.sql import functions as F
+
+from etl_staging_spark.domain import compile_domain, domain_to_sql, normalize
 
 ROWS = [
     (1, "1010", "posted", 100.0),
@@ -90,7 +92,26 @@ def test_malformed_raises():
 
 def test_negated_constant_leaves(df):
     # osv.expression flips TRUE_LEAF<->FALSE_LEAF under '!' instead of
-    # producing (1, '!=', 1), which would try F.col(1).
+    # producing (1, '!=', 1), which would name a field `1`.
     assert ids(df, ["!", (1, "=", 1)]) == []
     assert ids(df, ["!", (0, "=", 1)]) == [1, 2, 3, 4, 5]
     assert ids(df, ["!", "&", (1, "=", 1), ("state", "=", "posted")]) == [3, 5]
+
+
+def test_domain_sql_escapes_backslash_and_quote(spark):
+    # Spark unescapes backslashes inside SQL string literals: the text
+    # must escape them (and quotes) to compare against the raw value
+    named = spark.createDataFrame(
+        [(1, "a\\b"), (2, "ab"), (3, "it's"), (4, "a\\\\b")], "id long, name string"
+    )
+    for value, want in (("a\\b", [1]), ("it's", [3]), ("a\\\\b", [4])):
+        pred = F.expr(domain_to_sql([("name", "=", value)]))
+        assert sorted(r.id for r in named.where(pred).collect()) == want, value
+
+
+def test_dotted_field_is_a_struct_path(spark):
+    nested = spark.createDataFrame(
+        [(1, ("BE",)), (2, ("FR",))], "id long, partner struct<country_code: string>"
+    )
+    dom = [("partner.country_code", "=", "BE")]
+    assert [r.id for r in nested.where(compile_domain(dom)).collect()] == [1]

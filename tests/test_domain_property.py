@@ -4,9 +4,13 @@ must keep exactly the rows a direct Python evaluation of the tree keeps
 (under the compiler's documented Odoo NULL semantics: `!=`/`not in`/
 `not like` keep NULL rows). Exercises normalization, the prefix-stack
 compilation and every leaf operator under arbitrary nesting — the class
-of bug a fixed fixture can't reach."""
+of bug a fixed fixture can't reach. String values and patterns carry
+the characters SQL text must escape (backslash, quote) and the LIKE
+wildcards (``%``, ``_``)."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -15,24 +19,47 @@ from hypothesis import strategies as st
 from etl_staging_spark.domain import compile_domain
 
 ROWS = [
-    # (id, a int|None, s string|None)
-    (0, None, None),
-    (1, 0, ""),
-    (2, 1, "alpha"),
-    (3, 2, "beta"),
-    (4, 3, "alphabet"),
-    (5, 5, "Gamma"),
-    (6, 10, "delta"),
-    (7, -4, "ALPHA"),
+    # (id, a int|None, b int|None, s string|None)
+    (0, None, 2, None),
+    (1, 0, None, ""),
+    (2, 1, -1, "alpha"),
+    (3, 2, 0, "beta"),
+    (4, 3, 3, "alphabet"),
+    (5, 5, None, "Gamma"),
+    (6, 10, 1, "delta"),
+    (7, -4, -4, "ALPHA"),
+    (8, None, None, "a\\b"),
+    (9, 1, 5, "it's"),
+    (10, 7, 10, "50%"),
+    (11, 0, 2, "x_y"),
+    (12, 2, -1, "x-y"),
 ]
 
 A_VALUES = [None, 0, 1, 2, 3, 5, 10, -4, 7]
-S_VALUES = [None, "", "alpha", "beta", "Gamma", "zzz"]
-S_PATTERNS = ["alpha", "a", "Ga", "zz", ""]
+S_VALUES = [None, "", "alpha", "beta", "Gamma", "zzz", "a\\b", "it's", "50%", "x_y"]
+S_PATTERNS = ["alpha", "a", "Ga", "zz", "", "\\", "'", "%", "_", "x_y", "a\\b"]
+# raw LIKE patterns for =like/=ilike: backslash escapes the next char
+LIKE_PATTERNS = ["a%", "%A", "_lpha", "%\\%", "x\\_y", "x_y", "%\\\\%", "it's", "%"]
 
 
 def _like(hay: str | None, needle: str) -> bool:
     return hay is not None and needle in hay
+
+
+def _like_match(hay: str | None, pattern: str) -> bool:
+    """SQL LIKE with the default backslash escape."""
+    if hay is None:
+        return False
+    rx, i = "", 0
+    while i < len(pattern):
+        c = pattern[i]
+        if c == "\\":
+            rx += re.escape(pattern[i + 1])
+            i += 2
+            continue
+        rx += ".*" if c == "%" else "." if c == "_" else re.escape(c)
+        i += 1
+    return re.fullmatch(rx, hay, re.S) is not None
 
 
 def _eval_leaf(row: dict, leaf: tuple) -> bool:
@@ -66,25 +93,34 @@ def _eval_leaf(row: dict, leaf: tuple) -> bool:
         return v is not None and value.lower() in v.lower()
     if op == "not ilike":
         return v is None or value.lower() not in v.lower()
+    if op == "=like":
+        return _like_match(v, value)
+    if op == "not =like":
+        return v is None or not _like_match(v, value)
+    if op == "=ilike":
+        return v is not None and _like_match(v.lower(), value.lower())
+    if op == "not =ilike":
+        return v is None or not _like_match(v.lower(), value.lower())
     raise AssertionError(op)
 
 
 # AST: ("leaf", triple) | ("&"|"|", left, right) | ("!", child)
 # inequality comparisons never get None (SQL NULL comparison = no match
-# on both engines; Odoo never emits such a leaf)
+# on both engines; Odoo never emits such a leaf); in/not in lists are
+# drawn with and without None, empty included
+int_field = st.sampled_from(["a", "b"])
 int_leaf = st.one_of(
+    st.tuples(int_field, st.sampled_from(["=", "!="]), st.sampled_from(A_VALUES)),
     st.tuples(
-        st.just("a"),
-        st.sampled_from(["=", "!=", "in", "not in"]),
-        st.sampled_from(A_VALUES),
+        int_field,
+        st.sampled_from(["in", "not in"]),
+        st.lists(st.sampled_from(A_VALUES), max_size=4),
     ),
     st.tuples(
-        st.just("a"),
+        int_field,
         st.sampled_from([">", ">=", "<", "<="]),
         st.sampled_from([v for v in A_VALUES if v is not None]),
     ),
-).map(
-    lambda t: (t[0], t[1], [t[2], 1, None] if t[1] in ("in", "not in") else t[2])
 )
 str_leaf = st.one_of(
     st.tuples(st.just("s"), st.sampled_from(["=", "!="]), st.sampled_from(S_VALUES)),
@@ -92,6 +128,9 @@ str_leaf = st.one_of(
         st.just("s"),
         st.sampled_from(["like", "not like", "ilike", "not ilike"]),
         st.sampled_from(S_PATTERNS),
+    ),
+    st.tuples(
+        st.just("s"), st.sampled_from(["=like", "=ilike"]), st.sampled_from(LIKE_PATTERNS)
     ),
 )
 leaf = st.one_of(int_leaf, str_leaf).map(lambda t: ("leaf", tuple(t)))
@@ -119,6 +158,7 @@ _NEG = {
     "=": "!=", "!=": "=", "<": ">=", ">=": "<", ">": "<=", "<=": ">",
     "in": "not in", "not in": "in", "like": "not like", "not like": "like",
     "ilike": "not ilike", "not ilike": "ilike",
+    "=like": "not =like", "=ilike": "not =ilike",
 }
 
 
@@ -144,11 +184,11 @@ def eval_ast(row: dict, node, negate: bool = False) -> bool:
 
 @pytest.fixture(scope="module")
 def dom_df(spark):
-    return spark.createDataFrame(ROWS, "id int, a int, s string").cache()
+    return spark.createDataFrame(ROWS, "id int, a int, b int, s string").cache()
 
 
 @settings(
-    max_examples=40,
+    max_examples=60,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
@@ -159,7 +199,7 @@ def test_compiled_domain_matches_python_eval(dom_df, tree):
     want = {
         row[0]
         for row in ROWS
-        if eval_ast({"id": row[0], "a": row[1], "s": row[2]}, tree)
+        if eval_ast({"id": row[0], "a": row[1], "b": row[2], "s": row[3]}, tree)
     }
     assert got == want, f"domain={domain}"
 
@@ -329,63 +369,3 @@ def test_child_of_expands_to_in():
         expand_hierarchy_leaves(
             normalize([("plan_id", "child_of", 1)]), None
         )
-
-
-# ---------------------------------------------------------------------------
-# SQL-string backend equivalence: domain_to_sql must select exactly the
-# rows compile_domain selects, NULL semantics included.
-# ---------------------------------------------------------------------------
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from etl_staging_spark.domain import domain_to_sql  # noqa: E402
-
-_SQL_OPS = ["=", "!=", ">", ">=", "<", "<=", "in", "not in"]
-
-
-@st.composite
-def sql_domain_st(draw):
-    n = draw(st.integers(min_value=1, max_value=3))
-    leaves = []
-    for _ in range(n):
-        field = draw(st.sampled_from(["a", "b"]))
-        op = draw(st.sampled_from(_SQL_OPS))
-        if op in ("in", "not in"):
-            value = draw(
-                st.lists(
-                    st.one_of(st.integers(-3, 3), st.none()),
-                    min_size=0, max_size=4,
-                )
-            )
-        else:
-            value = draw(st.one_of(st.integers(-3, 3), st.none()))
-        if value is None and op not in ("=", "!=") :
-            op = "="
-        leaves.append((field, op, value))
-    conn = draw(st.sampled_from([None, "|", "&", "!"]))
-    if conn == "!" or (conn and len(leaves) < 2):
-        return ["!", leaves[0]]
-    if conn and len(leaves) >= 2:
-        return [conn, leaves[0], leaves[1], *leaves[2:]]
-    return leaves
-
-
-@settings(max_examples=60, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(domain=sql_domain_st())
-def test_domain_sql_backend_matches_column_backend(spark, domain, sql_rows_frame):
-    df, = sql_rows_frame
-    want = {r.rid for r in df.where(compile_domain(domain)).collect()}
-    got = {r.rid for r in df.where(F.expr(domain_to_sql(domain))).collect()}
-    assert got == want, domain
-
-
-@pytest.fixture(scope="module")
-def sql_rows_frame(spark):
-    rows = [
-        (i, a, b)
-        for i, (a, b) in enumerate(
-            (a, b) for a in [None, -2, 0, 1, 3] for b in [None, -1, 2]
-        )
-    ]
-    return (spark.createDataFrame(rows, "rid int, a int, b int"),)

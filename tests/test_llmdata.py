@@ -1585,11 +1585,28 @@ def test_sign_guard_magnitude_invariant(spark):
     df = spark.createDataFrame(rows, "id long, a array<float>, b array<float>")
     got = df.select(
         "id",
-        _sign_nonneg(F.col("a"), F.col("b")).alias("fast"),
-        (_dot(F.col("a"), F.col("b")) >= 0).alias("canon"),
+        _sign_nonneg("a", "b").alias("fast"),
+        (_dot("a", "b") >= 0).alias("canon"),
     ).collect()
     for r in got:
         assert r.fast == r.canon, r.id
+
+
+def test_vec_sql_non_finite_matches_lit_array(spark):
+    """A literal vector with non-finite components parses to the same
+    double values the per-element ``F.lit`` form builds (the CAST makes
+    the parsed array's elements nullable; the values are the same)."""
+    from etl_staging_spark.llmdata.simsearch import _vec_sql
+
+    vals = [float("nan"), float("inf"), float("-inf"), 1.5]
+    df = spark.range(1).select(
+        F.expr(_vec_sql(vals)).alias("sql"),
+        F.array(*[F.lit(v) for v in vals]).alias("lit"),
+    )
+    types = [df.schema[c].dataType.elementType for c in ("sql", "lit")]
+    assert types[0] == types[1]
+    row = df.first()
+    assert [repr(v) for v in row.sql] == [repr(v) for v in row.lit]
 
 
 def test_bm25_rejects_degenerate_queries(spark):

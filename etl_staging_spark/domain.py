@@ -73,7 +73,8 @@ _NEGATED_OP = {
     "in": "not in", "not in": "in",
     "like": "not like", "not like": "like",
     "ilike": "not ilike", "not ilike": "ilike",
-    "=like": "not =like", "=ilike": "not =ilike",
+    "=like": "not =like", "not =like": "=like",
+    "=ilike": "not =ilike", "not =ilike": "=ilike",
 }
 
 

@@ -6,10 +6,11 @@
   per-query top-k is TWO-PHASE (salted local heaps, then the global
   cut over S*k survivors), so no partition ever holds one query's
   full candidate list — output identical to the naive window.
-- ``lsh_bucketed_topk`` — the scale path: 8 deterministic random
-  hyperplanes give a 8-bit sign bucket per vector; queries only score
-  candidates in THEIR bucket (expected N/256 of the data per query).
-  An inner equi-join on the bucket key — shuffles once, no cross join.
+- ``lsh_multitable_topk`` — the sign-LSH scale path: L tables of b
+  deterministic hyperplane signs each; a query scores only candidates
+  sharing one of its L bucket keys (keyed equi-joins, no cross join).
+  ``lsh_bucketed_topk`` is its single-table case (one 8-bit bucket,
+  recall ~0.1 on near-orthogonal embeddings — see ``N_TABLES``).
 - ``ivf_topk`` — the other classic scale path: K deterministic coarse
   centroids (the first K vectors — reproducible, oracle-expressible)
   partition the corpus into inverted lists by nearest-centroid
@@ -100,37 +101,6 @@ def _narrow_checkpoint(df: DataFrame) -> DataFrame:
       assignment scan runs even if the caller never executes the
       result."""
     return df.localCheckpoint(eager=True)
-
-
-def _ddot_mass_sql(a: str, b: str, finish: str) -> str:
-    """ONE plain-double fold over two array SQL fragments accumulating
-    the dot Σx·y (``acc.s``) and the absolute mass Σ|x·y| (``acc.m``),
-    finished by the SQL lambda body ``finish`` over ``acc`` — the
-    probe behind `_sign_nonneg` and the fast argmax."""
-    return (
-        f"aggregate(zip_with({a},{b},"
-        "(x,y)->CAST(x AS DOUBLE)*CAST(y AS DOUBLE)),"
-        "named_struct('s',0.0D,'m',0.0D),"
-        "(acc,x)->named_struct('s',acc.s+x,'m',acc.m+abs(x)),"
-        f"acc -> {finish})"
-    )
-
-
-def _sign_nonneg(a: str, b: str) -> Column:
-    """``_dot(a, b) >= 0`` decided cheaply: ONE double fold accumulates
-    the dot AND the absolute mass Σ|x·y|; the double sign is trusted
-    outside the error envelope |dot| > 1e-12·(mass + 1), which bounds
-    both the double summation error (≤ ~1.4e-14·mass) and the decimal
-    quantization error (≤ ~3.2e-14 absolute) with a 30x margin AT ANY
-    VECTOR MAGNITUDE — a fixed absolute cutoff would under-guard
-    large-magnitude embeddings. Inside the envelope the expression is
-    NULL and COALESCE falls through to the canonical decimal fold
-    (lazily, per knife-edge row only). Output identical to the
-    decimal-only sign."""
-    probe = _ddot_mass_sql(
-        a, b, "CASE WHEN abs(acc.s) > (acc.m + 1.0D) * 1e-12D THEN acc.s >= 0 END"
-    )
-    return F.expr(f"coalesce({probe}, {_dot_sql(a, b)} >= 0)")
 
 
 def cosine_scored(
@@ -237,17 +207,6 @@ def _two_phase_topk(
 N_PLANES = 8
 
 
-def _bucket(vec_col: str, dim: int) -> Column:
-    """8-char '0'/'1' sign-LSH bucket key (deterministic hyperplanes)
-    of the array column ``vec_col``."""
-    planes = hyperplanes(N_PLANES, dim)
-    bits = []
-    for w_p in planes:
-        sign = _sign_nonneg(_vec_sql(w_p), f"`{vec_col}`")
-        bits.append(F.when(sign, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def lsh_bucketed_topk(
     emb: DataFrame,
     query_pred: Column,
@@ -256,24 +215,14 @@ def lsh_bucketed_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """ANN: top-k by cosine *within the query's sign-LSH bucket*."""
-    normed = with_norm(_respread_narrow(emb), vec_col).withColumn(
-        "bkt", _bucket(vec_col, dim)
+    """ANN: top-k by cosine *within the query's sign-LSH bucket* — the
+    single-table case of :func:`lsh_multitable_topk` (one table of
+    ``N_PLANES`` bits). NULL vectors are excluded: they have no bucket
+    and no cosine."""
+    return lsh_multitable_topk(
+        emb.where(F.col(vec_col).isNotNull()), query_pred, dim, k,
+        n_tables=1, bits=N_PLANES, id_col=id_col, vec_col=vec_col,
     )
-    q = normed.where(query_pred).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"),
-        F.col("nrm").alias("qn"), "bkt",
-    )
-    c = normed.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"),
-        F.col("nrm").alias("cn"), "bkt",
-    )
-    scored = (
-        c.join(q, "bkt")
-        .where(F.col("cid") != F.col("qid"))
-        .withColumn("cos_raw", _dot("qv", "cv") / (F.col("qn") * F.col("cn")))
-    )
-    return _two_phase_topk(scored, k)
 
 
 # Production sign-LSH ANN: L independent hash tables of b planes each.
@@ -297,14 +246,18 @@ def _py_decimal_dot(ws: list[float], xs: list[float]) -> float:
     """Driver/worker-side replica of ``_dot``: per-element double
     product, DECIMAL(30,15) quantize (shortest-repr parse + HALF_UP,
     Java ``BigDecimal.valueOf`` semantics), exact decimal sum, back to
-    double. The knife-edge sign source of :func:`_mt_keys_udf` — same
-    convention as :func:`_py_decimal_norm`."""
-    from decimal import ROUND_HALF_UP, Decimal
+    double. The knife-edge source of :func:`_mt_keys_udf` and
+    :func:`_ivf_cells_udf` — same convention as
+    :func:`_py_decimal_norm`."""
+    from decimal import ROUND_HALF_UP, Context, Decimal
 
+    # DECIMAL(30,15) carries 30 digits; the default 28-digit context
+    # would raise on products >= 1e13 at scale 15
+    ctx = Context(prec=64, rounding=ROUND_HALF_UP)
     q = Decimal(1).scaleb(-15)
     acc = Decimal(0)
     for w, x in zip(ws, xs):
-        acc += Decimal(repr(float(w) * float(x))).quantize(q, rounding=ROUND_HALF_UP)
+        acc = ctx.add(acc, Decimal(repr(float(w) * float(x))).quantize(q, context=ctx))
     return float(acc)
 
 
@@ -321,12 +274,14 @@ def _mt_keys_udf(dim: int, n_tables: int = N_TABLES, bits: int = BITS_PER_TABLE)
     shuffle/stage overhead; the batched matmul runs in milliseconds.
 
     EXACTNESS: the double matmul decides each sign only outside the
-    same error envelope `_sign_nonneg` uses (|dot| > 1e-12 * (mass+1),
-    mass = sum |w*x| — bounds double summation + decimal quantization
-    error at any magnitude with a 30x margin); inside the envelope the
-    sign comes from :func:`_py_decimal_dot`, the exact DECIMAL(30,15)
-    convention every oracle mirrors. Output is therefore bit-identical
-    to a decimal-only engine."""
+    error envelope |dot| > 1e-12 * (mass+1), mass = sum |w*x|: the
+    decimal path quantizes each product to scale 15 (<= 0.5e-15 per
+    element) and double summation errs by <= (dim-1)*eps*mass, so the
+    envelope bounds both at any vector magnitude (dim <= 2000) with a
+    30x margin. Inside the envelope the sign comes from
+    :func:`_py_decimal_dot`, the exact DECIMAL(30,15) convention every
+    oracle mirrors. Output is therefore bit-identical to a decimal-only
+    engine."""
     W = np.array(hyperplanes(n_tables * bits, dim), dtype=np.float64)
     absW = np.abs(W)
 
@@ -475,68 +430,90 @@ def lsh_multitable_topk(
 
 
 def _ivf_cells_udf(
-    cent_arrs: dict[int, list[float]], cent_norms: dict[int, float], probe: int
+    cent_arrs: dict[int, list[float]],
+    cent_norms: dict[int, float] | None,
+    probe: int,
 ):
-    """Arrow-batched probe-cell kernel: embedding -> the ``probe``
-    nearest centroid ids, ordered by (cosine DESC, centroid id ASC) —
-    the batched twin of :func:`_probe_cells_expr` (same Arrow-UDF
-    rationale as :func:`_mt_keys_udf`: a dense matmul per batch beats
-    a per-centroid interpreted decimal fold and its literal-heavy
-    plan).
+    """Arrow-batched argmax kernel: vector -> the ``probe`` best centroid
+    ids, ordered by (score DESC, centroid id ASC) — the one
+    implementation of every cid-only decision (a dense matmul per batch
+    beats per-centroid interpreted decimal folds and their
+    literal-heavy plans; same Arrow-UDF rationale as
+    :func:`_mt_keys_udf`). Two scores, each the exact rule an oracle
+    mirrors:
 
-    EXACTNESS: the JVM expression ranks by the DOUBLE value
-    -dot/(cn*vn) with exact-decimal dot/norms, ties to the lower id.
-    The numpy fast path reproduces that ordering whenever adjacent
-    sorted cosines are separated by more than 1e-9 (numpy's error is
-    ~1e-15 relative, so the order cannot differ outside that gap); any
-    row with a smaller gap — where double rounding could reorder or
-    tie — recomputes every centroid's key with the exact decimal
-    convention (`_py_decimal_dot` / `_py_decimal_norm`) and the same
-    IEEE double division the JVM performs, making the output
-    bit-identical to the expression path."""
+    - ``cent_norms`` given — IVF cells: cosine, the double value
+      -dot/(cn*vn) of :func:`_cell_scores_sql` (exact-decimal dot, vn
+      the :func:`with_norm` decimal norm);
+    - ``cent_norms=None`` — PQ codes: the raw exact-decimal dot of
+      :func:`_pq_best_sql` (call it on the subvector slice).
+
+    EXACTNESS: the double matmul ranks a row only when every adjacent
+    margin among its top probe+1 candidates exceeds the two
+    candidates' summed error envelopes, 1e-11*(Σ|x·y| + 1) each (the
+    :func:`_mt_keys_udf` bound with another 10x slack; a cosine divides
+    score and envelope by the same cn, and vn is a common positive
+    factor of the row). A certified margin also excludes exact ties,
+    so the ties-toward-lower-id rule holds. Any other row — ties,
+    knife edges, a NULL element — recomputes every key with
+    :func:`_py_decimal_dot` / :func:`_py_decimal_norm` and the same
+    IEEE division the JVM performs, so the output is bit-identical to
+    the exact expression.
+
+    Degenerate rows are defined, not raised: a row with a NULL element
+    scores NULL against every centroid in the exact expression, which
+    sorts by id, so the kernel returns ascending ids; a vector whose
+    decimal norm is 0 has no cosine (the exact expression divides by
+    zero) and gets ascending ids too. A NULL vector raises — callers
+    filter NULL vectors first."""
     cids = np.array(sorted(cent_arrs), dtype=np.int64)
     C = np.array([cent_arrs[int(i)] for i in cids], dtype=np.float64)
-    ncs = np.array([cent_norms[int(i)] for i in cids], dtype=np.float64)
+    absC = np.abs(C)
+    cosine = cent_norms is not None
+    ncs = np.array(
+        [cent_norms[int(i)] for i in cids] if cosine else [1.0] * len(cids),
+        dtype=np.float64,
+    )
+    # adjacent margins that decide the top-``probe`` list
+    depth = min(probe, len(cids) - 1)
+
+    def exact(x: np.ndarray) -> list[int]:
+        if np.isnan(x).any():
+            return [int(i) for i in cids[:probe]]
+        nr = _py_decimal_norm(x) if cosine else 1.0
+        if nr == 0.0:
+            return [int(i) for i in cids[:probe]]
+        keys = sorted(
+            (-(_py_decimal_dot(C[j], x) / (float(ncs[j]) * nr)) if cosine
+             else -_py_decimal_dot(C[j], x), int(cids[j]))
+            for j in range(len(cids))
+        )
+        return [k[1] for k in keys[:probe]]
 
     @F.pandas_udf("array<int>")
     def cells(v: pd.Series) -> pd.Series:
         if v.isna().any():
             raise ValueError(
-                "IVF probe-cell kernel requires non-null embeddings; "
-                "filter NULL vectors before ivf_* entry points"
+                "argmax kernel requires non-null embeddings; "
+                "filter NULL vectors before ivf_*/pq_* entry points"
             )
-        X = np.array([np.asarray(x, dtype=np.float64) for x in v])
-        if len(X) == 0:
+        if len(v) == 0:
             return pd.Series([], dtype=object)
-        vn = np.linalg.norm(X, axis=1)
-        safe_vn = np.where(vn == 0, 1.0, vn)
-        cos = (X @ C.T) / ncs / safe_vn[:, None]
-        # sort per row by (-cos, cid); flag knife-edge rows (skip the gap
-        # test with a single centroid — no adjacent pair to reorder)
-        order = np.lexsort((np.broadcast_to(cids, cos.shape), -cos), axis=1)
-        if cos.shape[1] > 1:
-            sorted_cos = np.take_along_axis(cos, order, axis=1)
-            gaps = -np.diff(sorted_cos, axis=1)
-            knife = (gaps.min(axis=1) < 1e-9) | (vn == 0)
-        else:
-            knife = vn == 0
-        out = []
-        for r in range(len(X)):
-            if knife[r]:
-                nr = _py_decimal_norm(X[r])
-                if nr == 0.0:
-                    # zero vector: cosine undefined — deterministic
-                    # fallback ordering by centroid id, matching the JVM
-                    # expression path's degrade-not-throw behavior
-                    out.append([int(i) for i in cids[:probe]])
-                    continue
-                keys = sorted(
-                    (-(_py_decimal_dot(C[j], X[r]) / (float(ncs[j]) * nr)), int(cids[j]))
-                    for j in range(len(cids))
-                )
-                out.append([k[1] for k in keys[:probe]])
-            else:
-                out.append([int(cids[j]) for j in order[r, :probe]])
+        X = np.array([np.asarray(x, dtype=np.float64) for x in v])
+        S = (X @ C.T) / ncs
+        E = (np.abs(X) @ absC.T + 1.0) * 1e-11 / ncs
+        order = np.lexsort((np.broadcast_to(cids, S.shape), -S), axis=1)
+        s = np.take_along_axis(S, order, axis=1)
+        e = np.take_along_axis(E, order, axis=1)
+        ok = (
+            (s[:, :depth] - s[:, 1:depth + 1]) > (e[:, :depth] + e[:, 1:depth + 1])
+        ).all(axis=1)
+        if cosine:
+            # a decimal norm may be 0 only if every x_i^2 quantizes to 0
+            ok &= (X * X).max(axis=1) >= 1e-15
+        out = cids[order[:, :probe]].tolist()
+        for r in np.flatnonzero(~ok):
+            out[r] = exact(X[r])
         return pd.Series(out)
 
     return cells
@@ -668,27 +645,22 @@ def cosine_dup_pairs(
     holds the exact panel scores needs only the candidate sets, never
     a per-method re-verify. For the high-recall discovery config see
     :func:`mt_dup_pairs`."""
-    normed = with_norm(_respread_narrow(emb), vec_col).persist()
-    planes = hyperplanes(N_PLANES, dim)
-    per_band = N_PLANES // bands
-    band_cols = []
-    for b in range(bands):
-        bits = []
-        for w_p in planes[b * per_band : (b + 1) * per_band]:
-            sign = _sign_nonneg(_vec_sql(w_p), f"`{vec_col}`")
-            bits.append(F.when(sign, F.lit("1")).otherwise(F.lit("0")))
-        band_cols.append(F.concat(F.lit(f"{b}|"), *bits))
-    banded = normed.select(
-        F.col(id_col).alias("vid"), F.explode(F.array(*band_cols)).alias("bkt")
+    # the 8 planes split into ``bands`` tables of the multi-table key
+    # kernel (hyperplanes are prefix-stable, keys read "{band}|bits");
+    # NULL vectors have no bucket and are excluded
+    keys_k = _mt_keys_udf(dim, n_tables=bands, bits=N_PLANES // bands)
+    normed = (
+        with_norm(_respread_narrow(emb.where(F.col(vec_col).isNotNull())), vec_col)
+        .withColumn("__keys", keys_k(F.col(vec_col)))
+        .persist()
     )
-    banded_x = (
-        normed.where(d1_pred).select(
-            F.col(id_col).alias("vid"), F.explode(F.array(*band_cols)).alias("bkt")
-        )
-        if d1_pred is not None
-        else banded
+    keyed = normed.select(
+        F.col(id_col).alias("vid"), F.explode("__keys").alias("bkt")
     )
-    x, y = banded_x.alias("x"), banded.alias("y")
+    x_src = keyed if d1_pred is None else normed.where(d1_pred).select(
+        F.col(id_col).alias("vid"), F.explode("__keys").alias("bkt")
+    )
+    x, y = x_src.alias("x"), keyed.alias("y")
     # the bucket self-join lands on #buckets keys; respread the skinny
     # id pairs before the per-pair dot products so the verify stage
     # runs at full parallelism (see semantic_dup_pairs for the same
@@ -822,119 +794,7 @@ def _py_decimal_norm(vec: list[float]) -> float:
     scale 15, Java ``BigDecimal.valueOf`` semantics), exact decimal
     sum, correctly-rounded double conversion and sqrt. Used for
     TRAINED centroid literals, where no oracle needs data-side parity."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q = Decimal(1).scaleb(-15)
-    acc = Decimal(0)
-    for x in vec:
-        acc += Decimal(repr(float(x) * float(x))).quantize(
-            q, rounding=ROUND_HALF_UP
-        )
-    return math.sqrt(float(acc))
-
-
-def _probe_cells_expr(
-    cent_arrs: dict[int, list[float]],
-    vcol: str,
-    probe: int,
-    cent_norms: dict[int, float] | None = None,
-    nrm_col: str | None = None,
-    fast: bool = False,
-) -> Column:
-    """The ``probe`` nearest centroid ids for a vector, as one array
-    expression over broadcast centroid literals — no join, one scan.
-    array_sort on struct(negc, cid) sorts ascending by negc then cid:
-    descending similarity, ties broken toward the lower centroid id.
-
-    ``cent_norms`` (precomputed per-centroid norms, collected or via
-    :func:`_py_decimal_norm`) and ``nrm_col`` (the frame's with_norm
-    column) replace the inline decimal norm folds — without them each
-    ROW re-derives every centroid's self-dot plus its own norm K+1
-    times, which measured ~2x the whole assignment cost.
-
-    ``vcol``/``nrm_col`` are SQL fragments: the whole expression is
-    ONE parsed ``expr()`` — see :func:`_cell_scores_sql` for why.
-
-    ``fast=True`` (cid-only consumers — assignment scans that never
-    publish the score) routes through the certified double-prefilter
-    argmax (:func:`_probe_cells_fast_sql`): plain-double scores decide
-    the ranking when every adjacent top-(probe+1) margin exceeds the
-    proven double-vs-decimal error envelope, and knife-edge rows fall
-    back (lazily, per row) to this exact-decimal expression — output
-    identical by construction, ~2.5x cheaper on the corpus-wide
-    scans."""
-    if fast:
-        sql = _probe_cells_fast_sql(cent_arrs, vcol, probe, cent_norms, nrm_col)
-        if sql is not None:
-            return F.expr(sql)
-    scored = _cell_scores_sql(cent_arrs, vcol, cent_norms, nrm_col)
-    return F.expr(f"transform(slice(array_sort({scored}), 1, {probe}), s -> s.cid)")
-
-
-def _ddot_mass_struct_sql(
-    arr_sql: str, vexpr: str, cid: int, div_sql: str | None
-) -> str:
-    """One double fold producing named_struct('neg', 'env', 'cid') for
-    the fast-argmax prefilter: ``neg`` is the negated plain-double
-    score, ``env`` a PROVEN upper bound on |double score − exact
-    decimal score| for that candidate. The `_sign_nonneg` error
-    budget, applied per candidate: the decimal path quantizes each
-    product to scale 15 (≤ 0.5e-15/element) and the double path's
-    summation error is ≤ (n−1)·eps·Σ|x·y|, so
-    |Δdot| ≤ 1e-12·(mass + 1) holds with >30x margin at any vector
-    magnitude; dividing score and bound by the same positive norm
-    product preserves it. ``env`` uses 1e-11·(mass+1) — another 10x
-    slack on top; a loose envelope only sends more rows to the exact
-    fallback, never changes a result."""
-    div = div_sql or ""
-    return _ddot_mass_sql(
-        arr_sql, vexpr,
-        f"named_struct('neg', (- acc.s){div},"
-        f" 'env', (1e-11D * (acc.m + 1.0D)){div}, 'cid', {int(cid)})",
-    )
-
-
-def _probe_cells_fast_sql(
-    cent_arrs: dict[int, list[float]],
-    vexpr: str,
-    probe: int,
-    cent_norms: dict[int, float] | None = None,
-    nrm_expr: str | None = None,
-) -> str | None:
-    """Double-prefilter form of :func:`_probe_cells_expr` for
-    cid-only consumers. The fast ranking is trusted only when every
-    adjacent margin among the top probe+1 candidates exceeds the two
-    candidates' summed error envelopes — then the exact-decimal
-    ranking provably agrees (including the ties-toward-lower-cid rule:
-    a certified margin excludes decimal equality). Otherwise the
-    CASE yields NULL and COALESCE falls through to the canonical
-    decimal expression for that row only. NULL vectors/elements make
-    every margin NULL, which also falls through — anomalies can only
-    widen the fallback, never flip the fast path."""
-    if cent_norms is None or probe >= len(cent_arrs):
-        # no precomputed norms (inline decimal norm folds dominate
-        # either way) or probe covers every cell (no certifying margin
-        # below the cut exists) — the fast path cannot help
-        return None
-    structs = []
-    for cid, cvec in sorted(cent_arrs.items()):
-        div = f" / ({double_sql(cent_norms[cid])} * {nrm_expr})"
-        structs.append(_ddot_mass_struct_sql(_vec_sql(cvec), vexpr, cid, div))
-    cond = " AND ".join(
-        f"((s[{i + 1}].neg - s[{i}].neg) > (s[{i}].env + s[{i + 1}].env))"
-        for i in range(probe)
-    )
-    fast = (
-        f"transform(array(array_sort(array({','.join(structs)}))),"
-        f" s -> CASE WHEN {cond}"
-        f" THEN transform(slice(s, 1, {probe}), t -> t.cid) END)[0]"
-    )
-    exact = _cell_scores_sql(cent_arrs, vexpr, cent_norms, nrm_expr)
-    return (
-        f"coalesce({fast},"
-        f" transform(slice(array_sort({exact}), 1, {probe}), s -> s.cid))"
-    )
+    return math.sqrt(_py_decimal_dot(vec, vec))
 
 
 def _cell_scores_sql(
@@ -943,14 +803,13 @@ def _cell_scores_sql(
     cent_norms: dict[int, float] | None = None,
     nrm_expr: str | None = None,
 ) -> str:
-    """SQL text of the per-centroid (negated-cosine, cid) struct array
-    behind :func:`_probe_cells_expr`, factored so consumers that need
-    the SCORE as well as the cell (`cluster_profile`'s mean-cosine
-    column) share the exact expression the certified IVF entries
-    assign with — the assignment and the reported cosine can never
-    drift. One parsed string replaces ~K x (dim + lambda) py4j
-    roundtrips — measured (r16) at 2 s per build for K=8 x dim=64 —
-    while producing the IDENTICAL expression tree (same literals via
+    """SQL text of the per-centroid (negated-cosine, cid) struct array:
+    the exact IVF rule for consumers that publish the SCORE as well as
+    the cell (`cluster_profile`'s mean-cosine column); cid-only
+    consumers run the argmax kernel (:func:`_ivf_cells_udf`), which
+    reproduces this ranking bit for bit. One parsed string replaces
+    ~K x (dim + lambda) py4j roundtrips — measured (r16) at 2 s per
+    build for K=8 x dim=64 — while producing the IDENTICAL expression tree (same literals via
     shortest-repr round-trip, same zip_with/aggregate decimal fold,
     same struct names)."""
     parts = []
@@ -1022,34 +881,29 @@ def ivf_topk(
     ``centroids`` (e.g. from :func:`train_ivf_centroids`) are broadcast
     as literals so assignment is one scan, no join. Without them, the
     first ``n_centroids`` vectors by id serve as a deterministic,
-    oracle-expressible seed choice — same machinery, weaker lists."""
+    oracle-expressible seed choice — same machinery, weaker lists.
+    NULL vectors are excluded (no cell, no cosine)."""
+    emb = emb.where(F.col(vec_col).isNotNull())
     cent_arrs, cent_norms = _resolve_centroids(
         emb, centroids, n_centroids, id_col, vec_col
     )
-
-    def probe_cells(vcol: str, probe: int, fast: bool = False) -> Column:
-        return _probe_cells_expr(
-            cent_arrs, vcol, probe, cent_norms=cent_norms, nrm_col="nrm",
-            fast=fast,
-        )
-
-    # the CORPUS-wide assignment takes the certified double-prefilter
-    # argmax (cid-only consumer); the bounded query side stays on the
-    # exact expression
+    # one kernel call ranks every vector's n_probe cells: the corpus
+    # side keeps the first (its assignment), queries probe them all
+    cells_k = _ivf_cells_udf(cent_arrs, cent_norms, n_probe)
     normed = with_norm(_respread_narrow(emb), vec_col).withColumn(
-        "cell", probe_cells(vec_col, 1, fast=True)[0]
+        "cells", cells_k(F.col(vec_col))
     ).persist()
     q = normed.where(query_pred).select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).alias("qv"),
         F.col("nrm").alias("qn"),
-        F.explode(probe_cells(vec_col, n_probe)).alias("cell"),
+        F.explode("cells").alias("cell"),
     )
     c = normed.select(
         F.col(id_col).alias("cid_"),
         F.col(vec_col).alias("cv"),
         F.col("nrm").alias("cn"),
-        "cell",
+        F.col("cells")[0].alias("cell"),
     )
     scored = (
         c.join(F.broadcast(q), "cell")
@@ -1135,34 +989,21 @@ def semantic_dup_pairs(
         # shared-pass path (r17): the caller already assigned cells in
         # its own fused corpus projection — add no pass and no pin here
         normed = assigned
-    elif candidates_only:
-        cent_arrs, cent_norms = _resolve_centroids(
-            emb, centroids, n_centroids, id_col, vec_col
-        )
-        # discovery-only path: the exact-decimal norm fold exists solely
-        # for the verify stage, so skip it and assign cells with the
-        # Arrow-batched kernel (bit-identical to the expression path for
-        # non-NULL vectors, see _ivf_cells_udf's exactness note) —
-        # measured ~2x cheaper than norm + interpreted per-centroid
-        # decimal folds at sf0.1
-        cells_k = _ivf_cells_udf(cent_arrs, cent_norms, n_probe)
-        normed = (
-            _respread_narrow(emb)
-            .withColumn("cells", cells_k(F.col(vec_col)))
-            .withColumn("cell", F.col("cells")[0])
-            .persist()
-        )
     else:
         cent_arrs, cent_norms = _resolve_centroids(
             emb, centroids, n_centroids, id_col, vec_col
         )
-        normed = with_norm(_respread_narrow(emb), vec_col).withColumn(
-            "cells",
-            _probe_cells_expr(
-                cent_arrs, vec_col, n_probe,
-                cent_norms=cent_norms, nrm_col="nrm", fast=True,
-            ),
-        ).withColumn("cell", F.col("cells")[0]).persist()
+        # the exact-decimal norm fold exists solely for the verify
+        # stage; discovery-only runs skip it
+        base = _respread_narrow(emb)
+        if not candidates_only:
+            base = with_norm(base, vec_col)
+        cells_k = _ivf_cells_udf(cent_arrs, cent_norms, n_probe)
+        normed = (
+            base.withColumn("cells", cells_k(F.col(vec_col)))
+            .withColumn("cell", F.col("cells")[0])
+            .persist()
+        )
     # candidate pairs stay SKINNY (ids + probed cell) through the cell
     # self-join — a join on K cell keys lands on at most K partitions,
     # so the expensive per-pair work must not live in that stage;
@@ -1540,13 +1381,13 @@ def cluster_balanced_sample(
     gates removed this run), assignment is semi-joined to ``keep``
     BEFORE the counts, and quotas balance the survivors.
 
-    Scale shape: ONE scan against broadcast centroid literals computes
-    the cell, reduced immediately to the NARROW (id, cell) frame and
+    Scale shape: ONE scan through the argmax kernel computes the
+    cell, reduced immediately to the NARROW (id, cell) frame and
     materialized with an eager localCheckpoint — the quota cannot be
     known before the counts, so the operator is inherently two-pass,
     and the second (threshold) pass needs only id + cell: ~16 bytes a
-    row instead of re-scanning the vectors and re-evaluating the
-    centroid fold (measured 2.6x faster at sf0.1; at 100 TB the gap is
+    row instead of re-scanning the vectors and re-running the
+    assignment (measured 2.6x faster at sf0.1; at 100 TB the gap is
     the corpus width). Counts are a bounded (n_centroids) aggregate
     collected driver-side; the filter is a literal CASE over the cell
     — no join, no window, the `mixture_sample` plan family (plus one
@@ -1558,21 +1399,7 @@ def cluster_balanced_sample(
         _threshold_filter, mixture_rates, temperature_weights,
     )
 
-    cent_arrs, cent_norms = _resolve_centroids(
-        emb, centroids, n_centroids, id_col, vec_col
-    )
-    normed = with_norm(_respread_narrow(emb), vec_col)
-    assigned = normed.select(
-        F.col(id_col),
-        _probe_cells_expr(
-            cent_arrs, vec_col, 1, cent_norms, "nrm", fast=True
-        )[0].cast("int").alias("cell"),
-    )
-    if keep is not None:
-        assigned = assigned.join(
-            keep.select(id_col), id_col, "left_semi"
-        )
-    assigned = _narrow_checkpoint(assigned)
+    assigned = _assign_cells(emb, n_centroids, id_col, vec_col, centroids, keep)
     counts = {
         r[0]: r[1]
         for r in assigned.groupBy("cell").count().collect()  # bounded
@@ -1592,21 +1419,27 @@ def _assign_cells(
     id_col: str,
     vec_col: str,
     centroids: list[list[float]] | None,
+    keep: DataFrame | None = None,
 ) -> DataFrame:
     """The certified IVF cell assignment reduced to the NARROW
     (id, cell) frame and eagerly materialized (`_narrow_checkpoint`):
-    one broadcast-centroid scan, the shared decimal argmax with ties
-    toward the lower centroid id — the exact `cluster_profile` rule."""
+    one scan through the argmax kernel (:func:`_ivf_cells_udf`, ties
+    toward the lower centroid id) — the exact `cluster_profile` rule.
+    NULL vectors are excluded (no cell); a zero vector takes the lowest
+    centroid id. ``keep`` semi-joins the assignment to a pre-gated id
+    subset before the checkpoint (centroids still resolve from
+    ``emb``)."""
+    emb = emb.where(F.col(vec_col).isNotNull())
     cent_arrs, cent_norms = _resolve_centroids(
         emb, centroids, n_centroids, id_col, vec_col
     )
-    normed = with_norm(_respread_narrow(emb), vec_col)
-    return _narrow_checkpoint(normed.select(
-        F.col(id_col),
-        _probe_cells_expr(
-            cent_arrs, vec_col, 1, cent_norms, "nrm", fast=True
-        )[0].cast("int").alias("cell"),
-    ))
+    cells_k = _ivf_cells_udf(cent_arrs, cent_norms, 1)
+    assigned = _respread_narrow(emb).select(
+        F.col(id_col), cells_k(F.col(vec_col))[0].alias("cell")
+    )
+    if keep is not None:
+        assigned = assigned.join(keep.select(id_col), id_col, "left_semi")
+    return _narrow_checkpoint(assigned)
 
 
 def share_mixture_thresholds(
@@ -2138,39 +1971,6 @@ def _pq_best_sql(book_j: dict[int, list[float]], sub_expr: str) -> str:
     return "array_sort(array(" + ",".join(parts) + "))[0]"
 
 
-def _pq_code_expr(book_j: dict[int, list[float]], sub_expr: str) -> Column:
-    """The PQ code id for ENCODERS: the certified double-prefilter
-    argmax when available, else the exact `_pq_best_sql` cid (the
-    fast path's fallback branch IS that expression)."""
-    sql = _pq_best_cid_fast_sql(book_j, sub_expr)
-    return F.expr(sql if sql is not None else f"{_pq_best_sql(book_j, sub_expr)}.cid")
-
-
-def _pq_best_cid_fast_sql(
-    book_j: dict[int, list[float]], sub_expr: str
-) -> str | None:
-    """Code id of :func:`_pq_best_sql` through the certified
-    double-prefilter argmax (`_probe_cells_fast_sql`'s machinery with
-    no norm division — PQ scores are raw dots): the plain-double
-    ranking is trusted only when the top-2 margin exceeds both
-    candidates' proven error envelopes; knife-edge rows fall back
-    (lazily) to the exact-decimal argmax. For ENCODERS only — the
-    balance card publishes the dot value and keeps the exact
-    expression. None for a single-code book (no margin to certify)."""
-    if len(book_j) < 2:
-        return None
-    structs = [
-        _ddot_mass_struct_sql(_vec_sql(cvec), sub_expr, cid, None)
-        for cid, cvec in sorted(book_j.items())
-    ]
-    fast = (
-        f"transform(array(array_sort(array({','.join(structs)}))),"
-        " s -> CASE WHEN ((s[1].neg - s[0].neg) > (s[0].env + s[1].env))"
-        " THEN s[0].cid END)[0]"
-    )
-    return f"coalesce({fast}, {_pq_best_sql(book_j, sub_expr)}.cid)"
-
-
 def pq_code_balance(
     emb: DataFrame,
     m: int = 4,
@@ -2252,27 +2052,28 @@ def pq_encode(
     """Encode every vector as its m PQ codes — the compressed
     representation an IVF-PQ index stores instead of raw floats
     (m bytes per vector at K<=256 vs 4*dim): one narrow scan, all m
-    argmax folds (`_pq_best_sql`) in a single projection, eagerly reduced
+    subvector argmaxes (:func:`_pq_codes`) in a single projection, eagerly reduced
     to the (id, codes array<int>) frame (`_narrow_checkpoint` — the
     ADC scorer fans this frame out per query and must not re-run the
-    assignment per fan-out)."""
+    assignment per fan-out). NULL vectors are excluded."""
+    emb = emb.where(F.col(vec_col).isNotNull())
     if books is None or sub_dim is None:
         sub_dim, books = pq_codebooks(emb, m, n_codes, id_col, vec_col)
-    spread = _respread_narrow(emb.select(id_col, vec_col))
     return _narrow_checkpoint(
-        spread.select(
-            F.col(id_col),
-            F.array(
-                *[
-                    _pq_code_expr(
-                        books[j],
-                        f"slice(`{vec_col}`, {j * sub_dim + 1}, {sub_dim})",
-                    ).cast("int")
-                    for j in range(m)
-                ]
-            ).alias("codes"),
+        _respread_narrow(emb.select(id_col, vec_col)).select(
+            F.col(id_col), _pq_codes(books, vec_col, sub_dim).alias("codes")
         )
     )
+
+
+def _pq_codes(books: dict[int, dict[int, list[float]]], vec_col: str, d: int) -> Column:
+    """array<int> of the m PQ codes of ``vec_col``: the argmax kernel's
+    raw-dot mode (:func:`_ivf_cells_udf`, the `_pq_best_sql` rule) on
+    each subvector slice, all m in one projection."""
+    return F.array(*[
+        _ivf_cells_udf(books[j], None, 1)(F.slice(F.col(vec_col), j * d + 1, d))[0]
+        for j in sorted(books)
+    ])
 
 
 def pq_adc_topk(
@@ -2370,10 +2171,10 @@ def pq_ivf_topk(
     n_probe/n_centroids of the corpus) and PQ codes COMPRESS (each
     surviving candidate scores as m LUT lookups over its stored
     codes, never touching the raw vector). Combines the certified
-    IVF assignment (`_probe_cells_expr`, ties toward the lower
+    IVF assignment (:func:`_ivf_cells_udf`, ties toward the lower
     centroid id) with the certified ADC scorer (`pq_adc_topk`'s
-    LUT-literal chain) — both halves reuse their family's exact
-    expression, so this entry certifies only the COMPOSITION.
+    LUT-literal chain) — both halves reuse their family's certified
+    rule, so this entry certifies only the COMPOSITION.
 
     Scale shape: ONE assignment+encode scan reduced to the narrow
     (id, cell, codes) frame (`_narrow_checkpoint` — 1-probe cell +
@@ -2381,38 +2182,27 @@ def pq_ivf_topk(
     vector); the query side is one bounded collect (probe cells +
     LUT per query); candidate selection and scoring are a literal
     `isin` + literal-array lookups fanned by `explode` (no join);
-    the cut is the shared salted two-phase top-k."""
+    the cut is the shared salted two-phase top-k. NULL vectors are
+    excluded; a zero vector takes the lowest cell."""
+    emb = emb.where(F.col(vec_col).isNotNull())
     cent_arrs, cent_norms = _resolve_centroids(
         emb, centroids, n_centroids, id_col, vec_col
     )
     d, books = pq_codebooks(emb, m, n_codes, id_col, vec_col)
-    normed = with_norm(_respread_narrow(emb), vec_col)
     narrow = _narrow_checkpoint(
-        normed.select(
+        _respread_narrow(emb).select(
             F.col(id_col),
-            _probe_cells_expr(
-                cent_arrs, vec_col, 1,
-                cent_norms=cent_norms, nrm_col="nrm", fast=True,
-            )[0].cast("int").alias("cell"),
-            F.array(
-                *[
-                    _pq_code_expr(
-                        books[j],
-                        f"slice(`{vec_col}`, {j * d + 1}, {d})",
-                    ).cast("int")
-                    for j in range(m)
-                ]
-            ).alias("codes"),
+            _ivf_cells_udf(cent_arrs, cent_norms, 1)(F.col(vec_col))[0].alias("cell"),
+            _pq_codes(books, vec_col, d).alias("codes"),
         )
     )
     q_rows = (
-        normed.where(F.col(id_col) < n_queries)
+        emb.where(F.col(id_col) < n_queries)
         .select(
             F.col(id_col),
-            _probe_cells_expr(
-                cent_arrs, vec_col, n_probe,
-                cent_norms=cent_norms, nrm_col="nrm",
-            ).alias("probe"),
+            _ivf_cells_udf(cent_arrs, cent_norms, n_probe)(F.col(vec_col)).alias(
+                "probe"
+            ),
             *[
                 F.expr(
                     _dot_sql(

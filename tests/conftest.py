@@ -102,7 +102,7 @@ _SLOW_TESTS = {
     ("test_all_exports", "test_dataset_card_embeddings_optional_but_not_swallowed"),
     ("test_all_exports", "test_dataset_card_empty_corpus_placeholder"),
     ("test_all_exports", "test_dataset_card_all_null_source_corpus"),
-    ("test_fast_argmax", "test_pq_code_fast_matches_exact"),
+    ("test_fast_argmax", "test_pq_code_kernel_matches_exact"),
 }
 
 

@@ -130,7 +130,9 @@ str_leaf = st.one_of(
         st.sampled_from(S_PATTERNS),
     ),
     st.tuples(
-        st.just("s"), st.sampled_from(["=like", "=ilike"]), st.sampled_from(LIKE_PATTERNS)
+        st.just("s"),
+        st.sampled_from(["=like", "=ilike", "not =like", "not =ilike"]),
+        st.sampled_from(LIKE_PATTERNS),
     ),
 )
 leaf = st.one_of(int_leaf, str_leaf).map(lambda t: ("leaf", tuple(t)))
@@ -158,7 +160,8 @@ _NEG = {
     "=": "!=", "!=": "=", "<": ">=", ">=": "<", ">": "<=", "<=": ">",
     "in": "not in", "not in": "in", "like": "not like", "not like": "like",
     "ilike": "not ilike", "not ilike": "ilike",
-    "=like": "not =like", "=ilike": "not =ilike",
+    "=like": "not =like", "not =like": "=like",
+    "=ilike": "not =ilike", "not =ilike": "=ilike",
 }
 
 
@@ -202,6 +205,28 @@ def test_compiled_domain_matches_python_eval(dom_df, tree):
         if eval_ast({"id": row[0], "a": row[1], "b": row[2], "s": row[3]}, tree)
     }
     assert got == want, f"domain={domain}"
+
+
+LIKE_FAMILY = (
+    "like", "not like", "ilike", "not ilike",
+    "=like", "not =like", "=ilike", "not =ilike",
+)
+
+
+def test_negated_like_family_matches_python_eval(dom_df):
+    """Every like-family operator negates under '!' (the random
+    strategy may not draw all eight under a NOT)."""
+    for op in LIKE_FAMILY:
+        pats = LIKE_PATTERNS if "=" in op else S_PATTERNS
+        for pat in pats:
+            tree = ("!", ("leaf", ("s", op, pat)))
+            got = {r.id for r in dom_df.where(compile_domain(flatten(tree))).collect()}
+            want = {
+                row[0]
+                for row in ROWS
+                if eval_ast({"id": row[0], "a": row[1], "b": row[2], "s": row[3]}, tree)
+            }
+            assert got == want, (op, pat)
 
 
 # ---------------------------------------------------------------------------

@@ -1,16 +1,21 @@
-"""The r16 double-prefilter argmax (`_probe_cells_fast_sql` /
-`_pq_best_cid_fast_sql`) must be output-identical to the exact-decimal
-expressions it fronts: the plain-double ranking is trusted only when
-every adjacent margin exceeds the proven error envelope, and
-knife-edge rows (exact ties included — the ties-toward-lower-cid rule
-cannot be certified by doubles) must fall back to the decimal path."""
+"""The Arrow argmax kernel (`_ivf_cells_udf`) is the only implementation
+of the cid-only decisions — IVF cells (cosine mode) and PQ codes
+(raw-dot mode) — so it must be output-identical to the exact-decimal
+expressions that publish scores (`_cell_scores_sql`, `_pq_best_sql`):
+the double matmul is trusted only when every adjacent margin exceeds
+the proven error envelope, and knife-edge rows (exact ties included —
+the ties-toward-lower-cid rule cannot be certified by doubles) and rows
+with a NULL element must fall back to the decimal rule."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 import etl_staging_spark.llmdata.simsearch as ss
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -32,65 +37,73 @@ def adv(spark):
     )
 
 
+@pytest.fixture(scope="module")
+def sf001(spark):
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
 def _cmp_probe(df, cent_arrs, cent_norms, probe):
-    na = ss.with_norm(df, "embedding")
-    exact = na.select(
+    scored = ss._cell_scores_sql(cent_arrs, "embedding", cent_norms, "nrm")
+    exact = ss.with_norm(df, "embedding").select(
         "vec_id",
-        ss._probe_cells_expr(
-            cent_arrs, "embedding", probe, cent_norms, "nrm"
-        ).alias("p"),
+        F.expr(f"transform(slice(array_sort({scored}), 1, {probe}), s -> s.cid)")
+        .alias("p"),
     ).collect()
-    fast = na.select(
-        "vec_id",
-        ss._probe_cells_expr(
-            cent_arrs, "embedding", probe, cent_norms, "nrm", fast=True
-        ).alias("p"),
-    ).collect()
-    de = {r[0]: (list(r[1]) if r[1] is not None else None) for r in exact}
-    df_ = {r[0]: (list(r[1]) if r[1] is not None else None) for r in fast}
-    assert de == df_
+    cells = ss._ivf_cells_udf(cent_arrs, cent_norms, probe)
+    kernel = df.select("vec_id", cells(F.col("embedding")).alias("p")).collect()
+    assert {r[0]: list(r[1]) for r in exact} == {r[0]: list(r[1]) for r in kernel}
 
 
-def test_probe_cells_fast_matches_exact_on_ties_and_nulls(adv):
+def test_ivf_cells_kernel_matches_exact_on_ties_and_nulls(adv):
     cent_arrs, cent_norms = ss._resolve_centroids(
         adv, None, 4, "vec_id", "embedding"
     )
-    for probe in (1, 2, 3):
+    for probe in (1, 2, 3, 4):  # 4 = every cell: all margins decide
         _cmp_probe(adv, cent_arrs, cent_norms, probe)
 
 
-def test_probe_cells_fast_matches_exact_on_real_embeddings(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+def test_ivf_cells_kernel_matches_exact_on_real_embeddings(sf001):
     cent_arrs, cent_norms = ss._resolve_centroids(
-        emb, None, 8, "vec_id", "embedding"
+        sf001, None, 8, "vec_id", "embedding"
     )
-    for probe in (1, 2):
-        _cmp_probe(emb, cent_arrs, cent_norms, probe)
+    for probe in (1, 2, 3):
+        _cmp_probe(sf001, cent_arrs, cent_norms, probe)
 
 
-def test_pq_code_fast_matches_exact(adv, spark):
-    for df, n_codes, m in ((adv, 4, 2), (
-        spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet"), 8, 4
-    )):
+def test_pq_code_kernel_matches_exact(adv, sf001):
+    for df, n_codes, m in ((adv, 4, 2), (adv, 4, 4), (sf001, 8, 2), (sf001, 8, 4)):
         d, books = ss.pq_codebooks(df, m, n_codes, "vec_id", "embedding")
-        na = ss.with_norm(df, "embedding")
-        for j in range(m):
-            sub = f"slice(embedding, {j * d + 1}, {d})"
-            exact = na.select(
-                "vec_id", F.expr(ss._pq_best_sql(books[j], sub) + ".cid").alias("c")
-            ).collect()
-            fast = na.select(
-                "vec_id", F.expr(ss._pq_best_cid_fast_sql(books[j], sub)).alias("c")
-            ).collect()
-            assert {r[0]: r[1] for r in exact} == {r[0]: r[1] for r in fast}
+        exact = df.select(
+            "vec_id",
+            F.array(*[
+                F.expr(ss._pq_best_sql(books[j], f"slice(embedding, {j * d + 1}, {d})") + ".cid")
+                for j in range(m)
+            ]).alias("c"),
+        ).collect()
+        kernel = df.select(
+            "vec_id", ss._pq_codes(books, "embedding", d).alias("c")
+        ).collect()
+        assert {r[0]: list(r[1]) for r in exact} == {r[0]: list(r[1]) for r in kernel}
 
 
-def test_fast_path_declines_unsupported_configs():
-    # probe covering every cell leaves no certifying margin below the
-    # cut; missing cent_norms means the inline decimal norm folds
-    # dominate either way — both must decline, not emit a wrong plan
-    ca = {0: [1.0, 0.0], 1: [0.0, 1.0]}
-    cn = {0: 1.0, 1: 1.0}
-    assert ss._probe_cells_fast_sql(ca, "embedding", 2, cn, "nrm") is None
-    assert ss._probe_cells_fast_sql(ca, "embedding", 1, None, "nrm") is None
-    assert ss._pq_best_cid_fast_sql({0: [1.0]}, "embedding") is None
+def test_raw_dot_knife_edge_uses_mass_envelope(spark):
+    """Raw dots have no scale, so a fixed gap certifies nothing. Code 1's
+    products are (1e14, 0.0077, -1e14): the exact decimal dot is 0.0077,
+    but double summation absorbs 0.0077 into 1e14 and returns 0.0 — a
+    0.005 margin in favour of code 0 (dot 0.005), far above any fixed
+    gap. Only the mass envelope (1e-11 * (2e14 + 1)) sends the row to
+    the decimal rule, which picks code 1."""
+    book = {0: [0.0, 0.005, 0.0], 1: [1e7, 0.0077, -1e7]}
+    df = spark.createDataFrame(
+        [(i, [1e7, 1.0, 1e7]) for i in range(64)],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    exact = {
+        r[0] for r in df.select(F.expr(ss._pq_best_sql(book, "embedding") + ".cid")).collect()
+    }
+    got = {
+        r[0][0]
+        for r in df.select(ss._ivf_cells_udf(book, None, 1)(F.col("embedding"))).collect()
+    }
+    assert got == exact == {1}

@@ -670,16 +670,16 @@ def test_mt_keys_knife_edge_decimal_sign(spark):
 
 
 def test_ivf_candidates_match_expression_path(spark):
-    """The Arrow probe-cell kernel must reproduce the expression path's
-    assignment exactly (same ordering, same tie rule) on the driver
-    testdata."""
+    """`ivf_candidates` and `ivf_topk` share the probe-cell kernel: with
+    k = corpus size, ivf_topk keeps exactly the candidate pairs
+    ivf_candidates discovers (same ordering, same tie rule) on the
+    sf0.001 testdata."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     pred = F.col("vec_id") < 10
     from_udf = {
         (r.qid, r.cid) for r in simsearch.ivf_candidates(emb, pred).collect()
     }
-    # expression path: ivf_topk with k = corpus size keeps every
-    # candidate pair it scored
+    # ivf_topk with k = corpus size keeps every candidate pair it scored
     n = emb.count()
     from_expr = {
         (r.qid, r.cid)
@@ -1565,31 +1565,37 @@ def test_pack_greedy_docs_invariants(spark):
 
 
 def test_sign_guard_magnitude_invariant(spark):
-    """The hybrid sign decision must agree with the canonical decimal
-    fold at ANY vector magnitude — including large-magnitude vectors
-    whose double accumulation error exceeds a fixed absolute cutoff —
-    and across near-orthogonal knife-edge pairs."""
-    from etl_staging_spark.llmdata.simsearch import _dot, _sign_nonneg
+    """The sign-LSH key kernel's hybrid sign decision must agree with
+    the canonical decimal fold at ANY vector magnitude — including
+    large-magnitude vectors whose double accumulation error exceeds a
+    fixed absolute cutoff — and across near-orthogonal knife-edge
+    vectors."""
+    from etl_staging_spark.llmdata.hashing import hyperplanes
+    from etl_staging_spark.llmdata.simsearch import _dot, _mt_keys_udf, _vec_sql
 
+    dim, n_bits = 16, 8
+    planes = hyperplanes(n_bits, dim)
     rows = []
     rid = 0
     for scale in (1.0, 1e3, 1e6):
-        for j in range(8):
-            a = [scale * ((i * 7 + j) % 5 - 2) for i in range(16)]
-            # near-orthogonal partner: swap-negate pairs + perturbation
+        for j in range(n_bits):
+            w = planes[j]
+            # near-orthogonal to plane j: swap-negate pairs + perturbation
             b = []
-            for i in range(0, 16, 2):
-                b += [-a[i + 1], a[i]]
+            for i in range(0, dim, 2):
+                b += [-scale * w[i + 1], scale * w[i]]
             b[0] += scale * 1e-10 * (j - 4)
-            rows.append((rid, a, b)); rid += 1
-    df = spark.createDataFrame(rows, "id long, a array<float>, b array<float>")
+            rows.append((rid, b)); rid += 1
+    df = spark.createDataFrame(rows, "id long, b array<double>")
+    keys = _mt_keys_udf(dim, n_tables=1, bits=n_bits)
     got = df.select(
         "id",
-        _sign_nonneg("a", "b").alias("fast"),
-        (_dot("a", "b") >= 0).alias("canon"),
+        keys(F.col("b"))[0].alias("fast"),
+        *[(_dot(_vec_sql(w), "b") >= 0).alias(f"c{p}") for p, w in enumerate(planes)],
     ).collect()
     for r in got:
-        assert r.fast == r.canon, r.id
+        canon = "0|" + "".join("1" if r[f"c{p}"] else "0" for p in range(n_bits))
+        assert r.fast == canon, r.id
 
 
 def test_vec_sql_non_finite_matches_lit_array(spark):

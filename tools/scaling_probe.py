@@ -31,6 +31,10 @@ from bench import timed_run  # noqa: E402
 
 
 
+def _panel(e):
+    return F.pmod(e["vec_id"], F.lit(200)) == 0
+
+
 def _stats_conc(d):
     from etl_staging_spark.llmdata import stats as _st
 
@@ -116,17 +120,21 @@ def replicated(spark, sf_dir: str, r: int):
 
 
 def replicated_embeddings(spark, sf_dir: str, r: int):
-    """Replicate embeddings with offset ids. Exact vector copies are
-    fine here (unlike the salted documents): the embedding ops probed
-    are per-row assignments against broadcast centroids — no pair
-    generation to corrupt — and the deterministic first-K centroid
-    choice keeps reading replica 0's vectors."""
+    """Replicate embeddings with offset ids, salted: replica k rotates
+    every vector's elements by k positions — same norms and element
+    distribution, but not a near-dup of its original, so the pair
+    operators (dup discovery) grow with R instead of gaining R-1 exact
+    clones per vector. The deterministic first-K centroid choice keeps
+    reading replica 0's vectors."""
     base = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     n = base.agg(F.max("vec_id")).collect()[0][0] + 1
     parts = [
         base.select(
             (F.col("vec_id") + F.lit(k * n)).alias("vec_id"),
-            "embedding",
+            F.expr(
+                f"concat(slice(embedding, {k + 1}, size(embedding) - {k}),"
+                f" slice(embedding, 1, {k}))"
+            ).alias("embedding") if k else F.col("embedding"),
             "label",
         )
         for k in range(r)
@@ -380,6 +388,25 @@ def run_probe(
         # with the 1-probe cell filter ahead of scoring; candidate
         # work should track n_probe/n_centroids of the corpus
         "pq_ivf_topk": lambda e: simsearch.pq_ivf_topk(e),
+        # the argmax/sign kernels' other consumers, at their catalog
+        # parameters: IVF ANN (corpus assignment + bounded query probe)
+        # and IVF-cell / sign-LSH near-dup discovery + exact verify.
+        # Pair discovery on a fixed bucket count is quadratic by
+        # design, so the dup ops pair a bounded d1 panel (every 200th
+        # id) against the corpus: the corpus-wide kernel pass is timed
+        # in full and the pair work stays ~linear in the vector count
+        "ivf_topk": lambda e: simsearch.ivf_topk(
+            e, F.col("vec_id") < 10, dim=64, k=5
+        ),
+        "semantic_dup_pairs": lambda e: simsearch.semantic_dup_pairs(
+            e, threshold=0.45, dim=64, d1_pred=_panel(e)
+        ),
+        "cosine_dup_pairs": lambda e: simsearch.cosine_dup_pairs(
+            e, threshold=0.45, dim=64, bands=2, d1_pred=_panel(e)
+        ),
+        "mt_dup_pairs": lambda e: simsearch.mt_dup_pairs(
+            e, threshold=0.45, dim=64, d1_pred=_panel(e)
+        ),
     }
     from etl_staging_spark.operators import events as _ev
 

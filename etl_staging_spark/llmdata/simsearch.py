@@ -79,6 +79,13 @@ def with_norm(df: DataFrame, vec_col: str = "embedding", out: str = "nrm") -> Da
     return df.withColumn(out, F.sqrt(_dot(v, v)))
 
 
+def _has_cosine(normed: DataFrame) -> DataFrame:
+    """The rows of a :func:`with_norm` frame that have a cosine: a zero
+    (or NULL) vector has none, so it never verifies or ranks — filtered
+    before the pair joins, it never reaches a division by its norm."""
+    return normed.where(F.col("nrm") > 0)
+
+
 # Parallelism guard for the scoring stages: a small corpus arrives as
 # 1-2 file splits, and a broadcast join inherits the stream side's
 # partitioning — so every per-pair decimal fold downstream runs on one
@@ -123,6 +130,7 @@ def cosine_scored(
     projection."""
     if normed is None:
         normed = with_norm(_respread_narrow(emb), vec_col)
+    normed = _has_cosine(normed)
     q = normed.where(query_pred).select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).alias("qv"),
@@ -408,12 +416,13 @@ def lsh_multitable_topk(
             F.col(id_col), "__is_q", F.explode("__keys").alias("bkt")
         ),
     )
-    q = normed.where(query_pred).select(
+    scorable = _has_cosine(normed)
+    q = scorable.where(query_pred).select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).alias("qv"),
         F.col("nrm").alias("qn"),
     )
-    c = normed.select(
+    c = scorable.select(
         F.col(id_col).alias("cid"),
         F.col(vec_col).alias("cv"),
         F.col("nrm").alias("cn"),
@@ -597,11 +606,11 @@ def _verify_pairs(
     join exchange-free instead of unioning the corpus into both sides."""
     spark = normed.sparkSession
     cand = cands.repartition(spark.sparkContext.defaultParallelism, "d1", "d2")
-    va = normed.select(
+    va = _has_cosine(normed).select(
         F.col(id_col).alias("d1"), F.col(vec_col).alias("va"),
         F.col("nrm").alias("na"), *carry_left,
     )
-    vb = (normed if normed_right is None else normed_right).select(
+    vb = _has_cosine(normed if normed_right is None else normed_right).select(
         F.col(id_col).alias("d2"), F.col(vec_col).alias("vb"),
         F.col("nrm").alias("nb"),
     )
@@ -882,7 +891,8 @@ def ivf_topk(
     as literals so assignment is one scan, no join. Without them, the
     first ``n_centroids`` vectors by id serve as a deterministic,
     oracle-expressible seed choice — same machinery, weaker lists.
-    NULL vectors are excluded (no cell, no cosine)."""
+    NULL vectors are excluded (no cell, no cosine); a zero vector has a
+    cell but no cosine, so it never ranks."""
     emb = emb.where(F.col(vec_col).isNotNull())
     cent_arrs, cent_norms = _resolve_centroids(
         emb, centroids, n_centroids, id_col, vec_col
@@ -893,13 +903,14 @@ def ivf_topk(
     normed = with_norm(_respread_narrow(emb), vec_col).withColumn(
         "cells", cells_k(F.col(vec_col))
     ).persist()
-    q = normed.where(query_pred).select(
+    scorable = _has_cosine(normed)
+    q = scorable.where(query_pred).select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).alias("qv"),
         F.col("nrm").alias("qn"),
         F.explode("cells").alias("cell"),
     )
-    c = normed.select(
+    c = scorable.select(
         F.col(id_col).alias("cid_"),
         F.col(vec_col).alias("cv"),
         F.col("nrm").alias("cn"),
@@ -2106,13 +2117,13 @@ def pq_adc_topk(
     per-query scores are literal-array lookups in one projection
     fanned out by `explode` (no join); the cut is the shared
     salted two-phase top-k, so no partition ever holds a full query's
-    candidate list."""
+    candidate list. A query whose vector is NULL ranks nothing."""
     d, books = pq_codebooks(emb, m, n_codes, id_col, vec_col)
     codes = pq_encode(
         emb, m, n_codes, id_col, vec_col, books=books, sub_dim=d
     )
     lut_rows = (
-        emb.where(F.col(id_col) < n_queries)
+        emb.where((F.col(id_col) < n_queries) & F.col(vec_col).isNotNull())
         .select(
             F.col(id_col),
             *[

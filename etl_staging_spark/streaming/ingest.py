@@ -300,11 +300,15 @@ def assembly_ingest_stream(
     The handler receives the surviving split-stamped frame per batch
     and owns the sink (a production loop appends survivors to the
     corpus and their signatures to the index, making the pipeline
-    self-maintaining). Decisions are batch-boundary independent BY
-    CONSTRUCTION: every gate is a function of the doc's own content
-    plus persisted state (benchmark table, signature index), and the
-    split is a content-hash — so one drop or many yields the same
-    corpus. Reference analog: the CDC rule engine precedent
+    self-maintaining). That frame is frozen: one eager action computes
+    the batch's verdict and stores the kept rows before the handler
+    runs, so its writes to ``index_table`` can neither change the
+    frame nor make Spark run the gates and the index match again; the
+    stored rows are released when the handler returns. Decisions are
+    batch-boundary independent BY CONSTRUCTION: every gate is a
+    function of the doc's own content plus persisted state (benchmark
+    table, signature index), and the split is a content-hash — so one
+    drop or many yields the same corpus. Reference analog: the CDC rule engine precedent
     (auditlog/models/rule.py:270-494) — a batch job's semantics applied
     continuously; doc_id spaces of stream and index must be disjoint
     (same precondition as the batch operator).
@@ -314,8 +318,12 @@ def assembly_ingest_stream(
     ``n_semantic`` when the semantic rung is on) — the streaming
     twin of ``corpus_assembly_v2``'s per-prefix survivor counts, the
     observability row a production ingest job appends to its metrics
-    sink. Costs one ``count()`` per stage over frames the batch
-    persists anyway: the plan is the same with or without it."""
+    sink. The freezing action observes the funnel
+    (``DataFrame.observe`` over the stage frames' union), so it costs
+    no job, and the plan is the same with or without ``on_stats``."""
+    from functools import reduce
+
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from ..llmdata import decontam, sampling
@@ -331,63 +339,73 @@ def assembly_ingest_stream(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         with PinScope() as scope:
-            # every stage frame below feeds more than one consumer (the
-            # next gate's scan and its semi/anti-join, or the handler
-            # and the funnel), so each persists — one plan whether or
-            # not on_stats is given
-            batch_df = scope.persist(batch_df)
-            gated = scope.persist(
-                _quality_repetition_gate(batch_df, scope, quality_min)
-            )
-            bench = spark.table(bench_table)
-            clean = (
-                decontam.ngram_overlap(gated, bench, n=n_contam, min_hits=1)
-                .where(~F.col("contaminated"))
-                .select("doc_id")
-            )
-            survivors = scope.persist(gated.join(clean, "doc_id", "left_semi"))
-            n_decontam = survivors
-            if emb_table is not None:
-                # batch survivors' vectors looked up by semi-join —
-                # O(batch) against the embeddings table's pruned scan.
-                # NULL-vector rows are dropped from BOTH lookup sides —
-                # they are exactly the "doc without a (usable) vector"
-                # passthrough case, and the LSH kernels raise on NULL
-                # by contract (one bad row must not kill the stream)
-                emb = (
-                    spark.table(emb_table)
-                    .where(F.col("embedding").isNotNull())
-                    .join(survivors.select("doc_id"), "doc_id", "left_semi")
+            with PinScope() as stages:
+                # batch, gated and survivors each feed the next gate's
+                # scan, its semi/anti-join and the funnel, so each persists
+                batch_df = stages.persist(batch_df)
+                gated = stages.persist(
+                    _quality_repetition_gate(batch_df, stages, quality_min)
                 )
-                flagged = scope.adopt(decontam.semantic_contamination(
-                    emb,
-                    spark.table(bench_emb_table).where(
-                        F.col("embedding").isNotNull()
-                    ),
-                    threshold=semantic_threshold, dim=dim,
-                    id_col="doc_id",
-                ))
-                sem_bad = flagged.where(F.col("contaminated")).select("doc_id")
-                survivors = scope.persist(
-                    survivors.join(sem_bad, "doc_id", "left_anti")
+                bench = spark.table(bench_table)
+                clean = (
+                    decontam.ngram_overlap(gated, bench, n=n_contam, min_hits=1)
+                    .where(~F.col("contaminated"))
+                    .select("doc_id")
                 )
-            raw_dups = scope.adopt(dedup.incremental_lsh_matches_indexed(
-                spark, survivors, index_table,
-                threshold=threshold, n=n_dedup,
-            ))
-            dups = raw_dups.select(F.col("d1").alias("doc_id")).distinct()
-            kept = scope.persist(survivors.join(dups, "doc_id", "left_anti"))
-            on_batch(batch_id, sampling.hash_split(kept, splits))
-            if on_stats is not None:
-                funnel = {
-                    "n_in": batch_df.count(),
-                    "n_gated": gated.count(),
-                    "n_decontam": n_decontam.count(),
-                    "n_kept": kept.count(),
-                }
+                survivors = stages.persist(gated.join(clean, "doc_id", "left_semi"))
+                funnel = {"n_in": batch_df, "n_gated": gated, "n_decontam": survivors}
                 if emb_table is not None:
-                    funnel["n_semantic"] = survivors.count()
-                on_stats(batch_id, funnel)
+                    # batch survivors' vectors looked up by semi-join —
+                    # O(batch) against the embeddings table's pruned scan.
+                    # NULL-vector rows are dropped from BOTH lookup sides —
+                    # they are exactly the "doc without a (usable) vector"
+                    # passthrough case, and the LSH kernels raise on NULL
+                    # by contract (one bad row must not kill the stream)
+                    emb = (
+                        spark.table(emb_table)
+                        .where(F.col("embedding").isNotNull())
+                        .join(survivors.select("doc_id"), "doc_id", "left_semi")
+                    )
+                    flagged = stages.adopt(decontam.semantic_contamination(
+                        emb,
+                        spark.table(bench_emb_table).where(
+                            F.col("embedding").isNotNull()
+                        ),
+                        threshold=semantic_threshold, dim=dim,
+                        id_col="doc_id",
+                    ))
+                    sem_bad = flagged.where(F.col("contaminated")).select("doc_id")
+                    survivors = stages.persist(
+                        survivors.join(sem_bad, "doc_id", "left_anti")
+                    )
+                    funnel["n_semantic"] = survivors
+                raw_dups = stages.adopt(dedup.incremental_lsh_matches_indexed(
+                    spark, survivors, index_table,
+                    threshold=threshold, n=n_dedup,
+                ))
+                dups = raw_dups.select(F.col("d1").alias("doc_id")).distinct()
+                funnel["n_kept"] = survivors.join(dups, "doc_id", "left_anti")
+                # every stage's rows, tagged with the stage, observed once
+                # above the union: each branch is one scan, so each row of
+                # each stage is counted exactly once. A fresh (uuid-named)
+                # observation per call, so a re-delivered batch_id works.
+                observed = Observation()
+                stage_rows = reduce(DataFrame.unionByName, [
+                    frame.withColumn("__stage", F.lit(k))
+                    for k, frame in enumerate(funnel.values())
+                ]).observe(observed, *[
+                    F.count_if(F.col("__stage") == k).alias(name)
+                    for k, name in enumerate(funnel)
+                ])
+                kept = stage_rows.where(F.col("__stage") == len(funnel) - 1)
+                # one eager action computes the kept rows and the funnel;
+                # the handler's index writes cannot re-run or change it
+                frozen = scope.freeze(
+                    sampling.hash_split(kept.drop("__stage"), splits)
+                )
+            on_batch(batch_id, frozen)
+            if on_stats is not None:
+                on_stats(batch_id, observed.get)
 
     return _start(docs_stream.writeStream.foreachBatch(_process), query_name, checkpoint_dir)
 

@@ -167,6 +167,19 @@ def release_pinned(df) -> None:
     df._pinned_persisted = ()
 
 
+class _StoredRows:
+    """The stored RDD behind a frozen frame, released like a persisted
+    frame: ``localCheckpoint`` returns a frame over a ``LogicalRDD``
+    that the CacheManager does not track, so ``DataFrame.unpersist``
+    would leave it until the ContextCleaner runs."""
+
+    def __init__(self, frozen: DataFrame):
+        self._rdd = frozen._jdf.queryExecution().logical().rdd()
+
+    def unpersist(self) -> None:
+        self._rdd.unpersist(False)
+
+
 class PinScope:
     """The frames one unit of work persists, released together when the
     ``with`` block exits, also on an exception — the lifecycle for
@@ -182,6 +195,17 @@ class PinScope:
         df = df.persist()
         pin(self, df)
         return df
+
+    def freeze(self, df: DataFrame) -> DataFrame:
+        """Materialize ``df`` now, in one eager action, and return a frame
+        over the stored rows, registered for release. Its lineage reads
+        none of ``df``'s inputs, so a later write to a table ``df`` read
+        cannot change it or make Spark compute it again (an append
+        re-caches every cached plan that reads the appended path).
+        Metrics ``df`` observes are collected by this action."""
+        frozen = df.localCheckpoint(eager=True)
+        pin(self, _StoredRows(frozen))
+        return frozen
 
     def adopt(self, df: DataFrame) -> DataFrame:
         """Register ``df``'s pins for release; returns ``df``."""

@@ -477,9 +477,15 @@ def test_assembly_ingest_stream_matches_batch(spark, tmp_path):
 
 
 def test_assembly_ingest_stream_on_stats_keeps_one_plan(spark, tmp_path):
-    """``on_stats`` only adds the funnel counts: inside ``on_batch`` the
-    session caches the same number of frames with and without it, and
-    the kept ids match."""
+    """``on_stats`` adds no job: inside ``on_batch`` the session caches
+    the same number of frames with and without it, and the kept ids
+    match. The sink appends what it receives to the signature index, as
+    the self-maintaining loop does; the handler's frame is frozen, so
+    that append cannot re-run the match against an index that already
+    holds the batch. The ``good + tail{i}`` docs are near-dups of each
+    other: re-matched, they would drop one another, and the funnel's
+    ``n_kept`` would undercount what the sink appended. Nothing stays
+    cached or persisted after the stream."""
     from etl_staging_spark.llmdata import dedup
     from etl_staging_spark.streaming.ingest import assembly_ingest_stream, doc_stream
 
@@ -500,27 +506,40 @@ def test_assembly_ingest_stream_on_stats_keeps_one_plan(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
         drop_dir
     )
-    dedup.write_signature_index(
-        spark.createDataFrame([(1000, corpus_text)], "doc_id long, text string"),
-        "asm_stats_ix", n_buckets=4,
-    )
     spark.createDataFrame(
         [(2000, "held out benchmark question text")], "doc_id long, text string"
     ).createOrReplaceTempView("asm_stats_bench")
     cache = spark._jsparkSession.sharedState().cacheManager()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
     spark.catalog.clearCache()
+    for rdd in persistent().values():
+        rdd.unpersist()
+
+    def index_ids():
+        return {
+            part: {r.doc_id for r in spark.table(f"asm_stats_ix_{part}").collect()}
+            for part in ("bands", "arrays")
+        }
 
     def run(on_stats):
+        dedup.write_signature_index(
+            spark.createDataFrame([(1000, corpus_text)], "doc_id long, text string"),
+            "asm_stats_ix", n_buckets=4,
+        )
         seen = {"cached": [], "ids": set()}
 
         def sink(bid, frame):
             seen["cached"].append(cache.numCachedEntries())
             seen["ids"] |= {r.doc_id for r in frame.collect()}
+            dedup.append_signature_index(
+                frame.select("doc_id", "text"), "asm_stats_ix", n_buckets=4
+            )
 
         assembly_ingest_stream(
             doc_stream(spark, drop_dir), "asm_stats_ix", "asm_stats_bench", sink,
             quality_min=0.5, threshold=0.6, on_stats=on_stats,
         ).awaitTermination()
+        seen["index"] = index_ids()
         return seen
 
     funnels = []
@@ -532,7 +551,13 @@ def test_assembly_ingest_stream_on_stats_keeps_one_plan(spark, tmp_path):
     assert with_stats["cached"] == without["cached"]
     assert with_stats["ids"] == without["ids"] == set(range(6))
     assert funnels == [{"n_in": 8, "n_gated": 7, "n_decontam": 7, "n_kept": 6}]
+    assert funnels[0]["n_kept"] == len(with_stats["ids"])
+    for seen in (with_stats, without):
+        assert seen["index"] == {
+            "bands": {1000} | seen["ids"], "arrays": {1000} | seen["ids"]
+        }
     assert cache.isEmpty()
+    assert persistent().isEmpty()
 
 
 def test_assembly_ingest_stream_semantic_rung_matches_batch(spark, tmp_path):

@@ -3,9 +3,9 @@ runs through an Arrow kernel (`_ivf_cells_udf`, `_mt_keys_udf`).
 
 Defined behaviour: a NULL vector has no cell, code or bucket and is
 excluded before the kernel (which raises on NULL by contract); a zero
-vector has no cosine, so its cell is the lowest centroid id. Downstream
-cosines of a zero vector stay undefined — the fixtures keep it out of
-any scored pair."""
+vector has no cosine, so its cell is the lowest centroid id, and it
+never verifies or ranks: the cosine scorers drop it before any pair
+divides by its norm."""
 
 from __future__ import annotations
 
@@ -142,3 +142,51 @@ def test_lsh_bucketed_topk_excludes_null_vectors(emb):
     ))
     assert {r.cid for r in rows} == {7}
     assert rows[0].cosine == 1.0
+
+
+def test_ivf_topk_never_ranks_zero_vector(emb):
+    # the zero vector shares cell 0 with queries 0 and 2
+    rows = _collect(ss.ivf_topk(
+        emb.where(F.col("vec_id") < ALL0_ID), F.col("vec_id").isin(0, ZERO_ID),
+        dim=DIM, k=10, n_centroids=2, n_probe=2,
+    ))
+    assert {r.qid for r in rows} == {0}
+    assert ZERO_ID not in {r.cid for r in rows}
+    assert {r.cid for r in rows} == {1, 2, 3}
+
+
+def test_semantic_dup_pairs_never_verifies_zero_vector(emb):
+    # seed centroids e0, e1: the zero vector shares cell 0 with 0 and 2
+    rows = _collect(ss.semantic_dup_pairs(
+        emb.where(F.col("vec_id") < ALL0_ID), threshold=0.95, dim=DIM,
+        n_centroids=2,
+    ))
+    assert {(r.d1, r.d2) for r in rows} == {(0, 2), (1, 3)}
+
+
+def test_cosine_topk_never_ranks_zero_vector(emb):
+    rows = _collect(ss.cosine_topk(
+        emb.where(F.col("vec_id") < ALL0_ID), F.col("vec_id").isin(0, ZERO_ID),
+        k=10,
+    ))
+    assert {r.qid for r in rows} == {0}
+    assert {r.cid for r in rows} == {1, 2, 3}
+
+
+def test_lsh_multitable_topk_never_ranks_zero_vector(emb):
+    rows = _collect(ss.lsh_multitable_topk(
+        emb.where(F.col("vec_id") != NULL_ID),
+        F.col("vec_id").isin(ALL0_ID, ZERO_ID), dim=DIM, k=10,
+    ))
+    assert {r.qid for r in rows} == {ALL0_ID}
+    assert ZERO_ID not in {r.cid for r in rows}
+
+
+def test_pq_adc_topk_null_query_ranks_nothing(spark):
+    frame = spark.createDataFrame(
+        [(0, _e(0)), (1, _e(1)), (2, _mix(0.9, 0.1)), (3, None)],
+        "vec_id long, embedding array<double>",
+    )
+    rows = _collect(ss.pq_adc_topk(frame, k=10, n_queries=4, m=2, n_codes=2))
+    assert {r.qid for r in rows} == {0, 1, 2}
+    assert 3 not in {r.cid for r in rows}

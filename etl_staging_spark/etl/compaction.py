@@ -21,7 +21,7 @@ rewrite — the same correction-scoping argument as the sink it rides.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .sinks import write_partitioned_snapshot
@@ -123,9 +123,22 @@ def compact_partitions(
     if scope is not None:
         _validate_scope(df, scope, partition_cols)
         df = df.where(scope)
-    before = _scoped_file_count(df)
+    cols = df.columns
+    # rows and files before are observed by the checkpointing action
+    # below. The file name is projected first: an observed metric may
+    # not take a non-deterministic argument directly.
+    before = Observation()
+    df = (
+        df.withColumn("__f", F.input_file_name())
+        .observe(
+            before,
+            F.count(F.lit(1)).alias("rows"),
+            F.size(F.collect_set("__f")).alias("files"),
+        )
+        .select(*cols)
+    )
     salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in df.columns]),
+        F.xxhash64(*[F.col(c) for c in cols]),
         F.lit(files_per_partition),
     )
     out = df.repartition(
@@ -134,13 +147,12 @@ def compact_partitions(
     # the overwrite deletes files the lazy plan still references:
     # materialize the scoped slice and cut lineage BEFORE the delete
     out = out.localCheckpoint(eager=True)
-    rows = out.count()
     write_partitioned_snapshot(out, path, partition_cols, mode="dynamic")
     after_df = spark.read.parquet(path)
     if scope is not None:
         after_df = after_df.where(scope)
     return {
-        "files_before": before,
+        "files_before": before.get["files"],
         "files_after": _scoped_file_count(after_df),
-        "rows": rows,
+        "rows": before.get["rows"],
     }

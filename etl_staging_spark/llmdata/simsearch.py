@@ -1923,10 +1923,10 @@ def pq_codebooks(
     subspace, so the oracle reproduces the books without a training
     loop. Returns (sub_dim, {sub: {code: slice}}); the vector dim
     must divide evenly into ``m`` subspaces, and all ``n_codes``
-    seed vectors must exist (fail loudly, `_resolve_centroids`'s
-    convention)."""
+    seed vectors must exist and be non-NULL (fail loudly,
+    `_resolve_centroids`'s convention)."""
     rows = (
-        emb.where(F.col(id_col) < n_codes)
+        emb.where((F.col(id_col) < n_codes) & F.col(vec_col).isNotNull())
         .select(id_col, vec_col)
         .collect()  # bounded: n_codes vectors
     )

@@ -5,6 +5,13 @@ Local-mode defaults mirror what we would set on a real cluster: AQE on
 shuffle partitions sized to the parallelism actually available, UTC
 session timezone so timestamp semantics match the DuckDB oracle, and
 Arrow enabled for the few Pandas-UDF paths (multimodal stubs).
+
+The generated-code cache is sized to the session's working set.
+Whole-stage codegen compiles a class per distinct generated source and
+keeps it in an LRU cache of 100 entries by default. One nightly close
+needs about 300 classes, so with 100 entries every night recompiled
+~266 classes it had compiled the night before. A session not built by
+`get_spark` (an external driver's own) keeps Spark's default.
 """
 
 from __future__ import annotations
@@ -14,6 +21,15 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Generated classes the session keeps compiled (Spark's default is 100).
+# Distinct classes per session, counted as compiles under an unbounded
+# cache (4 vCPU): perfbench nightly_close set-up plus one night 295;
+# ledger_reports warm-up plus its 12-round parameter cycle 442;
+# `python bench.py` 1514; `tools/check.py` (215 entries) 2702; the
+# Tier-1 test session 4111. 4096 holds each of these whole except the
+# Tier-1 session, which it nearly holds.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def default_driver_memory() -> str:
@@ -55,6 +71,8 @@ def get_spark(app_name: str = "etl_staging_spark", cpus: int | None = None) -> S
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # static: it must be set before the context starts
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # events.parquet carries TIMESTAMP(NANOS) which Spark has no native
         # type for; read the raw int64 and convert at the catalog layer.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -279,7 +279,7 @@ def assembly_ingest_stream(
        never corpus x corpus);
     2b. OPTIONAL semantic decontamination rung (`decontam.
        semantic_contamination`) when BOTH ``emb_table`` (doc_id-keyed
-       embeddings, looked up for the batch's survivors by semi-join)
+       embeddings, looked up for the batch's docs by semi-join)
        and ``bench_emb_table`` are given — the paraphrase-proof rung
        completing ladder parity with ``CorpusPipeline.
        decontaminate_semantic``; docs WITHOUT a vector are untouched
@@ -296,6 +296,14 @@ def assembly_ingest_stream(
        (`dedup.incremental_lsh_matches_indexed` — bucketed index joins,
        O(batch) + O(candidates) per batch, corpus never rescanned);
     4. deterministic hash split stamp (`sampling.hash_split`).
+
+    The micro-batch runs as ONE plan: each gate decides over the whole
+    batch, its verdicts are left-joined to the batch by doc_id, and a
+    doc's funnel stage is the first gate it fails — the chained gates'
+    answer, since every gate is a per-doc function of the doc and of
+    persisted state (the disjoint doc_id precondition below). A doc
+    with a NULL doc_id stops at the quality gate, as a doc-keyed
+    semi-join would stop it.
 
     The handler receives the surviving split-stamped frame per batch
     and owns the sink (a production loop appends survivors to the
@@ -319,14 +327,13 @@ def assembly_ingest_stream(
     twin of ``corpus_assembly_v2``'s per-prefix survivor counts, the
     observability row a production ingest job appends to its metrics
     sink. The freezing action observes the funnel
-    (``DataFrame.observe`` over the stage frames' union), so it costs
-    no job, and the plan is the same with or without ``on_stats``."""
-    from functools import reduce
-
+    (``DataFrame.observe`` over the per-doc verdict, each doc counted at
+    every stage it reaches), so it costs no job, and the plan is the
+    same with or without ``on_stats``."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from ..llmdata import decontam, sampling
+    from ..llmdata import decontam, sampling, textstats
 
     splits = splits or {"train": 0.9, "val": 0.05, "test": 0.05}
     if (emb_table is None) != (bench_emb_table is None):
@@ -340,69 +347,91 @@ def assembly_ingest_stream(
         spark = batch_df.sparkSession
         with PinScope() as scope:
             with PinScope() as stages:
-                # batch, gated and survivors each feed the next gate's
-                # scan, its semi/anti-join and the funnel, so each persists
-                batch_df = stages.persist(batch_df)
-                gated = stages.persist(
-                    _quality_repetition_gate(batch_df, stages, quality_min)
+                docs = batch_df.select("doc_id", "text")
+                # the text gates are projections of each row; the row
+                # rides along in a struct, so no input column can collide
+                # with the gates' own columns
+                verdict = textstats.repetition_stats(
+                    textstats.quality_scores(
+                        batch_df.select(
+                            "doc_id", "text", F.struct(*batch_df.columns).alias("__row")
+                        ),
+                        keep=("text", "__row"),
+                    ),
+                    keep=("__row", "quality"),
                 )
-                bench = spark.table(bench_table)
-                clean = (
-                    decontam.ngram_overlap(gated, bench, n=n_contam, min_hits=1)
-                    .where(~F.col("contaminated"))
-                    .select("doc_id")
+                gated = (
+                    F.col("doc_id").isNotNull()
+                    & (F.col("quality") >= quality_min)
+                    & ~F.col("repetitive")
                 )
-                survivors = stages.persist(gated.join(clean, "doc_id", "left_semi"))
-                funnel = {"n_in": batch_df, "n_gated": gated, "n_decontam": survivors}
+                fails = {"n_gated": ~F.coalesce(gated, F.lit(False))}
+                # the other gates match the doc against persisted state;
+                # each yields the ids it drops
+                dropped = {"n_decontam": decontam.ngram_overlap(
+                    docs, spark.table(bench_table), n=n_contam, min_hits=1
+                ).where(F.col("contaminated"))}
                 if emb_table is not None:
-                    # batch survivors' vectors looked up by semi-join —
-                    # O(batch) against the embeddings table's pruned scan.
-                    # NULL-vector rows are dropped from BOTH lookup sides —
-                    # they are exactly the "doc without a (usable) vector"
+                    # the batch's vectors looked up by semi-join — O(batch)
+                    # against the embeddings table's pruned scan. NULL-vector
+                    # rows are dropped from BOTH lookup sides — they are
+                    # exactly the "doc without a (usable) vector"
                     # passthrough case, and the LSH kernels raise on NULL
                     # by contract (one bad row must not kill the stream)
                     emb = (
                         spark.table(emb_table)
                         .where(F.col("embedding").isNotNull())
-                        .join(survivors.select("doc_id"), "doc_id", "left_semi")
+                        .join(docs.select("doc_id"), "doc_id", "left_semi")
                     )
-                    flagged = stages.adopt(decontam.semantic_contamination(
-                        emb,
-                        spark.table(bench_emb_table).where(
-                            F.col("embedding").isNotNull()
-                        ),
-                        threshold=semantic_threshold, dim=dim,
-                        id_col="doc_id",
-                    ))
-                    sem_bad = flagged.where(F.col("contaminated")).select("doc_id")
-                    survivors = stages.persist(
-                        survivors.join(sem_bad, "doc_id", "left_anti")
+                    dropped["n_semantic"] = stages.adopt(
+                        decontam.semantic_contamination(
+                            emb,
+                            spark.table(bench_emb_table).where(
+                                F.col("embedding").isNotNull()
+                            ),
+                            threshold=semantic_threshold, dim=dim,
+                            id_col="doc_id",
+                        )
+                    ).where(F.col("contaminated"))
+                dropped["n_kept"] = stages.adopt(dedup.incremental_lsh_matches_indexed(
+                    spark, docs, index_table, threshold=threshold, n=n_dedup,
+                )).select(F.col("d1").alias("doc_id"))
+                for name, ids in dropped.items():
+                    verdict = verdict.join(
+                        ids.select("doc_id").distinct().withColumn(f"__{name}", F.lit(True)),
+                        "doc_id", "left",
                     )
-                    funnel["n_semantic"] = survivors
-                raw_dups = stages.adopt(dedup.incremental_lsh_matches_indexed(
-                    spark, survivors, index_table,
-                    threshold=threshold, n=n_dedup,
-                ))
-                dups = raw_dups.select(F.col("d1").alias("doc_id")).distinct()
-                funnel["n_kept"] = survivors.join(dups, "doc_id", "left_anti")
-                # every stage's rows, tagged with the stage, observed once
-                # above the union: each branch is one scan, so each row of
-                # each stage is counted exactly once. A fresh (uuid-named)
-                # observation per call, so a re-delivered batch_id works.
+                    fails[name] = F.col(f"__{name}")
+                # the funnel stage a doc reaches: the first gate it fails,
+                # len(fails) if it passes all. Every gate is a function of
+                # the doc and of persisted state, so running each over the
+                # whole batch decides exactly what the chained gates did.
+                first, *rest = fails.values()
+                stage = F.when(first, 0)
+                for k, fail in enumerate(rest, 1):
+                    stage = stage.when(fail, k)
+                stage = stage.otherwise(len(fails))
+                funnel = ["n_in", *fails]
+                # observed once over the verdict, each doc counted at
+                # every stage it reaches. The one filter sits above the
+                # CollectMetrics node, which no predicate is pushed
+                # through, so the repetition flag is never filtered
+                # directly (caller note on repetition_stats). A fresh
+                # (uuid-named) observation per call, so a re-delivered
+                # batch_id works.
                 observed = Observation()
-                stage_rows = reduce(DataFrame.unionByName, [
-                    frame.withColumn("__stage", F.lit(k))
-                    for k, frame in enumerate(funnel.values())
-                ]).observe(observed, *[
-                    F.count_if(F.col("__stage") == k).alias(name)
-                    for k, name in enumerate(funnel)
-                ])
-                kept = stage_rows.where(F.col("__stage") == len(funnel) - 1)
+                kept = (
+                    verdict.select("__row", stage.alias("__stage"))
+                    .observe(observed, *[
+                        F.count_if(F.col("__stage") >= k).alias(name)
+                        for k, name in enumerate(funnel)
+                    ])
+                    .where(F.col("__stage") == len(fails))
+                    .select("__row.*")
+                )
                 # one eager action computes the kept rows and the funnel;
                 # the handler's index writes cannot re-run or change it
-                frozen = scope.freeze(
-                    sampling.hash_split(kept.drop("__stage"), splits)
-                )
+                frozen = scope.freeze(sampling.hash_split(kept, splits))
             on_batch(batch_id, frozen)
             if on_stats is not None:
                 on_stats(batch_id, observed.get)

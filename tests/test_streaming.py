@@ -560,6 +560,69 @@ def test_assembly_ingest_stream_on_stats_keeps_one_plan(spark, tmp_path):
     assert persistent().isEmpty()
 
 
+def test_assembly_ingest_stream_counts_each_doc_at_its_first_failed_gate(
+    spark, tmp_path
+):
+    """A doc that fails several gates is counted at the FIRST one it
+    fails, so the funnel stays nested: a low-quality doc and a
+    contaminated doc that are each also a near-dup of an index doc stop
+    at the quality gate and at decontamination, not at the dedup scrub;
+    a clean near-dup stops at the scrub."""
+    from etl_staging_spark.llmdata import dedup, textstats
+    from etl_staging_spark.streaming.ingest import assembly_ingest_stream, doc_stream
+
+    good = (
+        "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
+        "kilo lima mike november oscar papa quebec romeo sierra tango"
+    )
+    low = "of the of a to the in a of the to a in the of a to the in a"
+    bench_text = (
+        "held out benchmark question about the seven wonders of the "
+        "ancient world and their architects with enough tokens to shingle"
+    )
+    corpus_text = (
+        "entirely separate corpus resident document describing harvest "
+        "seasons crop rotation irrigation channels terraced fields"
+    )
+    leak = good + " " + bench_text
+    rows = [(i, good + f" tail{i}") for i in range(4)] + [
+        (50, low), (51, leak), (52, corpus_text),
+    ]
+    incoming = spark.createDataFrame(rows, "doc_id long, text string")
+    # the planted doc 50 fails the quality gate itself, not repetition
+    flags = {
+        r.doc_id: (r.quality, r.repetitive)
+        for r in textstats.quality_scores(incoming).join(
+            textstats.repetition_stats(incoming), "doc_id"
+        ).collect()
+    }
+    assert flags[50][0] < 0.5 and not flags[50][1]
+    incoming.coalesce(1).write.parquet(str(tmp_path / "drops"))
+    spark.createDataFrame(
+        [(2000, bench_text)], "doc_id long, text string"
+    ).createOrReplaceTempView("asm_first_bench")
+    # every planted doc has a near-dup in the index
+    dedup.write_signature_index(
+        spark.createDataFrame(
+            [(1050, low), (1051, leak), (1052, corpus_text)], "doc_id long, text string"
+        ),
+        "asm_first_ix", n_buckets=4,
+    )
+    got, funnels = set(), []
+    assembly_ingest_stream(
+        doc_stream(spark, str(tmp_path / "drops")), "asm_first_ix", "asm_first_bench",
+        lambda bid, frame: got.update(r.doc_id for r in frame.collect()),
+        quality_min=0.5, threshold=0.6, on_stats=lambda bid, f: funnels.append(f),
+    ).awaitTermination()
+    spark.sql("DROP TABLE IF EXISTS asm_first_ix_bands")
+    spark.sql("DROP TABLE IF EXISTS asm_first_ix_arrays")
+
+    assert funnels == [{"n_in": 7, "n_gated": 6, "n_decontam": 5, "n_kept": 4}]
+    f = funnels[0]
+    assert f["n_in"] >= f["n_gated"] >= f["n_decontam"] >= f["n_kept"]
+    assert got == set(range(4))
+
+
 def test_assembly_ingest_stream_semantic_rung_matches_batch(spark, tmp_path):
     """The OPTIONAL semantic-decontamination rung completes ladder
     parity between the streaming front door and CorpusPipeline: a

@@ -190,3 +190,13 @@ def test_pq_adc_topk_null_query_ranks_nothing(spark):
     rows = _collect(ss.pq_adc_topk(frame, k=10, n_queries=4, m=2, n_codes=2))
     assert {r.qid for r in rows} == {0, 1, 2}
     assert 3 not in {r.cid for r in rows}
+
+
+def test_pq_codebooks_null_seed_is_degenerate(spark):
+    # a NULL seed vector cannot define a code: the corpus is degenerate
+    frame = spark.createDataFrame(
+        [(0, None), (1, _e(1)), (2, _mix(0.9, 0.1)), (3, _e(0))],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="degenerate corpus"):
+        ss.pq_adc_topk(frame, k=10, n_queries=2, m=2, n_codes=2)

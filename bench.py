@@ -9,7 +9,11 @@ HEADLINE, under the same protocol)
 bench_last.json holds the full-precision record, including
 "build_exec": each query's [build_s, exec_s] for its fastest rep —
 Python/py4j DataFrame construction vs the noop-sink run (Catalyst
-planning + execution). :func:`timed_run` and :func:`warm` ARE the
+planning + execution), and "cpus", the session's defaultParallelism.
+It also keeps the outlier guard's references: each query's most
+recent timing per (cpus, sf), which a run at another core count or
+sf, or a named subset, leaves in place. A fresh checkout has none, so
+its first run is unguarded. :func:`timed_run` and :func:`warm` ARE the
 repo's one query-timing protocol: tools/ab_respread.py and
 tools/scaling_probe.py time through them.
 """
@@ -156,93 +160,56 @@ HEADLINE = [
 ]
 
 
-def bench_files(here: str) -> dict[int, str]:
-    """THE one place BENCH_r{N}.json files are DISCOVERED ({round:
-    path}) — shared by :func:`bench_rounds` and `tools/ledger.py`'s
-    bench-history table, so a naming-convention change cannot
-    desynchronize the guard from the published history. Strict name
-    parse (a stray variant file must not shadow a round); keys are
-    NUMERIC rounds; if both BENCH_r9.json and BENCH_r09.json ever
-    coexist the lexicographically-first file wins DETERMINISTICALLY
-    (sorted glob, first mapping kept) instead of flipping with
-    filesystem enumeration order."""
-    import glob
-
-    out: dict[int, str] = {}
-    for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(path))
-        if m:
-            out.setdefault(int(m.group(1)), path)
-    return out
+def _reference_key(cpus: int, sf: float | None) -> str:
+    return f"cpus={cpus} sf={sf}"
 
 
-def bench_rounds(here: str) -> dict[int, dict]:
-    """THE one place BENCH_r{N}.json files are PARSED ({round:
-    parsed-dict}), over :func:`bench_files`' discovery — shared by the
-    outlier guard below and by `tools/ledger.py`'s bench-history
-    table, so a format change (new wrapper key) cannot desynchronize
-    the two. Corrupt files are skipped, never a crash. The driver
-    wraps bench.py's JSON line under "parsed"; bench.py's own raw
-    output (no envelope) also parses."""
-    rounds: dict[int, dict] = {}
-    for rnd, path in bench_files(here).items():
-        try:
-            data = json.load(open(path))
-            parsed = data.get("parsed")
-        except (OSError, json.JSONDecodeError, AttributeError):
-            continue
-        if not isinstance(parsed, dict):
-            # bench.py's own raw output has no envelope — but the
-            # driver wrapper with "parsed": null (the r10 crash
-            # artifact) must NOT be adopted as if it were a record
-            parsed = data if isinstance(data, dict) and "queries" in data else None
-        if isinstance(parsed, dict):
-            parsed = dict(parsed)
-            parsed.setdefault("sf", data.get("sf") if isinstance(data, dict) else None)
-            rounds[rnd] = parsed
-    return rounds
+def _stored_references(path: str) -> dict[str, dict[str, float]]:
+    """Every guard reference kept in the record at ``path``, keyed by
+    cpus and sf; {} when the file is missing, corrupt or not an
+    object, so a fresh checkout's first run is unguarded."""
+    try:
+        with open(path) as f:
+            refs = json.load(f)["references"]
+    except (OSError, ValueError, KeyError, TypeError):
+        return {}
+    if not isinstance(refs, dict):
+        return {}
+    return {k: v for k, v in refs.items() if isinstance(v, dict)}
 
 
-def _prior_timings(here: str, sf: float | None = None) -> dict[str, float]:
-    """Per-query reference for the outlier guard: for each query, the
-    MINIMUM over its appearances in the last TWO rounds CONTAINING it,
-    looking back at most FOUR published rounds. Two rounds per query:
-    one contended publication (r10 shipped with 14 rerun-flagged
-    queries) must not become the sole comparison base — a 7.6 s
-    contention artifact as the reference would let a genuine 3x
-    regression pass unflagged. Per-query (not last-two-overall): a
-    query missing from a round (added later, or shed by an older
-    publication format) keeps its reference from the most recent
-    rounds that did publish it. Bounded at four rounds: an ancient
-    artifact (different machine era, pre-sf-tagging) must age OUT, not
-    resurrect as a reference that trips the guard forever on a
-    since-slowed query. Rounds at a DIFFERENT scale factor are skipped
-    when ``sf`` is given; a round without per-query timings
-    ({"parsed": null} crash artifacts, or a fully-omitted publication)
-    is skipped, never adopted as {}."""
-    rounds: dict[int, dict[str, float]] = {}
-    for rnd, parsed in bench_rounds(here).items():
-        qs = parsed.get("queries", {})
-        if sf is not None and parsed.get("sf") is not None and parsed["sf"] != sf:
-            continue
-        if isinstance(qs, dict) and qs:
-            rounds[rnd] = qs
-    seen: dict[str, list[float]] = {}
-    for rnd in sorted(rounds, reverse=True)[:4]:
-        for name, sec in rounds[rnd].items():
-            if isinstance(sec, (int, float)) and sec > 0:
-                vals = seen.setdefault(name, [])
-                if len(vals) < 2:
-                    vals.append(float(sec))
-    return {name: min(vals) for name, vals in seen.items()}
+def guard_reference(path: str, cpus: int, sf: float | None) -> dict[str, float]:
+    """The outlier guard's reference: each query's most recent timing
+    by bench.py on a session with the same defaultParallelism (cpus)
+    and sf, as kept in ``path`` by :func:`save_record`. Timings taken
+    at other core counts or scale factors never serve as a reference."""
+    return _stored_references(path).get(_reference_key(cpus, sf), {})
+
+
+def save_record(path: str, record: dict) -> None:
+    """Write the run ``record`` to ``path`` with the guard references
+    updated: the record's per-query timings replace the stored ones at
+    its cpus and sf; queries it did not time, and references at other
+    cpus or sf, are kept."""
+    refs = _stored_references(path)
+    key = _reference_key(record["cpus"], record["sf"])
+    refs[key] = {**refs.get(key, {}), **record["queries"]}
+    with open(path, "w") as f:
+        json.dump({**record, "references": refs}, f)
 
 
 # absolute floor on outlier-guard trips: sub-0.4s results are
-# dominated by job-scheduling constants and 2-decimal reference
-# quantization (a 0.15s ref tripping at 0.31s is timer noise, not
-# contention) — they can neither signal a real regression nor justify a
-# rerun
+# dominated by job-scheduling constants (a 0.15s ref tripping at 0.31s
+# is timer noise, not contention) — they can neither signal a real
+# regression nor justify a rerun
 GUARD_FLOOR_SEC = 0.4
+
+
+def guard_trips(best: float, ref: float | None) -> bool:
+    """The outlier guard: a best-of-3 more than twice its reference,
+    and above :data:`GUARD_FLOOR_SEC`, is rerun and flagged."""
+    return bool(ref) and best > 2 * ref and best > GUARD_FLOOR_SEC
+
 
 # the round-1 headline subset, for like-for-like cross-round comparison
 # now that the headline set has grown
@@ -265,15 +232,11 @@ def publish_line(
     """The stdout publication. The driver keeps a BOUNDED (~2000 char)
     stdout tail — round 10's default-formatted 59-query line outgrew it
     and published "parsed": null — so the line is compact by
-    construction: compact separators, 2-decimal timings (the outlier
-    guard's 2x test needs no more), the rerun list capped at 3 names +
-    a count, and a HEADLINE curated (r13 rule, above) so that every
-    name fits under 1900 chars even at worst-case widths
-    (tests/test_bench_guard.py pins it). NO 1-decimal rung: quantizing
-    a 0.149s steady state to 0.1 would poison the next round's
-    references (false trips at 2x a halved ref, real 2x regressions
-    hidden). bench_last.json always carries the full-precision
-    record."""
+    construction: compact separators, 2-decimal timings, the rerun
+    list capped at 3 names + a count, and a HEADLINE curated (r13
+    rule, above) so that every name fits under 1900 chars even at
+    worst-case widths (tests/test_bench_guard.py pins it).
+    bench_last.json always carries the full-precision record."""
     return json.dumps({
         "metric": "headline_queries_total_time",
         "value": round(total, 2),
@@ -410,13 +373,16 @@ def main(names: list[str]) -> None:
     # executions is the steady-state number and is stable across runs
     # (best-of-2 still published a 1.45x-noise straggler in round 5).
     # Outlier guard: a best-of-3 that still lands >2x the query's
-    # previous published round is almost always machine contention, not
-    # a plan change (round 8 published three such artifacts) — re-run
-    # the best-of-3 once and keep the overall minimum, flagging the
-    # query in "reruns" so a genuine regression is visible as a number
-    # that survived SIX runs.
-    here = os.path.dirname(os.path.abspath(__file__))
-    prior = _prior_timings(here, sf)
+    # reference (its last timing on this cpus and sf) is almost always
+    # machine contention, not a plan change (round 8 published three
+    # such artifacts) — re-run the best-of-3 once and keep the overall
+    # minimum, flagging the query in "reruns" so a genuine regression
+    # is visible as a number that survived SIX runs.
+    record_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "bench_last.json"
+    )
+    cpus = spark.sparkContext.defaultParallelism
+    prior = guard_reference(record_path, cpus, sf)
 
     # forensics (r17, VERDICT r16): every raw timed run per query, so
     # bench_last.json can publish the min/max spread — a contended run
@@ -455,8 +421,7 @@ def main(names: list[str]) -> None:
         reruns = []
         for name in names:
             best = best_of_3(name)
-            ref = prior.get(name)
-            if ref and best > 2 * ref and best > GUARD_FLOOR_SEC:
+            if guard_trips(best, prior.get(name)):
                 spark.catalog.clearCache()
                 best_of_3(name)
                 # flagged on the TRIP, not on recovery: the rerun list
@@ -483,6 +448,7 @@ def main(names: list[str]) -> None:
         "reruns": reruns,
         "attempts": attempts,
         "sf": sf,
+        "cpus": cpus,
         "build_exec": {
             n: [round(b, 3), round(e, 3)] for n, (b, e) in fastest.items()
         },
@@ -494,9 +460,7 @@ def main(names: list[str]) -> None:
         "loadavg_start": [round(x, 2) for x in loadavg_start],
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
     }
-    # full-precision record for the repo's own ledger / guard analysis
-    with open(os.path.join(here, "bench_last.json"), "w") as f:
-        json.dump(verbose, f)
+    save_record(record_path, verbose)
     print(publish_line(timings, total, core_total, reruns, attempts, sf))
 
 

@@ -49,7 +49,10 @@ def _start(stream_writer, query_name: str, checkpoint_dir: str | None):
     the exactly-once restart story every ingest service here inherits
     (foreachBatch re-delivers an uncommitted batch after a crash; the
     handlers are deterministic and idempotent-by-overwrite, so replays
-    converge)."""
+    converge — for `assembly_ingest_stream` only while its handler does
+    not write to ``index_table``: a re-delivered batch is then matched
+    against its own earlier append, so it keeps fewer docs and appends
+    the survivors again)."""
     w = stream_writer.queryName(query_name).trigger(availableNow=True)
     if checkpoint_dir:
         w = w.option("checkpointLocation", checkpoint_dir)
@@ -316,7 +319,12 @@ def assembly_ingest_stream(
     batch-boundary independent BY CONSTRUCTION: every gate is a
     function of the doc's own content plus persisted state (benchmark
     table, signature index), and the split is a content-hash — so one
-    drop or many yields the same corpus. Reference analog: the CDC rule engine precedent
+    drop or many yields the same corpus, as long as the handler does
+    not write to ``index_table``. A handler that appends the batch's
+    signatures to the index (the production loop above) makes the
+    corpus depend on drop boundaries: near-duplicates inside one drop
+    all survive, while across drops the later ones match the earlier
+    append and are dropped. Reference analog: the CDC rule engine precedent
     (auditlog/models/rule.py:270-494) — a batch job's semantics applied
     continuously; doc_id spaces of stream and index must be disjoint
     (same precondition as the batch operator).

@@ -1,7 +1,9 @@
-"""Unit tests for bench.py's outlier-guard reference loader — pure
-file logic, no Spark: the guard must read the LATEST strictly-named
-BENCH round, unwrap the driver's "parsed" envelope, and never crash on
-stray or corrupt files (a broken guard silently disables re-runs)."""
+"""Unit tests for bench.py's outlier guard and its reference — pure
+file logic, no Spark. The reference for a query is bench.py's most
+recent timing of it at the same cpus and sf, kept in the run record;
+the guard must trip at more than 2x that reference, ignore timings
+from other core counts or scale factors, and never crash on a
+missing or broken record (a broken guard silently disables re-runs)."""
 
 from __future__ import annotations
 
@@ -12,167 +14,56 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import _prior_timings
+from bench import guard_reference, guard_trips, save_record
 
 
-def _write(d, name, payload):
-    (d / name).write_text(json.dumps(payload))
+def _record(queries, cpus=4, sf=0.1):
+    return {"queries": queries, "cpus": cpus, "sf": sf, "value": 0.0}
 
 
-def test_prior_timings_min_of_last_two_rounds(tmp_path):
-    """The guard reference is the per-query MINIMUM across the last
-    two rounds CONTAINING the query (r11 hardening: one contended
-    publication must not become the sole comparison base; r12: shed
-    queries look back, bounded at four rounds), with queries known to
-    only one round still covered."""
-    _write(tmp_path, "BENCH_r07.json",
-           {"parsed": {"queries": {"q": 0.1}}})  # 3rd-most-recent for q
-    _write(tmp_path, "BENCH_r08.json",
-           {"parsed": {"queries": {"q": 1.0, "only8": 3.0}}})
-    _write(tmp_path, "BENCH_r09.json",
-           {"parsed": {"queries": {"q": 2.0, "only9": 4.0}}})
-    assert _prior_timings(str(tmp_path)) == {
-        "q": 1.0, "only8": 3.0, "only9": 4.0,
-    }
+def test_planted_slowdown_trips_the_guard(tmp_path):
+    path = str(tmp_path / "bench_last.json")
+    save_record(path, _record({"q": 1.0}))
+    ref = guard_reference(path, 4, 0.1)["q"]
+    assert guard_trips(2.5, ref)
+    assert not guard_trips(1.9, ref)
+    # the floor still applies: sub-floor timings never trip
+    assert not guard_trips(0.35, 0.1)
 
 
-def test_prior_timings_skips_other_scale_factors(tmp_path):
-    """A round recorded at a different sf is not a valid reference —
-    sf0.001 smoke timings would trip the guard on every sf0.1 query
-    and spin the systemic-contention restart loop."""
-    _write(tmp_path, "BENCH_r08.json",
-           {"parsed": {"queries": {"q": 0.01}, "sf": 0.001}})
-    _write(tmp_path, "BENCH_r09.json",
-           {"parsed": {"queries": {"q": 2.0}, "sf": 0.1}})
-    assert _prior_timings(str(tmp_path), sf=0.1) == {"q": 2.0}
-    # sf unknown on the record (pre-r11 artifacts): still adopted
-    _write(tmp_path, "BENCH_r10.json", {"parsed": {"queries": {"q": 1.5}}})
-    assert _prior_timings(str(tmp_path), sf=0.1) == {"q": 1.5}
+def test_reference_ignores_other_cpus_and_sf(tmp_path):
+    """Timings taken at another core count or scale factor set no
+    reference: a 32-core record would hide a 4-core regression, and
+    sf0.001 smoke timings would trip every sf0.1 query."""
+    path = str(tmp_path / "bench_last.json")
+    save_record(path, _record({"q": 1.0}, cpus=32))
+    save_record(path, _record({"q": 1.0}, sf=0.001))
+    assert guard_reference(path, 4, 0.1) == {}
+    assert not guard_trips(2.5, guard_reference(path, 4, 0.1).get("q"))
+    # and neither run erased the other's reference
+    assert guard_reference(path, 32, 0.1) == {"q": 1.0}
+    assert guard_reference(path, 4, 0.001) == {"q": 1.0}
 
 
-def test_prior_timings_strict_name_and_corrupt_tolerance(tmp_path):
-    _write(tmp_path, "BENCH_r08.json", {"parsed": {"queries": {"q": 1.0}}})
-    # stray variant must not be parsed as a later round
-    _write(tmp_path, "BENCH_r08_v2.json", {"parsed": {"queries": {"q": 9.0}}})
-    (tmp_path / "BENCH_r10.json").write_text("{not json")
-    assert _prior_timings(str(tmp_path)) == {"q": 1.0}
+def test_subset_run_keeps_references_it_did_not_time(tmp_path):
+    path = str(tmp_path / "bench_last.json")
+    save_record(path, _record({"a": 1.0, "b": 2.0}))
+    save_record(path, _record({"a": 0.5}))
+    assert guard_reference(path, 4, 0.1) == {"a": 0.5, "b": 2.0}
+    with open(path) as f:
+        assert json.load(f)["queries"] == {"a": 0.5}
 
 
-def test_prior_timings_unwrapped_and_empty(tmp_path):
-    # bench.py's own raw output (no driver envelope) also works
-    _write(tmp_path, "BENCH_r03.json", {"queries": {"x": 0.5}})
-    assert _prior_timings(str(tmp_path)) == {"x": 0.5}
-    assert _prior_timings(str(tmp_path / "nowhere")) == {}
-
-
-def test_prior_timings_crash_artifact_does_not_shadow(tmp_path):
-    """A published crash round ({"parsed": null} or an empty queries
-    dict) must not win as latest with {} — that would silently disable
-    the guard while a perfectly good earlier round exists."""
-    _write(tmp_path, "BENCH_r08.json", {"parsed": {"queries": {"q": 1.0}}})
-    _write(tmp_path, "BENCH_r09.json", {"parsed": None, "error": "oom"})
-    _write(tmp_path, "BENCH_r10.json", {"parsed": {"queries": {}}})
-    assert _prior_timings(str(tmp_path)) == {"q": 1.0}
-
-
-def test_bench_rounds_rejects_crash_wrapper(tmp_path):
-    """The r11 regression caught at review: a driver wrapper with
-    "parsed": null (the r10 crash artifact) must NOT fall back to the
-    wrapper dict itself — the ledger would then print the contended
-    round as 'clean' with 0 reruns."""
-    from bench import bench_rounds
-
-    _write(tmp_path, "BENCH_r10.json",
-           {"n": 10, "rc": 0, "sf": 0.1, "tail": "...", "parsed": None})
-    _write(tmp_path, "BENCH_r09.json",
-           {"parsed": {"queries": {"q": 2.0}, "sf": 0.1}})
-    rounds = bench_rounds(str(tmp_path))
-    assert 10 not in rounds
-    assert rounds[9]["queries"] == {"q": 2.0}
-
-def test_ledger_bench_history_tolerates_non_dict_payload(tmp_path):
-    """r11 ADVICE: a BENCH_r*.json holding valid non-object JSON (a
-    bare list) crashed bench_history() with AttributeError on
-    data.get('tail') while bench_rounds() tolerated the same shape —
-    the ledger regeneration must skip it instead."""
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from ledger import bench_history
-
-    _write(tmp_path, "BENCH_r08.json", [1, 2, 3])
-    _write(tmp_path, "BENCH_r09.json",
-           {"parsed": {"queries": {"q": 2.0}, "value": 2.0,
-                       "n_queries": 1, "sf": 0.1}})
-    lines = bench_history(str(tmp_path))
-    joined = "\n".join(lines)
-    assert "| r9 |" in joined
-    assert "| r8 |" not in joined
-
-
-def test_prior_timings_per_query_lookback_survives_shedding(tmp_path):
-    """A query shed from recent publications keeps its guard reference
-    from the most recent rounds that DID publish it — persistent
-    shedding must not silently erase coverage (the min is still over
-    the last two rounds CONTAINING the query)."""
-    _write(tmp_path, "BENCH_r07.json",
-           {"parsed": {"queries": {"big": 1.0, "tiny": 0.10}}})
-    _write(tmp_path, "BENCH_r08.json",
-           {"parsed": {"queries": {"big": 1.2, "tiny": 0.12}}})
-    # two shed rounds in a row: tiny absent from both
-    _write(tmp_path, "BENCH_r09.json",
-           {"parsed": {"queries": {"big": 1.1}, "queries_dropped": 1}})
-    _write(tmp_path, "BENCH_r10.json",
-           {"parsed": {"queries": {"big": 0.9}, "queries_dropped": 1}})
-    ref = _prior_timings(str(tmp_path))
-    assert ref["big"] == 0.9  # min of the last two rounds containing it
-    assert ref["tiny"] == 0.10  # looked back past the shed rounds
-    # the lookback is BOUNDED at four rounds: an ancient artifact must
-    # age out, not resurrect as a guard reference
-    _write(tmp_path, "BENCH_r11.json",
-           {"parsed": {"queries": {"big": 1.0}, "queries_dropped": 1}})
-    ref = _prior_timings(str(tmp_path))
-    assert ref["tiny"] == 0.12  # r8 is still inside the 4-round window
-    _write(tmp_path, "BENCH_r12.json",
-           {"parsed": {"queries": {"big": 1.0}, "queries_dropped": 1}})
-    ref = _prior_timings(str(tmp_path))
-    # tiny fell off the 4-round window: it ages out like any other
-    # query (every benched query is published, so none is absent for
-    # long while still benched)
-    assert "tiny" not in ref
-    assert ref["big"] == 1.0  # min of its two MOST RECENT rounds (r11, r12)
-
-
-def test_prior_timings_above_floor_queries_still_age_out(tmp_path):
-    """A query absent from the 4-round window (retired from the
-    headline set, or a different machine era) ages out whatever its
-    timing — a stale reference resurrected forever is exactly what the
-    bound exists to prevent."""
-    _write(tmp_path, "BENCH_r07.json",
-           {"parsed": {"queries": {"heavy": 5.0, "tiny": 0.2}}})
-    for r in range(9, 13):
-        _write(tmp_path, f"BENCH_r{r:02d}.json",
-               {"parsed": {"queries": {"big": 1.0}, "queries_dropped": 1}})
-    ref = _prior_timings(str(tmp_path))
-    assert "heavy" not in ref  # above-floor: aged out with its round
-    assert "tiny" not in ref  # sub-floor: no longer carried either
-    assert ref["big"] == 1.0
-
-
-def test_prior_timings_carry_respects_most_recent_pre_window_state(tmp_path):
-    """r13 review repro: a query whose MOST RECENT pre-window record
-    was above the floor (it slowed legitimately, published that, then
-    retired) must age out — resurrecting an older sub-floor record
-    from an earlier round would falsely trip the guard on the query's
-    genuine steady state if it is ever re-added. Nothing before the
-    window is read at all."""
-    _write(tmp_path, "BENCH_r05.json",
-           {"parsed": {"queries": {"q": 0.2}}})   # ancient sub-floor
-    _write(tmp_path, "BENCH_r06.json",
-           {"parsed": {"queries": {"q": 0.6}}})   # newest pre-window: above
-    for r in range(7, 11):
-        _write(tmp_path, f"BENCH_r{r:02d}.json",
-               {"parsed": {"queries": {"big": 1.0}}})
-    ref = _prior_timings(str(tmp_path))
-    assert "q" not in ref  # the r5 0.2 must NOT resurrect past r6's 0.6
+def test_missing_corrupt_or_non_object_file_gives_no_reference(tmp_path):
+    path = tmp_path / "bench_last.json"
+    assert guard_reference(str(path), 4, 0.1) == {}
+    for text in ("{not json", "[1, 2, 3]", '{"queries": {"q": 1.0}}',
+                 '{"references": [1]}'):
+        path.write_text(text)
+        assert guard_reference(str(path), 4, 0.1) == {}, text
+    # the next run overwrites a broken record with a usable one
+    save_record(str(path), _record({"q": 1.0}))
+    assert guard_reference(str(path), 4, 0.1) == {"q": 1.0}
 
 
 def test_publish_line_fits_every_headline_name():

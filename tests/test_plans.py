@@ -214,6 +214,38 @@ def test_respread_plain_arm_drops_exactly_the_spread_exchanges(spark, queries):
     assert reparts() == spread
 
 
+def test_respread_plain_arm_reaches_every_module_binding(queries):
+    """The plain arm swaps every binding of the real respread, not only
+    `tables.respread_narrow`: `simsearch`, `catalog_llm` and
+    `catalog_misc` bind it at import, so a swap of the tables
+    attribute alone would leave their call sites spread in both arms."""
+    import sys
+
+    from tools.ab_respread import _RESPREAD, set_spread
+
+    def bindings() -> list[str]:
+        return [
+            f"{name}.{attr}"
+            for name, mod in list(sys.modules.items())
+            if mod is not None and name.split(".")[0] == "etl_staging_spark"
+            for attr, val in vars(mod).items()
+            if val is _RESPREAD
+        ]
+
+    real = bindings()
+    assert {"etl_staging_spark.tables.respread_narrow",
+            "etl_staging_spark.llmdata.simsearch._respread_narrow",
+            "etl_staging_spark.queries.catalog_llm.respread_narrow",
+            "etl_staging_spark.queries.catalog_misc.respread_narrow",
+            } <= set(real)
+    try:
+        set_spread(None, False)
+        assert bindings() == []
+    finally:
+        set_spread(None, True)
+    assert bindings() == real
+
+
 def test_child_of_in_list_pushes_down(spark, queries):
     """The expanded child_of subtree is a literal IN that reaches the
     parquet scans — the hierarchy dim is never joined for the filter."""

@@ -8,13 +8,16 @@ VERDICT RECORDED IN OPTIMIZATION_r16.md: spreading move_lines for
 every consumer measured a +19% net LOSS across 14 ledger entries (the
 consumers' partial aggregates collapse rows before any exchange, and
 per-scope collect jobs re-pay the shuffle), so that spread was
-REVERTED. The respread now stays only where this A/B shows a win: the
-single-pass heavy-aggregate consumer `a1_hash_agg` (−59% with the
-keyed spread) — the DEFAULT list.
+REVERTED. The single-pass heavy-aggregate consumer `a1_hash_agg`
+measured −59% with the keyed spread — the DEFAULT list. The other
+call sites are measured by naming their queries.
 
-Plain arm: `tables.respread_narrow` swapped for identity. `a1_hash_agg`
-imports that name at call time, so the swap reaches it (modules that
-bind it at import keep theirs). Protocol: bench.ab_main.
+Plain arm: every binding of `tables.respread_narrow` in a loaded
+`etl_staging_spark` module swapped for identity — `tables` itself,
+which `a1_hash_agg` reads at call time, and the modules that bind it
+at import (`simsearch._respread_narrow`, through which `decontam`
+calls it too; `catalog_llm`; `catalog_misc`) — so every call site
+takes the arm. Protocol: bench.ab_main.
 
 Usage: python tools/ab_respread.py [sf_dir] [rounds] [query ...]
 """
@@ -34,9 +37,20 @@ DEFAULT = ["a1_hash_agg"]
 _RESPREAD = tables.respread_narrow
 
 
+def _plain(df, *args, **kwargs):
+    return df
+
+
 def set_spread(spark, on: bool) -> None:
-    """Arm setter: the real respread (on) or identity (off)."""
-    tables.respread_narrow = _RESPREAD if on else (lambda df, *a, **k: df)
+    """Arm setter: the real respread (on) or identity (off), in every
+    loaded `etl_staging_spark` module attribute bound to either."""
+    arm = _RESPREAD if on else _plain
+    for name, mod in list(sys.modules.items()):
+        if mod is None or name.split(".")[0] != "etl_staging_spark":
+            continue
+        for attr, val in list(vars(mod).items()):
+            if val is _RESPREAD or val is _plain:
+                setattr(mod, attr, arm)
 
 
 if __name__ == "__main__":

@@ -47,73 +47,6 @@ def history() -> tuple[dict[str, list[int]], dict[str, list[int]], int]:
     return green, red, latest
 
 
-def bench_history(root: str = HERE) -> list[str]:
-    """Cross-round bench table with the contention signal made visible:
-    per published BENCH_r{N}.json — headline total, query count, core
-    subset, rerun count, and a status annotating contended (>3 reruns)
-    or unparseable rounds, so a bad publication can never silently
-    become the next round's comparison base (the r10 lesson: its
-    59-query JSON line outgrew the driver's 2000-char stdout tail,
-    published "parsed": null, and the numbers that ARE recoverable from
-    the tail carry 14 rerun flags — a systemically contended run)."""
-    if HERE not in sys.path:
-        sys.path.insert(0, HERE)
-    # THE shared BENCH_r discovery/parse (bench.py owns both halves so
-    # a naming or format change cannot desynchronize the guard from
-    # this table)
-    from bench import bench_files, bench_rounds
-
-    parsed_rounds = bench_rounds(root)
-    rows = []
-    for rnd, path in sorted(bench_files(root).items()):
-        try:
-            data = json.load(open(path))
-        except (OSError, json.JSONDecodeError):
-            continue
-        if not isinstance(data, dict):
-            # valid-but-non-object JSON (e.g. a bare list): skip, matching
-            # bench_rounds' tolerance, instead of AttributeError below
-            continue
-        p = parsed_rounds.get(rnd)
-        if not isinstance(p, dict):
-            # unparseable publication: recover what the stdout tail
-            # holds — prefer the explicit n_reruns count (bench.py's
-            # compact format caps the printed list at 3 names, so
-            # counting list elements would under-report), fall back to
-            # counting the list (the pre-r11 spaced format)
-            tail = data.get("tail", "") or ""
-            nr = re.search(r'"n_reruns":\s*(\d+)', tail)
-            rr = re.search(r'"reruns":\s*\[([^\]]*)\]', tail)
-            n_rr = int(nr.group(1)) if nr else len(
-                [s for s in (rr.group(1).split(",") if rr else []) if s.strip()]
-            )
-            rows.append((rnd, None, None, None, n_rr,
-                         "UNPARSEABLE (stdout tail overflow)"
-                         + (" + contended" if n_rr > 3 else "")))
-            continue
-        reruns = p.get("reruns", [])
-        n_rr = p.get("n_reruns", len(reruns) if isinstance(reruns, list) else 0)
-        status = "contended — do not compare against" if n_rr > 3 else "clean"
-        rows.append((rnd, p.get("value"), p.get("n_queries"),
-                     p.get("core_r1_subset_time"), n_rr, status))
-    if not rows:
-        return []
-    lines = [
-        "",
-        "Bench history (from `BENCH_r*.json`; reruns = outlier-guard",
-        "trips, the contention signal — the guard itself keys off the",
-        "per-query MINIMUM of the last two published rounds):",
-        "",
-        "| Round | Headline total (s) | n | Core r1 subset (s) | Reruns | Status |",
-        "|---|---|---|---|---|---|",
-    ]
-    for rnd, total, n, core, n_rr, status in rows:
-        fmt = lambda v: "—" if v is None else v
-        lines.append(f"| r{rnd} | {fmt(total)} | {fmt(n)} | {fmt(core)} "
-                     f"| {n_rr} | {status} |")
-    return lines + [""]
-
-
 def render() -> str:
     if HERE not in sys.path:
         sys.path.insert(0, HERE)
@@ -160,7 +93,6 @@ def render() -> str:
         + f". Registry size {len(names)}; latest driver round r{latest}.",
         "",
     ]
-    lines += bench_history()
     return "\n".join(lines)
 
 

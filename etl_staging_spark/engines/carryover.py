@@ -32,6 +32,8 @@ from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..tables import local_frame
+
 CARRYOVER_SCHEMA = (
     "date string, company_id int, origin_label string, target_label string,"
     " value double, kind string"
@@ -117,4 +119,4 @@ def generate_carryover_values(
                     "adjustment",
                 )
             )
-    return spark.createDataFrame(rows, CARRYOVER_SCHEMA)
+    return local_frame(spark, rows, CARRYOVER_SCHEMA)

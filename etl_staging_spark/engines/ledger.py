@@ -46,14 +46,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load
+from ..tables import load, local_frame
 
 RATES = [(0, "1.00"), (1, "1.10"), (2, "1.25")]
 
 
 def rate_table(spark: SparkSession) -> DataFrame:
     rows = [(cid, r) for cid, r in RATES]
-    return spark.createDataFrame(rows, "company_id int, rate_str string").select(
+    return local_frame(spark, rows, "company_id int, rate_str string").select(
         "company_id", F.col("rate_str").cast("decimal(6,2)").alias("rate")
     )
 

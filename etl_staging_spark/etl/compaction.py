@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..tables import local_frame
 from .sinks import write_partitioned_snapshot
 
 
@@ -50,8 +51,8 @@ def _validate_scope(df: DataFrame, scope: str, partition_cols: list[str]) -> Non
     (Catalyst marks ``rand``/``uuid``/``input_file_name``/monotonic id
     non-deterministic; the check walks the whole expression tree)."""
     spark = df.sparkSession
-    probe = spark.createDataFrame(
-        [], df.select(*[F.col(c) for c in partition_cols]).schema
+    probe = local_frame(
+        spark, [], df.select(*[F.col(c) for c in partition_cols]).schema
     )
     try:
         filtered = probe.where(scope)

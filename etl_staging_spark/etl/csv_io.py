@@ -59,8 +59,11 @@ def validate_against_master(
 ) -> tuple[DataFrame, DataFrame]:
     """(valid, rejected): staged rows whose key exists in the master vs
     the rest. Broadcast the master keys when the master is a dimension;
-    for fact-sized masters the semi/anti joins shuffle on the key."""
-    keys = master.select(F.col(master_key).alias(staged_key)).distinct()
+    for fact-sized masters the semi/anti joins shuffle on the key. The
+    master keys go in raw: a semi or anti join only tests whether a key
+    exists, so duplicates change nothing, and a NULL key never matches
+    (a ``distinct`` would cost a shuffle stage on every action)."""
+    keys = master.select(F.col(master_key).alias(staged_key))
     valid = staged.join(keys, staged_key, "left_semi")
     rejected = staged.join(keys, staged_key, "left_anti").withColumn(
         "reject_reason", F.lit("unknown_key")

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..tables import local_frame
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """(u,v) -> for every node u, hang each LARGER neighbor v under
@@ -149,9 +151,7 @@ def connected_components(
             [(r["u"], r["v"]) for r in edges.collect()]
         )
         utype = dict(edges.dtypes)["u"]
-        out = spark.createDataFrame(
-            labels or [(None, None)], "doc_id long, cluster_id long"
-        ).where(F.col("doc_id").isNotNull())
+        out = local_frame(spark, labels, "doc_id long, cluster_id long")
         return out.select(
             F.col("doc_id").cast(utype), F.col("cluster_id").cast(utype)
         )

@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 from ..numeric import double_sql, pround
-from ..tables import pin, pins_of
+from ..tables import local_frame, pin, pins_of
 
 from .hashing import hyperplanes
 
@@ -1797,10 +1797,11 @@ def _state_src_stats(counts: dict, matrix_rows) -> dict:
 def _mixture_card(spark, src_stats: dict, kept: DataFrame,
                   domain_col: str) -> DataFrame:
     """Shared card assembly of the cluster-share mixture family: the
-    bounded per-source stats become a LITERAL spine (explicit schema —
-    the createDataFrame-inference trap from the r14 card fix) left-
-    joined to the broadcast kept counts."""
-    spine = spark.createDataFrame(
+    bounded per-source stats become a LITERAL spine (`local_frame`,
+    explicit schema: inference fails on an all-NULL column) left-joined
+    to the broadcast kept counts."""
+    spine = local_frame(
+        spark,
         sorted(
             ((s, n, avg) for s, (n, avg) in src_stats.items()),
             key=lambda t: (t[0] is None, t[0] or ""),

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from ..numeric import pround, py_pround
-from ..tables import pin, pins_of
+from ..tables import local_frame, pin, pins_of
 from .textstats import TOKEN_RE, lang_id
 
 
@@ -398,7 +398,7 @@ def quality_calibration_card(
     schema = ("keep_rate double, threshold double, n_scored bigint, "
               "n_kept bigint, actual_rate double")
     if not n_docs:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     rows = []
     for rate in rates:
         t, kept = _cdf_cut(hist, rate * n_docs)
@@ -406,7 +406,7 @@ def quality_calibration_card(
             (float(rate), _bucket_edge(t, decimals), n_docs, kept,
              py_pround(kept / n_docs, 6))
         )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _validate_rates(rates: tuple[float, ...]) -> None:
@@ -496,7 +496,7 @@ def calibration_by_domain_from_scores(
         )
     schema = ("domain string, threshold double, n_scored bigint, "
               "n_kept bigint, actual_rate double")
-    return scored.sparkSession.createDataFrame(out, schema)
+    return local_frame(scored.sparkSession, out, schema)
 
 
 def ngram_freq_spectrum(

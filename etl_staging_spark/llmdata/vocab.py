@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..numeric import o_pround, pround
-from ..tables import pin
+from ..tables import local_frame, pin
 from .shingles import TOKS, with_tokens
 
 TOP_K = 100
@@ -231,8 +231,9 @@ def bpe_train(df: DataFrame, n_merges: int = 10) -> DataFrame:
         cur.unpersist()
         cur = nxt
     cur.unpersist()
-    return spark.createDataFrame(
-        merges or [],
+    return local_frame(
+        spark,
+        merges,
         "merge_rank int, left string, right string, merged string, pair_count long",
     )
 

@@ -25,6 +25,8 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..tables import local_frame
+
 
 class Hierarchy:
     """An id → parent_id forest with subtree expansion.
@@ -93,4 +95,4 @@ class Hierarchy:
         list is unsuitable (subtree larger than an IN predicate should
         carry)."""
         rows = [(node, self.parent_path(node)) for node in self._parents]
-        return spark.createDataFrame(rows, "id long, parent_path string")
+        return local_frame(spark, rows, "id long, parent_path string")

@@ -11,7 +11,7 @@ from ..engines import aggregation, carryover, custom, formula
 from ..engines import cross_report as xr
 from ..engines.ledger import O_LEDGER, move_lines
 from ..engines.options import make_options, o_date_scope_sql
-from ..tables import load
+from ..tables import load, local_frame
 from .registry import query
 
 OPTS = make_options("1997-01-01", "1997-12-31")
@@ -371,7 +371,7 @@ def e6_cross_report(spark, sf_dir):
     ]
     vals = xr.evaluate_report(led, OPTS, report, _XR_REGISTRY)
     rows = [(k.split(".")[0], v) for k, v in sorted(vals.items())]
-    return spark.createDataFrame(rows, "line string, result double")
+    return local_frame(spark, rows, "line string, result double")
 
 
 @query(
@@ -432,4 +432,4 @@ def e6_aggregation_engine(spark, sf_dir):
     rows = [("REV", base.rev), ("COST", base.cost)] + [
         (k.split(".")[0], v) for k, v in results.items()
     ]
-    return spark.createDataFrame(rows, "line string, result double")
+    return local_frame(spark, rows, "line string, result double")

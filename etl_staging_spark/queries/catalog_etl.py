@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from ..etl.csv_io import validate_against_master
 from ..etl.registers import sales_register
 from ..etl.upsert import dedup_purge, scd0_upsert
-from ..tables import load, pin, register_views
+from ..tables import load, local_frame, pin, register_views
 from .registry import dsum, o_dsum, query
 
 
@@ -733,7 +733,8 @@ def jsonl_corrupt_split(spark, sf_dir):
         F.pmod("doc_id", F.lit(97)) == 0,
         F.concat(F.lit("{corrupt "), payload),
     ).otherwise(payload)
-    planted = spark.createDataFrame(
+    planted = local_frame(
+        spark,
         [
             ('{"doc_id": null, "text": "planted-null", "source": "planted"}',),
             ('{"doc_id": -1, "text": "planted-dup-a", "source": "planted"}',),

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from ..engines.ledger import O_LEDGER, move_lines
 from ..engines.options import make_options, o_date_scope_sql
 from ..reports.hierarchy import hierarchy_rollup
-from ..tables import load, pin
+from ..tables import load, local_frame, pin
 from .registry import query
 
 
@@ -66,7 +66,8 @@ def o3_hierarchy_sort(spark, sf_dir):
     collected = sorted(
         parents.collect(), key=lambda r: (-r.total, r.n_name)
     )
-    rank_df = spark.createDataFrame(
+    rank_df = local_frame(
+        spark,
         [(r.n_name, i + 1, float(r.total), r.n_children) for i, r in enumerate(collected)],
         "n_name string, parent_rank int, total double, n_children long",
     )

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from ..operators.asof import asof_join, most_recent_value
 from ..operators.buckets import bucket_expr, bucket_pivot
 from ..operators.netting import net_ledger
-from ..tables import load
+from ..tables import load, local_frame
 from .registry import dsum, fmt_date, o_dsum, query
 
 AS_OF = "2001-09-01"
@@ -218,7 +218,8 @@ def j3_lateral_agg_join(spark, sf_dir):
 )
 def j4_interval_bucket_join(spark, sf_dir):
     o = load(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "O")
-    periods = spark.createDataFrame(
+    periods = local_frame(
+        spark,
         [("0-30", 0, 30), ("31-60", 31, 60), ("61-90", 61, 90),
          ("91-120", 91, 120), ("older", 121, 1000000)],
         "label string, lo int, hi int",
@@ -643,8 +644,8 @@ def o1_multikey_sort(spark, sf_dir):
     for bkt, cnt in counts:
         offsets[bkt] = acc
         acc += cnt
-    offset_df = spark.createDataFrame(
-        [(bkt, off) for bkt, off in offsets.items()], "__bkt int, __offset long"
+    offset_df = local_frame(
+        spark, [(bkt, off) for bkt, off in offsets.items()], "__bkt int, __offset long"
     )
     local_w = W.partitionBy("__bkt").orderBy(
         F.col("sort_amount").asc_nulls_first(), "o_orderkey"

@@ -4858,7 +4858,7 @@ def dataset_card_totals_q(spark, sf_dir):
     """The dataset card's corpus-totals section as a certified frame
     (r14 verdict item 7): the card's Corpus / HHI / dominant-source /
     per-source-volume numbers produced by the card's EXACT assembly
-    path — additive per-source collect, explicit-schema createDataFrame
+    path — additive per-source collect, explicit-schema `local_frame`
     round-trip, finish half — so the driver hash-certifies the card's
     re-derivation, not just its certified inputs
     (`reports/dataset_card.py:card_totals_frame`). Bounded end to end:

@@ -24,7 +24,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from ..llmdata import stats
-from ..tables import load
+from ..tables import load, local_frame
 
 
 def _num(v) -> dict:
@@ -60,8 +60,8 @@ def _collect_totals(spark: SparkSession, docs: DataFrame):
     # explicit schema: inference over collected Rows fails ("Some of
     # types cannot be determined") when every row's source is None — a
     # fully-NULL-source corpus is a bucket the card deliberately keeps
-    per_df = spark.createDataFrame(
-        per, "source string, n_docs_s bigint, n_tok_s bigint"
+    per_df = local_frame(
+        spark, per, "source string, n_docs_s bigint, n_tok_s bigint"
     )
     return per, stats.finish_concentration_card(per_df).collect()[0]
 
@@ -78,7 +78,7 @@ def card_totals_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry-certified twin of the numbers the Corpus / concentration /
     dominant-source / Sources lines print. Runs the card's EXACT
     assembly path (`_collect_totals`: additive collect ->
-    explicit-schema createDataFrame round-trip -> finish half), so the
+    explicit-schema `local_frame` round-trip -> finish half), so the
     driver's hash gate certifies the card's re-derivation, not just
     its certified inputs. One 'total' row (pos 0) carries the corpus
     totals + HHI + dominant source; 'source' rows carry the per-source
@@ -86,7 +86,7 @@ def card_totals_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     per, conc = _collect_totals(spark, docs)
     if per is None:
-        return spark.createDataFrame([], TOTALS_SCHEMA)
+        return local_frame(spark, [], TOTALS_SCHEMA)
     rows = [(
         "total", 0, None, conc.n_docs, conc.n_tokens,
         conc.doc_hhi, conc.token_hhi, conc.top_source,
@@ -100,7 +100,7 @@ def card_totals_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source", i, _src_label(r.source), r.n_docs_s, r.n_tok_s,
             None, None, None, None, None,
         ))
-    return spark.createDataFrame(rows, TOTALS_SCHEMA)
+    return local_frame(spark, rows, TOTALS_SCHEMA)
 
 
 def dataset_card_lines(

@@ -24,6 +24,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 
 from ..engines import cross_report as xr
+from ..tables import local_frame
 
 # The P&L / balance-sheet definitions referenced across reports.
 REGISTRY = {
@@ -94,4 +95,4 @@ def executive_summary(spark: SparkSession, led: DataFrame, options: dict) -> Dat
     )
     own = {ln.key: ln.code for ln in LINES}
     rows = sorted((own[k], v) for k, v in vals.items() if k in own)
-    return spark.createDataFrame(rows, "line string, result double")
+    return local_frame(spark, rows, "line string, result double")

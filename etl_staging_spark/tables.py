@@ -69,6 +69,28 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema`` order) as a frame over
+    a ``LocalRelation`` — the one way this package turns Python values
+    into a DataFrame. ``spark.createDataFrame(<list>)`` plans a Python
+    RDD, so every action on it starts a Python-worker job (about 120 ms
+    for 20 rows); an Arrow table becomes a ``LocalRelation`` that the
+    driver answers without a job and that Catalyst can fold. ``schema``
+    is a DDL string or a StructType; the rows, types and nullability
+    are those ``createDataFrame(rows, schema)`` gives."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def respread_narrow(
     df: DataFrame, key_cols: tuple[str, ...] = (), exact_keys: bool = False
 ) -> DataFrame:

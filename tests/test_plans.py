@@ -151,15 +151,16 @@ def test_decontaminate_fuzzy_plan(spark, queries):
 
 
 def test_cluster_cc_no_cartesian_and_bounded_plan(spark, queries):
-    """dedup_cluster_cc executes its star rounds while building (the
-    iterative fixpoint), returning a plan rooted at the checkpointed
-    edge list: no cartesian, no Python, and the plan must stay shallow
-    (lineage truncation worked) rather than embedding the shingle
-    pipeline of every round."""
+    """dedup_cluster_cc resolves its components while building, returning
+    a plan rooted at materialized rows: no cartesian, no Python, and the
+    plan must stay shallow rather than embedding the shingle pipeline.
+    At this scale the edge list is under ``LOCAL_CC_MAX_EDGES``, so the
+    driver's union-find labels root the plan as a local relation (past
+    it, the checkpointed edge list of the star rounds does)."""
     p = plan_of(spark, queries, "dedup_cluster_cc")
     assert "CartesianProduct" not in p
     assert "BatchEvalPython" not in p
-    assert "Scan ExistingRDD" in p  # rooted at checkpoint, not re-derived
+    assert "LocalTableScan" in p  # rooted at the driver's labels, not re-derived
     assert "parquet" not in p.lower()
 
 

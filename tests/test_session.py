@@ -1,5 +1,6 @@
-"""The session's driver-heap default is sized from the machine, and its
-generated-code cache holds a working set."""
+"""The session's driver-heap default is sized from the machine, its
+generated-code cache holds a working set, and building a Column costs
+no origin-capture round trips."""
 
 from __future__ import annotations
 
@@ -40,3 +41,31 @@ def test_codegen_cache_keeps_a_query_over_150_other_classes(spark):
     before = compiles()
     assert query() == want
     assert compiles() == before
+
+
+def test_column_build_skips_origin_capture_round_trips(spark):
+    """With origin capture off, ``F.col("a") + 1`` is four py4j calls
+    (two ``functions`` lookups, ``col``, ``plus``); with it on, each
+    call also walks the stack and sets and clears the call site on the
+    JVM (24 calls). Memory commands are the garbage collector releasing
+    JVM objects, not calls the build makes, so they are not counted."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    real = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return real(command, *args, **kwargs)
+
+    built = [F.col("a") + 1]  # warm: first call reads the conf
+    client.send_command = counting
+    try:
+        built += [F.col("a") + 1 for _ in range(50)]
+    finally:
+        del client.send_command
+    assert len(sent) <= 5 * 50
